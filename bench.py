@@ -21,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kinesis_test_spark import registry  # noqa: E402
-from kinesis_test_spark.session import get_spark  # noqa: E402
+from kinesis_test_spark.session import cpus, get_spark  # noqa: E402
 
 # Headline set: one per operator family, weighted toward the shuffling /
 # scale-sensitive paths.
@@ -195,27 +195,39 @@ def _probe_floor(host: dict, *keys: str) -> float | None:
     return min(probes) if probes else None
 
 
+NO_BASELINE = "no same-core baseline"
+
+
 def previous_bench(
-    here: str, sf: float | None = None
+    here: str, sf: float | None = None, cpus: int | None = None
 ) -> tuple[str | None, dict[str, float], dict[str, float | None]]:
     """Latest BENCH_r*.json per-query timings plus that run's burn-probe
     floors ({"single": …, "par8": …} — min of before/after, the run's
     least-contended moment; a missing kind is None); empty if none
     parseable.
 
-    When ``sf`` is given, only a baseline recorded at the same scale factor
-    qualifies — timings across scales aren't comparable."""
+    Control runs (``BENCH_r*_c*.json``, another core count on purpose)
+    never qualify. When ``sf`` is given, only a baseline recorded at the
+    same scale factor qualifies, and when ``cpus`` is given, only one whose
+    top-level ``cpus`` matches — timings across scales or core counts
+    aren't comparable."""
     import glob
+    import re
 
     for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), reverse=True):
+        if not re.fullmatch(r"BENCH_r\d+\.json", os.path.basename(path)):
+            continue
         try:
             with open(path) as f:
                 data = json.load(f)
             queries = data["parsed"]["queries"]
             prev_sf = data["parsed"].get("sf")
+            prev_cpus = data.get("cpus")
         except (OSError, ValueError, KeyError, TypeError):
             continue
         if sf is not None and prev_sf != sf:
+            continue
+        if cpus is not None and prev_cpus != cpus:
             continue
         if isinstance(queries, dict) and queries:
             host = data["parsed"].get("host") or {}
@@ -448,7 +460,7 @@ def main() -> None:
     baseline, prev, prev_burn = (
         (None, {}, {"single": None, "par8": None})
         if restaged
-        else previous_bench(os.path.dirname(os.path.abspath(__file__)), sf)
+        else previous_bench(os.path.dirname(os.path.abspath(__file__)), sf, cpus())
     )
     probe_after = burn_probe()
     par_after = burn_probe_parallel()
@@ -489,7 +501,7 @@ def main() -> None:
                 "staging": "32-file" if restaged else "single-file",
                 "streaming": stream_stats,
                 "regressions": {
-                    "baseline": baseline,
+                    "baseline": baseline or (None if restaged else NO_BASELINE),
                     "threshold_ratio": REGRESSION_RATIO,
                     "host_factor": host_factor,
                     "threshold_ratio_effective": effective_ratio,

@@ -25,6 +25,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructField, StructType
 
 from kinesis_test_spark.sources.tables import normalize_ts
@@ -299,58 +300,40 @@ def run_to_memory(
         _start()
 
 
-# partitioned-sink writer sizing (scale-adaptive, data-derived): ~64 MB of
-# JSON per writer task at this schema (~250 bytes/row), and at most ~48
-# partition dirs created serially by any one task.
-_SINK_ROWS_PER_WRITER = 250_000
-_SINK_DIRS_PER_WRITER = 48
-
-
-def partitioned_json_sink(df: DataFrame, out_dir: Path, checkpoint: Path) -> None:
+def partitioned_json_sink(df: DataFrame, out_dir: Path, checkpoint: Path) -> StreamingQuery:
     """The reference's S3 sink (consumer.py:221-249): event-time partitioned
-    JSON, y/m/d/h — via foreachBatch so the layout matches exactly; Spark
-    task-attempt files replace the uuid object names."""
-    with_parts = df.select(
-        "*",
-        F.year("ts").alias("y"),
-        F.month("ts").alias("m"),
-        F.dayofmonth("ts").alias("d"),
-        F.hour("ts").alias("h"),
-    ).withColumn("ts", F.col("ts").cast("string"))
+    JSON, y/m/d/h, as Spark's own streaming file sink. Spark task-attempt
+    files replace the uuid object names. Returns the drained query.
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # cluster rows by partition key before the write: without this every
-        # task writes a file into every partition dir (tasks × partitions
-        # small files — the classic dynamic-partition-insert failure mode).
-        # The writer-task count is EXPLICIT and derived from the batch
-        # (guide §2.5/§6): a keyless keyed repartition lets AQE coalesce a
-        # small batch to ~1 task, which then creates every partition
-        # dir/file SERIALLY (measured 5.2 s vs 1.9 s for this fixture's
-        # 720 hourly dirs); the session core count is no better — it is
-        # wrong in both directions at scale. Rows bound bytes-per-task
-        # (~64 MB of JSON at this schema), dirs bound the serial
-        # file-creations any one task performs.
-        stats = (
-            batch_df.select("y", "m", "d", "h")
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.count_distinct(F.struct("y", "m", "d", "h")).alias("dirs"),
-            )
-            .first()
-        )
-        n = max(
-            1,
-            -(-(stats["rows"] or 0) // _SINK_ROWS_PER_WRITER),
-            -(-(stats["dirs"] or 0) // _SINK_DIRS_PER_WRITER),
-        )
-        batch_df.repartition(n, "y", "m", "d", "h").write.partitionBy(
-            "y", "m", "d", "h"
-        ).mode("append").json(str(out_dir))
+    One job per micro-batch: the upstream plan (a stateful dedup included)
+    runs once, straight into the writer. The keyed repartition clusters
+    each hour's rows into one task — without it every upstream task writes
+    a file into every hour dir. Its writer count is the stream's
+    shuffle-partition count, locked into the checkpoint at the first
+    batch: ``sized_state``'s input-volume count around a stateful stream,
+    the session default otherwise.
 
+    Exactly-once: the sink logs each committed batch's files under
+    ``out_dir/_spark_metadata`` and skips a batch it has already
+    committed when a restart replays it. Read the output through Spark,
+    which lists files from that log; a raw listing of part files can
+    include orphans from a crashed attempt."""
     q = (
-        with_parts.writeStream.foreachBatch(write_batch)
+        df.select(
+            "*",
+            F.year("ts").alias("y"),
+            F.month("ts").alias("m"),
+            F.dayofmonth("ts").alias("d"),
+            F.hour("ts").alias("h"),
+        )
+        .withColumn("ts", F.col("ts").cast("string"))
+        .repartition("y", "m", "d", "h")
+        .writeStream.format("json")
+        .partitionBy("y", "m", "d", "h")
+        .option("path", str(out_dir))
         .option("checkpointLocation", str(checkpoint))
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return q

@@ -232,9 +232,9 @@ FROM events GROUP BY 1, 2, 3, 4
 )
 def s_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's S3 sink end-to-end (consumer.py:221-249): stream →
-    foreachBatch → JSON files under y=/m=/d=/h= partition dirs, then read
-    the files back and count per partition — verifying layout and content
-    arrived."""
+    Spark's file sink → JSON files under y=/m=/d=/h= partition dirs, then
+    read the files back and count per partition — verifying layout and
+    content arrived."""
     from pyspark.sql import types as T
 
     d = scratch_dir("s_sink")
@@ -840,9 +840,11 @@ def s_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["event_id"])  # record-level (vs consumer.py:292-303)
     )
     # the dedup is stateful — size its stores from the input volume; the
-    # sink's keyed repartition inside foreachBatch inherits the same
-    # count, which tracks the data in both directions (1 at fixture
-    # scale, thousands at 100 TB)
+    # sink's keyed repartition takes the same shuffle-partition count as
+    # its writer count (both lock into the checkpoint), which tracks the
+    # data in both directions (1 at fixture scale, thousands at 100 TB).
+    # The sink's _spark_metadata log makes the output exactly-once, and
+    # the read-back below lists files from that log.
     with sized_state(spark, _evt_state_parts(spark, sf_dir)):
         partitioned_json_sink(stream, out, cp)
     back = spark.read.schema(

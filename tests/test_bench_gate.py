@@ -81,6 +81,42 @@ def test_previous_bench_requires_matching_sf(tmp_path):
     )
 
 
+def _bench_file(path, cpus, q_a):
+    path.write_text(
+        json.dumps({"cpus": cpus, "parsed": {"queries": {"q_a": q_a}, "sf": 0.1}})
+    )
+
+
+def test_previous_bench_requires_matching_cpus(tmp_path):
+    # a 32-core run compares against the latest 32-core run, not a later
+    # run on another core count
+    _bench_file(tmp_path / "BENCH_r01.json", 32, 1.0)
+    _bench_file(tmp_path / "BENCH_r02.json", 8, 2.0)
+    name, prev, _ = bench.previous_bench(str(tmp_path), sf=0.1, cpus=32)
+    assert (name, prev) == ("BENCH_r01.json", {"q_a": 1.0})
+    name, prev, _ = bench.previous_bench(str(tmp_path), sf=0.1, cpus=8)
+    assert (name, prev) == ("BENCH_r02.json", {"q_a": 2.0})
+
+
+def test_previous_bench_never_takes_control_runs(tmp_path):
+    # BENCH_r15_c8.json sorts after BENCH_r15.json; a control run is
+    # never a baseline, even at the current core count
+    _bench_file(tmp_path / "BENCH_r15.json", 32, 1.0)
+    _bench_file(tmp_path / "BENCH_r15_c8.json", 8, 2.0)
+    assert bench.previous_bench(str(tmp_path))[0] == "BENCH_r15.json"
+    assert bench.previous_bench(str(tmp_path), cpus=8)[0] is None
+
+
+def test_previous_bench_no_same_core_baseline(tmp_path):
+    # on a core count no earlier run used there is nothing to compare:
+    # no baseline, no timings, so the gate flags nothing and says why
+    _bench_file(tmp_path / "BENCH_r01.json", 32, 1.0)
+    name, prev, burn = bench.previous_bench(str(tmp_path), sf=0.1, cpus=4)
+    assert (name, prev, burn) == (None, {}, {"single": None, "par8": None})
+    assert bench.flag_regressions({"q_a": 99.0}, prev) == {}
+    assert bench.NO_BASELINE == "no same-core baseline"
+
+
 def test_previous_bench_reads_burn_probe_floor(tmp_path):
     # the burn-probe floor (min of before/after) is the baseline run's
     # least-contended moment — the denominator of the host factor

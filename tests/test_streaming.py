@@ -72,6 +72,9 @@ def test_sink_layout_matches_reference(spark, sf_dir):
     assert all(pat.match(x) for x in leaf_dirs), sorted(leaf_dirs)[:5]
     # non-padded: single-digit components must not carry leading zeros
     assert not any(re.search(r"=(0\d)", x) for x in leaf_dirs), sorted(leaf_dirs)[:5]
+    # beside the hour tree, the root holds only the file sink's commit log
+    rest = {p.name for p in Path(out).iterdir() if not p.name.startswith("y=")}
+    assert rest == {"_spark_metadata"}, sorted(rest)
 
 
 def test_replay_with_idempotent_sink_no_duplicates(spark, sf_dir):
@@ -128,6 +131,89 @@ def test_replay_with_idempotent_sink_no_duplicates(spark, sf_dir):
     run(cp2)
     again = spark.read.parquet(str(sink)).count()
     assert again == n_src, f"replay duplicated rows: {again} != {n_src}"
+
+
+def test_partitioned_sink_replay_writes_once(spark, sf_dir):
+    """Exactly-once over the partitioned JSON sink: drain two arrivals,
+    then restart from a checkpoint that lost its last commit (a crash
+    between the sink write and the commit). The restart replays that
+    batch, and the sink's ``_spark_metadata`` log already holds it, so
+    the Spark read-back still counts each staged row once."""
+    import shutil
+
+    from kinesis_test_spark.streaming.pipeline import (
+        mod_slice,
+        partitioned_json_sink,
+        read_staged_stream,
+        scratch_dir,
+        stage_events,
+    )
+
+    d = scratch_dir("sink_replay")
+    stage, out, cp = d / "src", d / "out", d / "cp"
+    for i in range(2):
+        stage_events(spark, sf_dir, stage, f"a{i}", where=mod_slice(2, i, "event_id"))
+
+    def run(checkpoint) -> None:
+        stream = read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger=1)
+        partitioned_json_sink(stream, out, checkpoint)
+
+    run(cp)
+    cp2 = d / "cp_after_crash"
+    shutil.copytree(cp, cp2, ignore=shutil.ignore_patterns("*.crc"))
+    commits = [p for p in (cp2 / "commits").iterdir() if not p.name.startswith(".")]
+    assert len(commits) == 2
+    max(commits, key=lambda p: int(p.name)).unlink()
+    run(cp2)
+    staged = spark.read.parquet(str(stage))
+    back = spark.read.json(str(out))
+    assert back.count() == staged.count(), "the replayed batch was written twice"
+    assert back.select("event_id").distinct().count() == (
+        staged.select("event_id").distinct().count()
+    )
+
+
+def test_reference_chain_runs_dedup_once_per_batch(spark, sf_dir):
+    """The reference chain (null-id quarantine → dropDuplicates under
+    sized_state → partitioned sink) must execute its stateful dedup once
+    per micro-batch: one state-store instance per shuffle partition, and
+    each distinct id held once. A sink that runs a second job over the
+    batch reads 2x on both, and reloads the store for that second job."""
+    from pyspark.sql import functions as F
+
+    from kinesis_test_spark.streaming.pipeline import (
+        mod_slice,
+        partitioned_json_sink,
+        read_staged_stream,
+        scratch_dir,
+        sized_state,
+        stage_events,
+        state_partitions_for,
+    )
+
+    d = scratch_dir("sink_single_exec")
+    stage = d / "src"
+    stage_events(spark, sf_dir, stage, "a0", where=mod_slice(2, 0))
+    stage_events(spark, sf_dir, stage, "a1", where=mod_slice(2, 1))
+    stage_events(spark, sf_dir, stage, "a2", where=mod_slice(2, 0))  # a re-delivery
+    stream = (
+        read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger=1)
+        .filter(F.col("event_id").isNotNull())
+        .dropDuplicates(["event_id"])
+    )
+    with sized_state(spark, state_partitions_for(spark, stage)):
+        q = partitioned_json_sink(stream, d / "out", d / "cp")
+    assert q.lastProgress["batchId"] == 2
+    op = q.lastProgress["stateOperators"][0]
+    assert op["numStateStoreInstances"] == op["numShufflePartitions"], op
+    ids = (
+        spark.read.parquet(str(stage))
+        .filter("event_id IS NOT NULL")
+        .select("event_id")
+        .distinct()
+        .count()
+    )
+    assert op["numRowsTotal"] == ids, op
 
 
 import pytest
