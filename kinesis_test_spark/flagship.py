@@ -11,14 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite
+from kinesis_test_spark.functions.exact import cents, finite, sql_dsum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
 
 @query(
     "q_flagship",
-    oracle="""
+    oracle=f"""
 WITH deduped AS (
   SELECT * FROM (
     SELECT user_id, event_type, ts, value,
@@ -41,7 +41,7 @@ SELECT 'y=' || CAST(year(ts) AS VARCHAR) || '/m=' || CAST(month(ts) AS VARCHAR)
        event_type,
        COUNT(*) AS n_events,
        COUNT(DISTINCT user_id) AS n_users,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("value", "sum_value", 18, 6)}
 FROM deduped
 GROUP BY hour_key, event_type
 ORDER BY n_events DESC, (hour_key IS NOT NULL) ASC, COALESCE(hour_key, '') ASC,

@@ -7,9 +7,15 @@ scheduling changes. Routing through decimal makes the aggregate exact and
 order-independent, which is also what you want at 100 TB: results must not
 depend on partition count.
 
-Pattern (mirrored verbatim in the DuckDB oracle SQL; r14 floor-LONG form):
+Pattern (r14 floor-LONG form):
     Spark :  F.sum(cents(x, s).cast("decimal(p,0)")).cast("double") / 10^s
-    oracle:  CAST(SUM(CAST({sql_cents(x, s)} AS DECIMAL(p,0))) AS DOUBLE) / 10^s
+    SQL   :  CAST(SUM(CAST({sql_cents(x, s)} AS DECIMAL(p,0))) AS DOUBLE) / 10^s
+
+This module is the only place that spells the SQL form. Oracle strings and
+Spark-side SQL texts (``spark.sql``, ``F.expr``) interpolate the ``sql_*``
+helpers below and never paste their expansion; ``sql_exact_sum`` covers the
+un-aliased, windowed and conditional sums, ``sql_dsum``/``sql_davg`` the
+aliased ones. ``tests/test_oracle_helpers.py`` fails on any pasted copy.
 
 WHY quantization is sign·FLOOR(|x·10^s| + 0.5) through BIGINT rather than
 either earlier form:
@@ -123,13 +129,19 @@ def cents(c: Column, scale: int) -> Column:
     return F.when(v >= 0, mag).otherwise(-mag)
 
 
+def sql_cents_mag(expr: str, scale: int) -> str:
+    """The magnitude half of ``sql_cents``: FLOOR(|x·10^s| + 0.5), a BIGINT
+    in Spark and an integer-valued DOUBLE in DuckDB. The exact renderings
+    (scalar._RENDER6_SQL/_RENDER6_PY) format it directly."""
+    return f"FLOOR(ABS(({expr}) * 1.0e{scale}) + 0.5)"
+
+
 def sql_cents(expr: str, scale: int) -> str:
     """SQL mirror of ``cents`` — engine-portable: Spark's FLOOR(double)
     returns BIGINT (the CAST is a no-op), DuckDB's returns an
     integer-valued DOUBLE whose BIGINT cast is the exact binary value."""
-    m = f"1.0e{scale}"
-    mag = f"CAST(FLOOR(ABS(({expr}) * {m}) + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) * {m} >= 0 THEN {mag} ELSE -{mag} END)"
+    mag = f"CAST({sql_cents_mag(expr, scale)} AS BIGINT)"
+    return f"(CASE WHEN ({expr}) * 1.0e{scale} >= 0 THEN {mag} ELSE -{mag} END)"
 
 
 def dsum(col: Column | str, alias: str, prec: int = 18, scale: int = 2) -> Column:
@@ -160,13 +172,29 @@ def davg(col: Column | str, alias: str, prec: int = 18, scale: int = 2) -> Colum
     ).alias(alias)
 
 
-def sql_dsum(expr: str, alias: str, prec: int = 18, scale: int = 2) -> str:
-    g = sql_finite(expr, route_exp(prec, scale))
-    m = f"1.0e{scale}"
+def sql_exact_sum(
+    expr: str,
+    prec: int = 18,
+    scale: int = 2,
+    over: str | None = None,
+    guard: bool = True,
+) -> str:
+    """SQL mirror of ``dsum`` without the alias, for sums inside larger
+    expressions (ratios, HAVING, scalar subqueries). ``over`` makes it a
+    window aggregate (``SUM(...) OVER <over>``). ``guard=False`` skips the
+    route guard, for inputs that are already guarded or bounded (a
+    conditional ``CASE ... THEN <sql_finite> ELSE 0 END``, a sum of
+    guarded sums)."""
+    g = sql_finite(expr, route_exp(prec, scale)) if guard else expr
+    win = f" OVER {over}" if over else ""
     return (
-        f"CAST(SUM(CAST({sql_cents(g, scale)} AS DECIMAL({prec},0))) AS DOUBLE)"
-        f" / {m} AS {alias}"
+        f"CAST(SUM(CAST({sql_cents(g, scale)} AS DECIMAL({prec},0))){win}"
+        f" AS DOUBLE) / 1.0e{scale}"
     )
+
+
+def sql_dsum(expr: str, alias: str, prec: int = 18, scale: int = 2) -> str:
+    return f"{sql_exact_sum(expr, prec, scale)} AS {alias}"
 
 
 def split_sum16(c: Column) -> Column:
@@ -209,8 +237,4 @@ def sql_split_sum16(expr: str) -> str:
 
 def sql_davg(expr: str, alias: str, prec: int = 18, scale: int = 2) -> str:
     g = sql_finite(expr, route_exp(prec, scale))
-    m = f"1.0e{scale}"
-    return (
-        f"CAST(SUM(CAST({sql_cents(g, scale)} AS DECIMAL({prec},0))) AS DOUBLE)"
-        f" / {m} / COUNT({g}) AS {alias}"
-    )
+    return f"{sql_exact_sum(expr, prec, scale)} / COUNT({g}) AS {alias}"

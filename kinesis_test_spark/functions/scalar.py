@@ -16,7 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite
+from kinesis_test_spark.functions.exact import (
+    cents, finite, sql_cents, sql_cents_mag, sql_finite
+)
 from kinesis_test_spark.functions.porthash import ascii_lower, sql_ascii_lower
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
@@ -154,7 +156,7 @@ def q_fn_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_fn_math",
-    oracle="""
+    oracle=f"""
 SELECT l_orderkey, l_linenumber,
        -- integer-space two-step round (r13 fractional class): the direct
        -- double->DECIMAL cast and ROUND(double, n) are both engine-
@@ -184,17 +186,15 @@ SELECT l_orderkey, l_linenumber,
        -- below 2^53 — so the PRODUCT (not just each factor) is guarded:
        -- |p·q| < 1e11 keeps product cents < ~1e15 with 9x margin.
        CASE WHEN abs(fprice * fqty) < 1.0e11 THEN
-       CAST(CAST((CASE WHEN fprice * 1.0e2 >= 0 THEN CAST(FLOOR(ABS(fprice * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS(fprice * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))
-            * CAST((CASE WHEN fqty * 1.0e2 >= 0 THEN CAST(FLOOR(ABS(fqty * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS(fqty * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0)) AS DOUBLE) / 1.0e4
+       CAST(CAST({sql_cents("fprice", 2)} AS DECIMAL(18,0))
+            * CAST({sql_cents("fqty", 2)} AS DECIMAL(18,0)) AS DOUBLE) / 1.0e4
        END AS exact_product
 FROM (SELECT *,
              -- the decimal/int routes are range-guarded NULL on non-finite
              -- input (edge_nonfinite); ln/sqrt/greatest/least propagate
              -- NaN identically on both engines and stay raw
-             CASE WHEN abs(l_extendedprice) < 1.0e12
-                  THEN l_extendedprice END AS fprice,
-             CASE WHEN abs(l_quantity) < 1.0e12
-                  THEN l_quantity END AS fqty
+             {sql_finite("l_extendedprice")} AS fprice,
+             {sql_finite("l_quantity")} AS fqty
       FROM lineitem)
 """,
 )
@@ -282,14 +282,14 @@ def q_fn_cond(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Domain |v| < 1e12 (cents-safe); outside it no agreeing rendering of an
 # arbitrary double exists, so the value quarantines to NULL. Non-finite
 # spells Spark-style; a -0.0 renders unsigned (computed-zero rule).
-_RENDER6_SQL = """CASE WHEN isnan(value) THEN 'NaN'
+_RENDER6_SQL = f"""CASE WHEN isnan(value) THEN 'NaN'
             WHEN value = CAST('Infinity' AS DOUBLE) THEN 'Infinity'
             WHEN value = CAST('-Infinity' AS DOUBLE) THEN '-Infinity'
             WHEN abs(value) < 1.0e12 THEN
               (CASE WHEN value < 0 THEN '-' ELSE '' END)
-              || CAST(CAST(FLOOR(ABS(value * 1.0e6) + 0.5) AS BIGINT) // 1000000 AS VARCHAR)
+              || CAST(CAST({sql_cents_mag("value", 6)} AS BIGINT) // 1000000 AS VARCHAR)
               || '.'
-              || printf('%06d', CAST(FLOOR(ABS(value * 1.0e6) + 0.5) AS BIGINT) % 1000000)
+              || printf('%06d', CAST({sql_cents_mag("value", 6)} AS BIGINT) % 1000000)
             END"""
 
 _RENDER6_PY = (
@@ -298,8 +298,8 @@ _RENDER6_PY = (
     "WHEN value = double('-Infinity') THEN '-Infinity' "
     "WHEN abs(value) < 1.0e12 THEN "
     "concat(CASE WHEN value < 0 THEN '-' ELSE '' END, "
-    "CAST(FLOOR(ABS(value * 1.0e6) + 0.5) div 1000000 AS STRING), '.', "
-    "format_string('%06d', FLOOR(ABS(value * 1.0e6) + 0.5) % 1000000)) "
+    f"CAST({sql_cents_mag('value', 6)} div 1000000 AS STRING), '.', "
+    f"format_string('%06d', {sql_cents_mag('value', 6)} % 1000000)) "
     "END"
 )
 

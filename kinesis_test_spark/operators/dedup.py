@@ -38,8 +38,10 @@ from kinesis_test_spark.functions.porthash import (
     sql_ascii_upper,
 )
 from kinesis_test_spark.iterate import truncate_lineage
-from kinesis_test_spark.operators.similarity import _SQL_VEC_VALID, _dot, vec_valid
-from kinesis_test_spark.functions.exact import cents
+from kinesis_test_spark.operators.similarity import (
+    _SQL_VEC_E, _SQL_VEC_VALID, _dot, sql_vec_e, vec_valid
+)
+from kinesis_test_spark.functions.exact import cents, sql_exact_sum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import SQL_UNIQUE_DOCS, t, unique_docs
 
@@ -613,12 +615,12 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_dedup_embedding",
     oracle=f"""
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-       ROUND(list_cosine_similarity((CASE WHEN (a.embedding IS NOT NULL AND len(a.embedding) = 64 AND len(list_filter(a.embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(a.embedding AS DOUBLE[]) END),
-                                    (CASE WHEN (b.embedding IS NOT NULL AND len(b.embedding) = 64 AND len(list_filter(b.embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(b.embedding AS DOUBLE[]) END)), 4) AS cos_sim
+       ROUND(list_cosine_similarity({sql_vec_e("a.embedding")},
+                                    {sql_vec_e("b.embedding")}), 4) AS cos_sim
 FROM embeddings a
 JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE ROUND(list_cosine_similarity((CASE WHEN (a.embedding IS NOT NULL AND len(a.embedding) = 64 AND len(list_filter(a.embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(a.embedding AS DOUBLE[]) END),
-                                   (CASE WHEN (b.embedding IS NOT NULL AND len(b.embedding) = 64 AND len(list_filter(b.embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(b.embedding AS DOUBLE[]) END)), 4) >= {COSINE_THRESHOLD}
+WHERE ROUND(list_cosine_similarity({sql_vec_e("a.embedding")},
+                                   {sql_vec_e("b.embedding")}), 4) >= {COSINE_THRESHOLD}
 """,
 )
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1494,9 +1496,9 @@ _N_CELLS = 8  # same deterministic coarse codebook as similarity.py's IVF
 @query(
     "q_dedup_embedding_cells",
     oracle=f"""
-WITH cent AS (SELECT vec_id AS cid, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS ce
+WITH cent AS (SELECT vec_id AS cid, {_SQL_VEC_E} AS ce
               FROM embeddings WHERE vec_id < {_N_CELLS}),
-v AS (SELECT vec_id, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM embeddings),
+v AS (SELECT vec_id, {_SQL_VEC_E} AS e FROM embeddings),
 scored AS (
   SELECT v.vec_id, v.e, cent.cid,
          row_number() OVER (
@@ -1681,30 +1683,17 @@ def _sem_candidates(
     )
 
 
-def _sem_pair_cos():
-    """Pair cosine over the (ea, na) × (eb, nb) candidate columns — the
-    shared -1.0 zero-norm sentinel, rounded to 4 like the oracle's
-    list_cosine_similarity rendering."""
-    return F.round(
-        F.coalesce(
-            F.try_divide(_dot(F.col("ea"), F.col("eb")), F.col("na") * F.col("nb")),
-            F.lit(-1.0),
-        ),
-        4,
-    )
-
-
 def _pair_cos_batched(cand: DataFrame, keep: list[str]) -> DataFrame:
     """(keep..., cos): the candidate pair cosine evaluated as Arrow
-    batches through numpy instead of the JVM higher-order aggregate —
-    Spark never codegens lambda functions, so ``_sem_pair_cos`` evaluates
+    batches through numpy instead of a JVM higher-order ``_dot`` —
+    Spark never codegens lambda functions, so that form evaluates
     interpreted at ~15 µs/pair, three times the cost of the band join
     that produced the pair (measured; guide §4.2: hand whole batches to
     vectorized native code). Only the four pair columns plus ``keep``
     cross the Python boundary, and only (keep..., cos) come back. The
     raw dot/denominator come back UNROUNDED and the shared ROUND(…,4) +
-    -1.0 zero-norm sentinel are applied in Spark, so the rounding
-    semantics are exactly ``_sem_pair_cos``'s; einsum's pairwise
+    -1.0 zero-norm sentinel are applied in Spark, matching the oracle's
+    ROUND(list_cosine_similarity(…), 4) rendering; einsum's pairwise
     summation differs from the sequential fold by ≲1 ULP, inside the
     ROUND(4) tolerance this family's oracle already grants cosines
     (values the engines compute via different internal algorithms)."""
@@ -1809,7 +1798,7 @@ def _sem_assigned(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
 # `sim DESC, cid ASC` — the exact mirror of assign_cells' (sim, -cid)
 # max_by key). Extracted verbatim from the battle-tested q_dedup_semantic
 # oracle so the incremental/eval siblings share one definition.
-_SEM_SQL_ASSIGNED = f"""cent AS (SELECT vec_id AS cid, (CASE WHEN {_SQL_VEC_VALID} THEN CAST(embedding AS DOUBLE[]) END) AS ce
+_SEM_SQL_ASSIGNED = f"""cent AS (SELECT vec_id AS cid, {_SQL_VEC_E} AS ce
               FROM embeddings WHERE vec_id < {_N_CELLS} AND {_SQL_VEC_VALID}),
 v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
       WHERE {_SQL_VEC_VALID} AND vec_id IS NOT NULL),
@@ -2272,17 +2261,19 @@ r0 AS (SELECT node, d, 1.0 / nn.n AS r FROM deg, nn)"""
 r{next} AS (
   SELECT tgt.node, tgt.d,
          {tele} / nn.n + {damp} *
-         CAST(SUM(CAST((CASE WHEN (src.r / src.d) * 1.0e18 >= 0
-                        THEN CAST(FLOOR(ABS((src.r / src.d) * 1.0e18) + 0.5) AS BIGINT)
-                        ELSE -CAST(FLOOR(ABS((src.r / src.d) * 1.0e18) + 0.5) AS BIGINT) END)
-                       AS DECIMAL(28,0))) AS DOUBLE) / 1.0e18 AS r
+         {contrib} AS r
   FROM edges e
   JOIN r{cur} src ON src.node = e.u
   JOIN deg tgt ON tgt.node = e.v, nn
   GROUP BY tgt.node, tgt.d, nn.n)"""
+    contrib = sql_exact_sum("src.r / src.d", 28, 18, guard=False)
     for i in range(PR_ITERATIONS):
         base += step.format(
-            next=i + 1, cur=i, tele=round(1 - PR_DAMPING, 6), damp=PR_DAMPING
+            next=i + 1,
+            cur=i,
+            tele=round(1 - PR_DAMPING, 6),
+            damp=PR_DAMPING,
+            contrib=contrib,
         )
     return base + f"""
 SELECT node AS p_partkey, d AS degree, ROUND(r, 6) AS pagerank

@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite
+from kinesis_test_spark.functions.exact import (
+    cents, finite, sql_dsum, sql_exact_sum, sql_finite
+)
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 from kinesis_test_spark.sources.tables import events_until
@@ -87,19 +89,7 @@ SELECT user_id,
        CAST(COUNT(CASE WHEN event_type = 'click' THEN 1 END) AS BIGINT) AS n_clicks,
        CAST(COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT) AS n_purchases,
        CAST(COUNT(CASE WHEN event_type = 'error' THEN 1 END) AS BIGINT) AS n_errors,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN event_type = 'purchase'
-                          THEN (CASE WHEN abs(value) < 1.0e12
-                                THEN value END)
-                          ELSE 0 END) * 1.0e6 >= 0
-                THEN CAST(FLOOR(ABS((CASE WHEN event_type = 'purchase'
-                          THEN (CASE WHEN abs(value) < 1.0e12
-                                THEN value END)
-                          ELSE 0 END) * 1.0e6) + 0.5) AS BIGINT)
-                ELSE -CAST(FLOOR(ABS((CASE WHEN event_type = 'purchase'
-                          THEN (CASE WHEN abs(value) < 1.0e12
-                                THEN value END)
-                          ELSE 0 END) * 1.0e6) + 0.5) AS BIGINT) END)
-                AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS purchase_value,
+       {sql_exact_sum(f"CASE WHEN event_type = 'purchase' THEN {sql_finite('value')} ELSE 0 END", 18, 6, guard=False)} AS purchase_value,
        strftime(MAX(ts), '%Y-%m-%d %H:%M:%S.%f') AS last_seen
 FROM events
 WHERE ts <= TIMESTAMP '{FEATURE_CUTOFF}'
@@ -234,14 +224,14 @@ CDC_NEW_START, CDC_NEW_END = "2024-01-22", "2024-01-29"
     oracle=f"""
 WITH a AS (
   SELECT user_id, event_type,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS val,
+         {sql_dsum("value", "val")},
          CAST(COUNT(*) AS BIGINT) AS n
   FROM events
   WHERE ts >= TIMESTAMP '{CDC_OLD_START}' AND ts < TIMESTAMP '{CDC_OLD_END}'
   GROUP BY user_id, event_type),
 b AS (
   SELECT user_id, event_type,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS val,
+         {sql_dsum("value", "val")},
          CAST(COUNT(*) AS BIGINT) AS n
   FROM events
   WHERE ts >= TIMESTAMP '{CDC_NEW_START}' AND ts < TIMESTAMP '{CDC_NEW_END}'

@@ -22,7 +22,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, davg, dsum, finite, sql_davg, sql_dsum
+from kinesis_test_spark.functions.exact import (
+    cents, davg, dsum, finite, sql_cents, sql_davg, sql_dsum, sql_exact_sum,
+    sql_finite
+)
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, views
 
@@ -498,7 +501,7 @@ def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_stats",
-    oracle="""
+    oracle=f"""
 SELECT event_type,
        ROUND(stddev_samp(fv), 6) AS sd_value,
        ROUND(var_samp(fv), 6) AS var_value,
@@ -506,8 +509,7 @@ SELECT event_type,
        ROUND(CAST(quantile_cont(fv, 0.5) AS DOUBLE), 6) AS p50,
        ROUND(CAST(quantile_cont(fv, 0.9) AS DOUBLE), 6) AS p90
 FROM (SELECT event_type, user_id,
-             CASE WHEN abs(value) < 1.0e12
-                  THEN value END AS fv
+             {sql_finite("value")} AS fv
       FROM events) GROUP BY event_type
 """,
 )
@@ -613,7 +615,8 @@ def q_sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null ordering is EXPLICIT on both engines: Spark defaults ASC to
     NULLS FIRST / DESC to NULLS LAST while DuckDB defaults the opposite
     way, so a nullable sort column under a LIMIT silently selects
-    different rows unless pinned (tools/probe_nulls.py class 1)."""
+    different rows unless pinned (nulls corpus class 1,
+    tools/battery.py --class nulls)."""
     ev = t(spark, sf_dir, "events")
     return (
         ev.orderBy(
@@ -628,9 +631,8 @@ def q_sort_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_agg_histogram",
-    oracle="""
-SELECT CAST(FLOOR((CASE WHEN abs(o_totalprice) < 1.0e12
-                    THEN o_totalprice END) / 25000) + 1 AS BIGINT) AS bucket,
+    oracle=f"""
+SELECT CAST(FLOOR({sql_finite("o_totalprice")} / 25000) + 1 AS BIGINT) AS bucket,
        COUNT(*) AS n,
        CAST(MIN(o_totalprice) AS DOUBLE) AS lo,
        CAST(MAX(o_totalprice) AS DOUBLE) AS hi
@@ -746,11 +748,11 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_time_rollup",
-    oracle="""
+    oracle=f"""
 SELECT CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
        CAST(day(ts) AS INT) AS d, CAST(hour(ts) AS INT) AS h,
        COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("value", "sum_value", 18, 6)}
 FROM events
 GROUP BY GROUPING SETS ((y, m, d, h), (y, m, d), (y, m), (y))
 """,
@@ -763,11 +765,11 @@ def q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; at scale this replaces four separate scans."""
     views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
                CAST(day(ts) AS INT) AS d, CAST(hour(ts) AS INT) AS h,
                COUNT(*) AS n,
-               CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+               {sql_dsum("value", "sum_value", 18, 6)}
         FROM events
         GROUP BY GROUPING SETS ((y, m, d, h), (y, m, d), (y, m), (y))
         """
@@ -1019,10 +1021,10 @@ def q_agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_rollup_incremental",
-    oracle="""
+    oracle=f"""
 SELECT CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
        COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("value", "sum_value", 18, 6)}
 FROM events GROUP BY 1, 2
 """,
 )
@@ -1128,12 +1130,11 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_outliers",
-    oracle="""
+    oracle=f"""
 WITH stats AS (
   SELECT event_type,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 / COUNT(*) AS mu,
-         ROUND(stddev_samp(CASE WHEN abs(value) < 1.0e12
-                            THEN value END), 6) AS sigma
+         {sql_exact_sum("value", 18, 6)} / COUNT(*) AS mu,
+         ROUND(stddev_samp({sql_finite("value")}), 6) AS sigma
   FROM events GROUP BY event_type)
 SELECT e.event_id, e.event_type, e.value,
        ROUND((e.value - s.mu) / s.sigma, 4) AS z
@@ -1211,10 +1212,10 @@ def q_fk_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_revenue_share",
-    oracle="""
+    oracle=f"""
 WITH seg AS (
   SELECT c.c_mktsegment,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(o.o_totalprice) < 1.0e12 THEN o.o_totalprice END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(o.o_totalprice) < 1.0e12 THEN o.o_totalprice END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(o.o_totalprice) < 1.0e12 THEN o.o_totalprice END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) AS DOUBLE) / 1.0e6 AS seg_rev
+         {sql_dsum("o.o_totalprice", "seg_rev", 25, 6)}
   FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
   GROUP BY c.c_mktsegment)
 SELECT c_mktsegment, seg_rev,
@@ -1334,7 +1335,7 @@ def q_calendar_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_ab_test",
-    oracle="""
+    oracle=f"""
 WITH assigned AS (
   SELECT CASE WHEN user_id % 2 = 0 THEN 'control' ELSE 'treatment' END AS variant,
          value
@@ -1342,9 +1343,8 @@ WITH assigned AS (
 stats AS (
   SELECT variant,
          CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 / COUNT(*) AS mean_v,
-         ROUND(VAR_SAMP(CASE WHEN abs(value) < 1.0e12
-                         THEN value END), 6) AS var_v
+         {sql_exact_sum("value")} / COUNT(*) AS mean_v,
+         ROUND(VAR_SAMP({sql_finite("value")}), 6) AS var_v
   FROM assigned GROUP BY variant),
 wide AS (
   SELECT
@@ -1424,12 +1424,12 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_rfm",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT user_id,
          MAX(ts) AS last_seen,
          CAST(COUNT(*) AS BIGINT) AS freq,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS monetary
+         {sql_dsum("value", "monetary")}
   FROM events WHERE event_type = 'purchase' GROUP BY user_id),
 scored AS (
   SELECT user_id,
@@ -1615,7 +1615,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_cohort_ltv",
-    oracle="""
+    oracle=f"""
 WITH first_seen AS (
   SELECT user_id, time_bucket(INTERVAL '1 week', MIN(ts)) AS cohort
   FROM events GROUP BY user_id),
@@ -1624,7 +1624,7 @@ revenue AS (
          CAST(floor(((epoch_us(time_bucket(INTERVAL '1 millisecond', time_bucket(INTERVAL '1 week', e.ts))) // 1000)
                      - (epoch_us(time_bucket(INTERVAL '1 millisecond', f.cohort)) // 1000)) / 604800000.0) AS BIGINT)
            AS week_offset,
-         CAST((CASE WHEN (CASE WHEN abs(e.value) < 1.0e15 THEN e.value END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(e.value) < 1.0e15 THEN e.value END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(e.value) < 1.0e15 THEN e.value END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0)) AS v
+         CAST({sql_cents(sql_finite("e.value", 15), 2)} AS DECIMAL(18,0)) AS v
   FROM events e JOIN first_seen f ON f.user_id = e.user_id
   WHERE e.event_type = 'purchase' AND e.ts IS NOT NULL),
 weekly AS (
@@ -1632,9 +1632,7 @@ weekly AS (
          CAST(SUM(v) AS DOUBLE) / 1.0e2 AS revenue
   FROM revenue GROUP BY 1, 2)
 SELECT cohort_week, week_offset, revenue,
-       CAST(SUM(CAST((CASE WHEN revenue * 1.0e2 >= 0 THEN CAST(FLOOR(ABS(revenue * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS(revenue * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) OVER (
-         PARTITION BY cohort_week ORDER BY week_offset NULLS FIRST
-         ROWS UNBOUNDED PRECEDING) AS DOUBLE) / 1.0e2 AS cumulative_ltv
+       {sql_exact_sum("revenue", over="(PARTITION BY cohort_week ORDER BY week_offset NULLS FIRST ROWS UNBOUNDED PRECEDING)", guard=False)} AS cumulative_ltv
 FROM weekly ORDER BY cohort_week, week_offset
 """,
 )
@@ -1772,7 +1770,7 @@ BOOTSTRAP_B = 20  # resamples; thresholds below are Poisson(1) pmf on hex16
 
 @query(
     "q_bootstrap_ci",
-    oracle="""
+    oracle=f"""
 WITH p AS (SELECT event_id, value FROM events WHERE event_type = 'purchase'),
 rs AS (
   SELECT b, value,
@@ -1782,12 +1780,12 @@ rs AS (
                ((strpos('0123456789abcdef', substr(md5('bs|' || CAST(b AS VARCHAR) || '|' || CAST(event_id AS VARCHAR)), 1, 1)) - 1) * 4096 + (strpos('0123456789abcdef', substr(md5('bs|' || CAST(b AS VARCHAR) || '|' || CAST(event_id AS VARCHAR)), 2, 1)) - 1) * 256 + (strpos('0123456789abcdef', substr(md5('bs|' || CAST(b AS VARCHAR) || '|' || CAST(event_id AS VARCHAR)), 3, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5('bs|' || CAST(b AS VARCHAR) || '|' || CAST(event_id AS VARCHAR)), 4, 1)) - 1)) AS h
         FROM p, (SELECT unnest(generate_series(0, 19)) AS b))),
 means AS (
-  SELECT b, CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value * w) < 1.0e15 THEN value * w END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value * w) < 1.0e15 THEN value * w END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value * w) < 1.0e15 THEN value * w END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2
+  SELECT b, {sql_exact_sum("value * w")}
             / NULLIF(SUM(w), 0) AS m
   FROM rs GROUP BY b),
 base AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 / COUNT(*) AS mv
+         {sql_exact_sum("value")} / COUNT(*) AS mv
   FROM p),
 se AS (SELECT ROUND(stddev_samp(m), 6) AS se_boot FROM means)
 SELECT base.n, ROUND(base.mv, 6) AS mean_value, se.se_boot,

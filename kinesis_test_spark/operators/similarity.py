@@ -151,15 +151,29 @@ def vec_valid(col: str = "embedding"):
     )
 
 
-_SQL_VEC_VALID = (
-    f"(embedding IS NOT NULL AND len(embedding) = {DIM}"
-    " AND len(list_filter(embedding,"
-    " x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)"
-)
+def sql_vec_valid(col: str = "embedding") -> str:
+    """SQL mirror of ``vec_valid``; ``_SQL_VEC_VALID`` is its ``embedding``
+    form. Oracle SQL interpolates it and never pastes the predicate."""
+    return (
+        f"({col} IS NOT NULL AND len({col}) = {DIM}"
+        f" AND len(list_filter({col},"
+        " x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)"
+    )
 
 
-# Oracle-side mirror of _vectors' identity grain — interpolate (or inline
-# verbatim) as the FROM source in any embeddings oracle. Full-tuple
+def sql_vec_e(col: str = "embedding") -> str:
+    """SQL mirror of ``_vectors``' ``e`` column: the vector as DOUBLE[],
+    NULL when ``sql_vec_valid`` quarantines it."""
+    return f"(CASE WHEN {sql_vec_valid(col)} THEN CAST({col} AS DOUBLE[]) END)"
+
+
+_SQL_VEC_VALID = sql_vec_valid()
+_SQL_VEC_E = sql_vec_e()
+
+
+# Oracle-side mirror of _vectors' identity grain — interpolate it as the
+# FROM source in any embeddings oracle; never paste its text (the
+# tests/test_oracle_helpers.py scan fails on a copy). Full-tuple
 # DISTINCT ≡ id-grain dedup under the byte-identical-redelivery contract
 # (the unique_docs trick; mutated same-id rows are out of contract).
 _SQL_VECTORS = (
@@ -198,11 +212,11 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sim_search",
     oracle=f"""
-WITH q AS (SELECT (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS qe FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
+WITH q AS (SELECT {_SQL_VEC_E} AS qe FROM {_SQL_VECTORS}
            WHERE vec_id = {QUERY_VEC_ID})
 SELECT vec_id, label,
-       ROUND(list_cosine_similarity((CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END), qe), 6) AS cos_sim
-FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL), q
+       ROUND(list_cosine_similarity({_SQL_VEC_E}, qe), 6) AS cos_sim
+FROM {_SQL_VECTORS}, q
 WHERE vec_id <> {QUERY_VEC_ID}
 ORDER BY cos_sim DESC, vec_id
 LIMIT {TOP_K}
@@ -228,10 +242,10 @@ def q_sim_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_sim_search_ivf",
     oracle=f"""
-WITH cent AS (SELECT vec_id AS cid, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS ce
-              FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-              WHERE vec_id < {N_CENTROIDS} AND (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
-v AS (SELECT vec_id, label, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)),
+WITH cent AS (SELECT vec_id AS cid, {_SQL_VEC_E} AS ce
+              FROM {_SQL_VECTORS}
+              WHERE vec_id < {N_CENTROIDS} AND {_SQL_VEC_VALID}),
+v AS (SELECT vec_id, label, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}),
 scored AS (
   SELECT v.vec_id, v.label, v.e, cent.cid,
          row_number() OVER (
@@ -315,8 +329,8 @@ def _lsh_oracle() -> str:
     )
     return f"""
 WITH planes AS (SELECT [{planes_sql}] AS R),
-v AS (SELECT vec_id, label, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-     WHERE (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
+v AS (SELECT vec_id, label, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}
+     WHERE {_SQL_VEC_VALID}),
 bucketed AS (
   SELECT vec_id, label, e, CAST({bits} AS BIGINT) AS bucket FROM v, planes)
 SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.bucket,
@@ -336,8 +350,8 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The projection fold (0 + x₁ + x₂ …) is sequenced identically in both
     engines so the sign bits match bit-for-bit. NULL vectors are excluded
     on both sides (a sign-bit bucket for an absent vector is meaningless
-    and DuckDB's list ops error on NULL elements; tools/probe_nulls.py
-    class 4)."""
+    and DuckDB's list ops error on NULL elements; nulls corpus class 4,
+    tools/battery.py --class nulls)."""
     v = _vectors(spark, sf_dir).filter(F.col("e").isNotNull()).repartition(
         spark.sparkContext.defaultParallelism, "vec_id"
     )
@@ -380,11 +394,11 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_kmeans_step",
     oracle=f"""
-WITH cent AS (SELECT vec_id AS cid, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS ce
-              FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-              WHERE vec_id < {N_CENTROIDS} AND (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
-v AS (SELECT vec_id, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-     WHERE (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
+WITH cent AS (SELECT vec_id AS cid, {_SQL_VEC_E} AS ce
+              FROM {_SQL_VECTORS}
+              WHERE vec_id < {N_CENTROIDS} AND {_SQL_VEC_VALID}),
+v AS (SELECT vec_id, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}
+     WHERE {_SQL_VEC_VALID}),
 scored AS (
   SELECT v.vec_id, v.e, cent.cid,
          row_number() OVER (PARTITION BY v.vec_id
@@ -442,10 +456,10 @@ N_PROBES = 2
 @query(
     "q_sim_search_ivf_multiprobe",
     oracle=f"""
-WITH cent AS (SELECT vec_id AS cid, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS ce
-              FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-              WHERE vec_id < {N_CENTROIDS} AND (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
-v AS (SELECT vec_id, label, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)),
+WITH cent AS (SELECT vec_id AS cid, {_SQL_VEC_E} AS ce
+              FROM {_SQL_VECTORS}
+              WHERE vec_id < {N_CENTROIDS} AND {_SQL_VEC_VALID}),
+v AS (SELECT vec_id, label, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}),
 scored AS (
   SELECT v.vec_id, v.label, v.e, cent.cid,
          row_number() OVER (PARTITION BY v.vec_id
@@ -586,8 +600,8 @@ BATCH_TOP_K = 5
 
 @query(
     "q_emb_normalize",
-    oracle="""
-WITH v AS (SELECT vec_id, label, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL))
+    oracle=f"""
+WITH v AS (SELECT vec_id, label, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS})
 SELECT vec_id, label,
        ROUND(sqrt(list_reduce(list_transform(e, x -> x * x), (a, b) -> a + b)), 6)
          AS l2_norm,
@@ -620,8 +634,8 @@ def q_emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_emb_centroid",
     oracle=f"""
-WITH v AS (SELECT label, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-           WHERE (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
+WITH v AS (SELECT label, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}
+           WHERE {_SQL_VEC_VALID}),
 comp AS (
   SELECT label, dim, e[dim] AS val
   FROM v, (SELECT unnest(generate_series(1, {DIM})) AS dim))
@@ -658,8 +672,8 @@ def q_emb_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ann_batch",
     oracle=f"""
-WITH v AS (SELECT vec_id, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-     WHERE (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
+WITH v AS (SELECT vec_id, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}
+     WHERE {_SQL_VEC_VALID}),
 q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_BATCH_QUERIES}),
 db AS (SELECT vec_id, e FROM v WHERE vec_id >= {N_BATCH_QUERIES}),
 scored AS (
@@ -710,8 +724,8 @@ PQ_CODES = 16  # codewords per subspace (first 16 vectors' sub-vectors)
 @query(
     "q_emb_pq",
     oracle=f"""
-WITH v AS (SELECT vec_id, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-     WHERE (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
+WITH v AS (SELECT vec_id, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}
+     WHERE {_SQL_VEC_VALID}),
 sub AS (
   SELECT vec_id, m, e[(m * {PQ_SUBDIM} + 1):((m + 1) * {PQ_SUBDIM})] AS se
   FROM v, (SELECT unnest(generate_series(0, {PQ_M - 1})) AS m)),
@@ -790,9 +804,9 @@ def _sql_l2(a: str, b: str, n: int) -> str:
 @query(
     "q_sim_search_ivfpq",
     oracle=f"""
-WITH cent AS (SELECT vec_id AS cid, (CASE WHEN {_SQL_VEC_VALID} THEN CAST(embedding AS DOUBLE[]) END) AS ce
-              FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL) WHERE vec_id < {N_CENTROIDS} AND {_SQL_VEC_VALID}),
-v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
+WITH cent AS (SELECT vec_id AS cid, {_SQL_VEC_E} AS ce
+              FROM {_SQL_VECTORS} WHERE vec_id < {N_CENTROIDS} AND {_SQL_VEC_VALID}),
+v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM {_SQL_VECTORS}
       WHERE {_SQL_VEC_VALID} AND vec_id IS NOT NULL),
 scored AS (
   SELECT v.vec_id, v.e, cent.cid, cent.ce,
@@ -982,8 +996,8 @@ def q_sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_ann_recall",
     oracle=f"""
-WITH v AS (SELECT vec_id, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)
-     WHERE (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
+WITH v AS (SELECT vec_id, {_SQL_VEC_E} AS e FROM {_SQL_VECTORS}
+     WHERE {_SQL_VEC_VALID}),
 q AS (SELECT vec_id AS qid, e AS qe FROM v WHERE vec_id < {N_BATCH_QUERIES}),
 db AS (SELECT vec_id, e FROM v WHERE vec_id >= {N_BATCH_QUERIES}),
 exact AS (
@@ -1106,8 +1120,8 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q_emb_drift",
     oracle=f"""
-WITH v AS (SELECT vec_id % 2 AS grp, (CASE WHEN (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0) THEN CAST(embedding AS DOUBLE[]) END) AS e
-           FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL) WHERE (embedding IS NOT NULL AND len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT (abs(CAST(x AS DOUBLE)) < 1.0e6))) = 0)),
+WITH v AS (SELECT vec_id % 2 AS grp, {_SQL_VEC_E} AS e
+           FROM {_SQL_VECTORS} WHERE {_SQL_VEC_VALID}),
 comp AS (
   SELECT grp, dim,
          ROUND({sql_split_sum16('e[dim]')}
@@ -1189,8 +1203,8 @@ MRL_DIM = 16  # leading dims used for the cheap ranking (of DIM=64)
 @query(
     "q_sim_mrl",
     oracle=f"""
-WITH q AS (SELECT (CASE WHEN {_SQL_VEC_VALID} THEN CAST(embedding AS DOUBLE[]) END) AS qe
-           FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL) WHERE vec_id = {QUERY_VEC_ID}),
+WITH q AS (SELECT {_SQL_VEC_E} AS qe
+           FROM {_SQL_VECTORS} WHERE vec_id = {QUERY_VEC_ID}),
 scored AS (
   -- COALESCE to the -1.0 sentinel exactly like Spark's cosine(): an
   -- invalid vector must rank identically on both engines even when the
@@ -1199,11 +1213,11 @@ scored AS (
   -- round-11 review finding)
   SELECT vec_id,
          COALESCE(ROUND(list_cosine_similarity(
-           (CASE WHEN {_SQL_VEC_VALID} THEN CAST(embedding AS DOUBLE[]) END)[1:{MRL_DIM}],
+           {_SQL_VEC_E}[1:{MRL_DIM}],
            qe[1:{MRL_DIM}]), 6), -1.0) AS cos_trunc,
          COALESCE(ROUND(list_cosine_similarity(
-           (CASE WHEN {_SQL_VEC_VALID} THEN CAST(embedding AS DOUBLE[]) END), qe), 6), -1.0) AS cos_full
-  FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL), q WHERE vec_id <> {QUERY_VEC_ID}),
+           {_SQL_VEC_E}, qe), 6), -1.0) AS cos_full
+  FROM {_SQL_VECTORS}, q WHERE vec_id <> {QUERY_VEC_ID}),
 topk AS (SELECT * FROM scored ORDER BY cos_trunc DESC, vec_id LIMIT {TOP_K}),
 exact AS (SELECT vec_id FROM scored ORDER BY cos_full DESC, vec_id LIMIT {TOP_K})
 SELECT t.vec_id, t.cos_trunc, t.cos_full,
@@ -1283,8 +1297,8 @@ def _sq8_quant(x, s):
 @query(
     "q_emb_sq8",
     oracle=f"""
-WITH v AS (SELECT vec_id, (CASE WHEN {_SQL_VEC_VALID} THEN CAST(embedding AS DOUBLE[]) END) AS e
-           FROM (SELECT DISTINCT vec_id, label, embedding FROM embeddings WHERE vec_id IS NOT NULL)),
+WITH v AS (SELECT vec_id, {_SQL_VEC_E} AS e
+           FROM {_SQL_VECTORS}),
 s AS (SELECT max(list_max(list_transform(e, x -> abs(x)))) AS s
       FROM v WHERE e IS NOT NULL),
 rec AS (
@@ -1461,7 +1475,7 @@ t_{alias} AS (
 @query(
     "q_index_versioned",
     oracle=f"""
-WITH v AS (SELECT vec_id, (CASE WHEN {_SQL_VEC_VALID} THEN CAST(embedding AS DOUBLE[]) END) AS e
+WITH v AS (SELECT vec_id, {_SQL_VEC_E} AS e
            FROM {_SQL_VECTORS}),
 vv AS (SELECT vec_id, e FROM v WHERE e IS NOT NULL),
 q AS (SELECT e AS qe FROM v WHERE vec_id = {QUERY_VEC_ID}),

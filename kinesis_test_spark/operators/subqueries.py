@@ -10,11 +10,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from kinesis_test_spark.functions.exact import sql_dsum, sql_exact_sum, sql_finite
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import views
 
 # scalar subquery threshold computed exactly (decimal) so both engines agree
-_AVG = "CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(o_totalprice) < 1.0e15 THEN o_totalprice END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(o_totalprice) < 1.0e15 THEN o_totalprice END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(o_totalprice) < 1.0e15 THEN o_totalprice END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 / COUNT(*)"
+_AVG = f"{sql_exact_sum('o_totalprice')} / COUNT(*)"
 
 _SCALAR_SQL = f"""
 SELECT o_orderkey, o_custkey, o_totalprice
@@ -59,17 +60,17 @@ def q_subquery_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_EXISTS_SQL)
 
 
-_CTE_SQL = """
+_CTE_SQL = f"""
 WITH cust_orders AS (
   SELECT o_custkey, COUNT(*) AS n_orders,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(o_totalprice) < 1.0e15 THEN o_totalprice END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(o_totalprice) < 1.0e15 THEN o_totalprice END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(o_totalprice) < 1.0e15 THEN o_totalprice END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS total_spent
+         {sql_dsum("o_totalprice", "total_spent")}
   FROM orders GROUP BY o_custkey
 ), segments AS (
   SELECT c_custkey, c_mktsegment FROM customer
 )
 SELECT s.c_mktsegment,
        COUNT(*) AS n_customers,
-       CAST(SUM(CAST((CASE WHEN co.total_spent * 1.0e2 >= 0 THEN CAST(FLOOR(ABS(co.total_spent * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS(co.total_spent * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS segment_revenue,
+       {sql_exact_sum("co.total_spent", guard=False)} AS segment_revenue,
        CAST(SUM(co.n_orders) AS BIGINT) AS segment_orders
 FROM segments s JOIN cust_orders co ON co.o_custkey = s.c_custkey
 GROUP BY s.c_mktsegment
@@ -165,7 +166,7 @@ def q_sql_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_sql_script",
-    oracle="""
+    oracle=f"""
 WITH tot AS (SELECT CAST(COUNT(*) // 2 AS BIGINT) AS target FROM lineitem
              WHERE abs(l_quantity) < 1.0e12),
 cum AS (
@@ -180,8 +181,7 @@ cum AS (
   -- a fractional quantity q exactly from k = ceil(q) (r13 singleton
   -- review; equal on the integer-valued fixture).
   SELECT k, CAST(SUM(n) OVER (ORDER BY k) AS BIGINT) AS cnt
-  FROM (SELECT CAST(CEIL(CASE WHEN abs(l_quantity) < 1.0e12
-                          THEN l_quantity END) AS INT) AS k, COUNT(*) AS n
+  FROM (SELECT CAST(CEIL({sql_finite("l_quantity")}) AS INT) AS k, COUNT(*) AS n
         FROM lineitem GROUP BY 1)
   WHERE k IS NOT NULL),
 -- target > 0 guard + GREATEST clamp mirror the loop exactly: with
@@ -243,8 +243,6 @@ def q_sql_script(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pipe_sql() -> str:
     """The pipe-syntax body (engine side). The oracle states the same
     dataflow in classic ANSI form — DuckDB 1.0 has no |> operator."""
-    from kinesis_test_spark.functions.exact import sql_dsum
-
     # sql_dsum's guard text is engine-portable (runs as Spark SQL too).
     return f"""
 FROM orders
@@ -259,8 +257,6 @@ FROM orders
 
 
 def _pipe_oracle() -> str:
-    from kinesis_test_spark.functions.exact import sql_dsum
-
     return f"""
 SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, o_orderpriority,
        CAST(COUNT(*) AS BIGINT) AS n,

@@ -24,7 +24,7 @@ from kinesis_test_spark.functions.porthash import (
     sql_ascii_lower,
     sql_hex16,
 )
-from kinesis_test_spark.functions.exact import cents
+from kinesis_test_spark.functions.exact import cents, sql_exact_sum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, unique_docs
 
@@ -806,12 +806,12 @@ def q_text_shard_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_logprob",
-    oracle="""
+    oracle=f"""
 WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
 freq AS (SELECT w, COUNT(*) AS c FROM words GROUP BY w),
 tot AS (SELECT CAST(SUM(c) AS DOUBLE) AS t FROM freq)
 SELECT doc_id,
-       CAST(SUM(CAST((CASE WHEN ln(freq.c / tot.t) * 1.0e8 >= 0 THEN CAST(FLOOR(ABS(ln(freq.c / tot.t) * 1.0e8) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS(ln(freq.c / tot.t) * 1.0e8) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e8 AS logprob,
+       {sql_exact_sum("ln(freq.c / tot.t)", 18, 8, guard=False)} AS logprob,
        COUNT(*) AS n_tokens
 FROM words JOIN freq USING (w) CROSS JOIN tot
 GROUP BY doc_id
@@ -1523,19 +1523,13 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_entropy",
-    oracle="""
+    oracle=f"""
 WITH w AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
            WHERE doc_id IS NOT NULL),
 cnt AS (SELECT doc_id, word, COUNT(*) AS c FROM w GROUP BY doc_id, word),
 tot AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n FROM cnt GROUP BY doc_id)
 SELECT c.doc_id, t.n AS n_tokens,
-       ROUND(CAST(SUM(CAST((CASE WHEN (-(CAST(c.c AS DOUBLE) / t.n)
-                                       * log2(CAST(c.c AS DOUBLE) / t.n)) * 1.0e12 >= 0
-                            THEN CAST(FLOOR(ABS((-(CAST(c.c AS DOUBLE) / t.n)
-                                                 * log2(CAST(c.c AS DOUBLE) / t.n)) * 1.0e12) + 0.5) AS BIGINT)
-                            ELSE -CAST(FLOOR(ABS((-(CAST(c.c AS DOUBLE) / t.n)
-                                                  * log2(CAST(c.c AS DOUBLE) / t.n)) * 1.0e12) + 0.5) AS BIGINT) END)
-                           AS DECIMAL(18,0))) AS DOUBLE) / 1.0e12, 6) AS entropy
+       ROUND({sql_exact_sum("-(CAST(c.c AS DOUBLE) / t.n) * log2(CAST(c.c AS DOUBLE) / t.n)", 18, 12, guard=False)}, 6) AS entropy
 FROM cnt c JOIN tot t ON c.doc_id = t.doc_id
 GROUP BY c.doc_id, t.n
 ORDER BY c.doc_id
@@ -1837,7 +1831,7 @@ def q_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_text_perplexity",
-    oracle="""
+    oracle=f"""
 WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
 bg AS (
   SELECT doc_id,
@@ -1851,10 +1845,7 @@ c1 AS (SELECT w1, CAST(SUM(c) AS BIGINT) AS c FROM c12 GROUP BY w1),
 vocab AS (SELECT CAST(COUNT(DISTINCT w1) AS BIGINT) AS v FROM c1)
 SELECT bg.doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       ROUND(CAST(SUM(CAST((CASE WHEN -ln((c12.c + 1.0) / (c1.c + vocab.v)) * 1.0e8 >= 0
-                            THEN CAST(FLOOR(ABS(-ln((c12.c + 1.0) / (c1.c + vocab.v)) * 1.0e8) + 0.5) AS BIGINT)
-                            ELSE -CAST(FLOOR(ABS(-ln((c12.c + 1.0) / (c1.c + vocab.v)) * 1.0e8) + 0.5) AS BIGINT) END)
-                           AS DECIMAL(18,0))) AS DOUBLE) / 1.0e8 / COUNT(*), 6)
+       ROUND({sql_exact_sum("-ln((c12.c + 1.0) / (c1.c + vocab.v))", 18, 8, guard=False)} / COUNT(*), 6)
          AS avg_nll
 FROM bg
 JOIN c12 ON c12.w1 = bg.w1 AND c12.w2 = bg.w2

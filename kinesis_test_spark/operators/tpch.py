@@ -10,7 +10,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, davg, dsum, finite, sql_davg, sql_dsum
+from kinesis_test_spark.functions.exact import (
+    cents, davg, dsum, finite, sql_davg, sql_dsum, sql_exact_sum, sql_finite
+)
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -128,7 +130,7 @@ Q18_QTY_THRESHOLD = 300
 WITH big AS (
   SELECT l_orderkey
   FROM lineitem GROUP BY l_orderkey
-  HAVING CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 > {Q18_QTY_THRESHOLD})
+  HAVING {sql_exact_sum("l_quantity")} > {Q18_QTY_THRESHOLD})
 SELECT c.c_custkey, o.o_orderkey, o.o_totalprice,
        {sql_dsum("l.l_quantity", "sum_qty")}
 FROM customer c
@@ -330,16 +332,10 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q14",
-    oracle="""
+    oracle=f"""
 SELECT ROUND(
-  (100.0 * (CAST(SUM(CAST((CASE WHEN (CASE WHEN p.p_type = 'PROMO'
-                 THEN (CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END)
-                 ELSE 0 END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN p.p_type = 'PROMO'
-                 THEN (CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END)
-                 ELSE 0 END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN p.p_type = 'PROMO'
-                 THEN (CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END)
-                 ELSE 0 END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) AS DOUBLE) / 1.0e6))
-        / (CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) AS DOUBLE) / 1.0e6), 6) AS promo_revenue_pct
+  (100.0 * ({sql_exact_sum(f"CASE WHEN p.p_type = 'PROMO' THEN {sql_finite('l.l_extendedprice * (1 - l.l_discount)')} ELSE 0 END", 25, 6, guard=False)}))
+        / ({sql_exact_sum("l.l_extendedprice * (1 - l.l_discount)", 25, 6)}), 6) AS promo_revenue_pct
 FROM lineitem l
 JOIN part p ON l.l_partkey = p.p_partkey
 WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
@@ -451,10 +447,10 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q8",
-    oracle="""
+    oracle=f"""
 SELECT o_year,
-       ROUND((CAST(SUM(CAST((CASE WHEN (CASE WHEN nation = 'NATION_3' THEN (CASE WHEN abs(volume) < 1.0e12 THEN volume END) ELSE 0 END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN nation = 'NATION_3' THEN (CASE WHEN abs(volume) < 1.0e12 THEN volume END) ELSE 0 END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN nation = 'NATION_3' THEN (CASE WHEN abs(volume) < 1.0e12 THEN volume END) ELSE 0 END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) AS DOUBLE) / 1.0e6)
-           / (CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(volume) < 1.0e12 THEN volume END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(volume) < 1.0e12 THEN volume END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(volume) < 1.0e12 THEN volume END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) AS DOUBLE) / 1.0e6), 6) AS mkt_share
+       ROUND(({sql_exact_sum(f"CASE WHEN nation = 'NATION_3' THEN {sql_finite('volume')} ELSE 0 END", 25, 6, guard=False)})
+           / ({sql_exact_sum("volume", 25, 6)}), 6) AS mkt_share
 FROM (
   SELECT CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
          l.l_extendedprice * (1 - l.l_discount) AS volume,
@@ -587,13 +583,13 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q22",
-    oracle="""
+    oracle=f"""
 SELECT n_grp, CAST(COUNT(*) AS BIGINT) AS numcust,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(c_acctbal) < 1.0e15 THEN c_acctbal END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(c_acctbal) < 1.0e15 THEN c_acctbal END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(c_acctbal) < 1.0e15 THEN c_acctbal END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS totacctbal
+       {sql_dsum("c_acctbal", "totacctbal")}
 FROM (
   SELECT CAST(c.c_nationkey % 5 AS BIGINT) AS n_grp, c.c_acctbal
   FROM customer c
-  WHERE c.c_acctbal > (SELECT CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(c_acctbal) < 1.0e15 THEN c_acctbal END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(c_acctbal) < 1.0e15 THEN c_acctbal END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(c_acctbal) < 1.0e15 THEN c_acctbal END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2
+  WHERE c.c_acctbal > (SELECT {sql_exact_sum("c_acctbal")}
                               / COUNT(c_acctbal)
                        FROM customer WHERE c_acctbal > 0.0)
     AND NOT EXISTS (SELECT 1 FROM orders o
@@ -754,17 +750,14 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q17",
-    oracle="""
-SELECT ROUND(CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(l.l_extendedprice) < 1.0e12 THEN l.l_extendedprice END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(l.l_extendedprice) < 1.0e12 THEN l.l_extendedprice END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(l.l_extendedprice) < 1.0e12 THEN l.l_extendedprice END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) AS DOUBLE) / 1.0e6
+    oracle=f"""
+SELECT ROUND({sql_exact_sum("l.l_extendedprice", 25, 6)}
              / 7.0, 6) AS avg_yearly
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
 WHERE p.p_brand = 'Brand#3'
   AND l.l_quantity < 0.2 * (
-    SELECT CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(l2.l_quantity) < 1.0e15
-                          THEN l2.l_quantity END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(l2.l_quantity) < 1.0e15
-                          THEN l2.l_quantity END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(l2.l_quantity) < 1.0e15
-                          THEN l2.l_quantity END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2
+    SELECT {sql_exact_sum("l2.l_quantity")}
            / COUNT(l2.l_quantity)
     FROM lineitem l2 WHERE l2.l_partkey = l.l_partkey)
 """,
@@ -805,8 +798,8 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q19",
-    oracle="""
-SELECT CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(l.l_extendedprice * (1 - l.l_discount)) < 1.0e12 THEN l.l_extendedprice * (1 - l.l_discount) END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) AS DOUBLE) / 1.0e6 AS revenue
+    oracle=f"""
+SELECT {sql_dsum("l.l_extendedprice * (1 - l.l_discount)", "revenue", 25, 6)}
 FROM lineitem l
 JOIN part p ON p.p_partkey = l.l_partkey
 WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 5
@@ -954,10 +947,10 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 # doubles, and the quantity sum goes through the decimal route, so the
 # relation is bit-identical cross-engine and partition-count-invariant.
 
-_PS_CTE = """
+_PS_CTE = f"""
 ps AS (
   SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS ps_availqty,
+         {sql_dsum("l_quantity", "ps_availqty")},
          MIN(l_extendedprice) AS ps_supplycost
   FROM lineitem
   GROUP BY l_partkey, l_suppkey
@@ -1052,8 +1045,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH {_PS_CTE},
 agg AS (
   SELECT ps.ps_partkey,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(ps.ps_supplycost * ps.ps_availqty) < 1.0e12 THEN ps.ps_supplycost * ps.ps_availqty END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(ps.ps_supplycost * ps.ps_availqty) < 1.0e12 THEN ps.ps_supplycost * ps.ps_availqty END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(ps.ps_supplycost * ps.ps_availqty) < 1.0e12 THEN ps.ps_supplycost * ps.ps_availqty END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0)))
-              AS DOUBLE) / 1.0e6 AS part_value
+         {sql_dsum("ps.ps_supplycost * ps.ps_availqty", "part_value", 25, 6)}
   FROM ps
   JOIN supplier s ON s.s_suppkey = ps.ps_suppkey
   JOIN nation n ON n.n_nationkey = s.s_nationkey
@@ -1062,7 +1054,7 @@ agg AS (
 ),
 win AS (
   SELECT ps_partkey, part_value,
-         CAST(SUM(CAST((CASE WHEN part_value * 1.0e6 >= 0 THEN CAST(FLOOR(ABS(part_value * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS(part_value * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(25,0))) OVER () AS DOUBLE) / 1.0e6 AS total,
+         {sql_exact_sum("part_value", 25, 6, over="()", guard=False)} AS total,
          COUNT(*) OVER () AS n_parts
   FROM agg
 )
@@ -1168,17 +1160,11 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q20",
-    oracle="""
+    oracle=f"""
 WITH ps AS (
   SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS ps_availqty,
-         CAST(SUM(CAST((CASE WHEN (CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
-                             AND l_shipdate <  TIMESTAMP '1997-01-01'
-                            THEN (CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) ELSE 0.0 END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
-                             AND l_shipdate <  TIMESTAMP '1997-01-01'
-                            THEN (CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) ELSE 0.0 END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
-                             AND l_shipdate <  TIMESTAMP '1997-01-01'
-                            THEN (CASE WHEN abs(l_quantity) < 1.0e15 THEN l_quantity END) ELSE 0.0 END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e2 AS qty_1996
+         {sql_dsum("l_quantity", "ps_availqty")},
+         {sql_exact_sum(f"CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01' THEN {sql_finite('l_quantity', 15)} ELSE 0.0 END", guard=False)} AS qty_1996
   FROM lineitem
   GROUP BY l_partkey, l_suppkey
 )

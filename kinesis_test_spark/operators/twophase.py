@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite
+from kinesis_test_spark.functions.exact import cents, finite, sql_exact_sum
 from kinesis_test_spark.operators.sessionize import GAP_MS, SESSIONIZE_ORACLE
 from kinesis_test_spark.operators.windows import TRANSITIONS_ORACLE
 from kinesis_test_spark.registry import query
@@ -189,10 +189,9 @@ def q_event_transitions_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the bounded n_last3 frame (a 3-row frame crosses chunk edges by overlap
 # replication, a different pattern; the prefix sum is the one the verdict
 # named). Placement-independent NULLS FIRST encoding per q_window_lag.
-_CUMSUM_ORACLE = """
+_CUMSUM_ORACLE = f"""
 SELECT event_id, user_id, ts,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) OVER w
-            AS DOUBLE) / 1.0e6 AS running_value
+       {sql_exact_sum("value", 18, 6, over="w")} AS running_value
 FROM events
 WINDOW w AS (PARTITION BY user_id
              ORDER BY (ts IS NOT NULL) ASC, COALESCE(ts, TIMESTAMP '1970-01-01') ASC,

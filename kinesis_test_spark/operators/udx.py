@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
+from kinesis_test_spark.functions.exact import sql_finite
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, views
 
@@ -135,7 +136,7 @@ def q_udtf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_grouped_map",
-    oracle="""
+    oracle=f"""
 SELECT event_id, event_type,
        -- z over the GUARDED value: a 1e20 input's z is pure float-division
        -- noise (pandas and SQL disagree in the last ULP at e18 magnitude,
@@ -152,8 +153,7 @@ SELECT event_id, event_type,
                        / stddev_samp(fv) OVER (PARTITION BY event_type), 4)
        END AS value_z
 FROM (SELECT event_id, event_type, value,
-             CASE WHEN abs(value) < 1.0e12
-                  THEN value END AS fv
+             {sql_finite("value")} AS fv
       FROM events)
 """,
 )

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite
+from kinesis_test_spark.functions.exact import cents, finite, sql_exact_sum, sql_finite
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -84,11 +84,10 @@ def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_frame",
-    oracle="""
+    oracle=f"""
 SELECT event_id, user_id, ts,
        -- placement-independent NULLS FIRST encoding (see q_window_lag)
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) OVER w
-            AS DOUBLE) / 1.0e6 AS running_value,
+       {sql_exact_sum("value", 18, 6, over="w")} AS running_value,
        COUNT(*) OVER
             (PARTITION BY user_id
              ORDER BY (ts IS NOT NULL) ASC, COALESCE(ts, TIMESTAMP '1970-01-01') ASC,
@@ -182,11 +181,11 @@ def q_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_range_frame",
-    oracle="""
+    oracle=f"""
 SELECT event_id, user_id, ts,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) OVER
-            (PARTITION BY user_id ORDER BY (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000)
-             RANGE BETWEEN 300000 PRECEDING AND CURRENT ROW) AS DOUBLE) / 1.0e6
+       {sql_exact_sum("value", 18, 6, over=(
+            "(PARTITION BY user_id ORDER BY (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000)"
+            " RANGE BETWEEN 300000 PRECEDING AND CURRENT ROW)"))}
          AS trailing_5m_value,
        COUNT(*) OVER
             (PARTITION BY user_id ORDER BY (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000)
@@ -452,7 +451,7 @@ def q_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_rolling_median",
-    oracle="""
+    oracle=f"""
 SELECT event_id, user_id,
        -- + 0.0 normalizes IEEE negative zero (edge_negzero): DuckDB's
        -- quantile_cont returns the -0.0 ELEMENT where Spark's percentile
@@ -465,8 +464,7 @@ SELECT event_id, user_id,
                   (event_id IS NOT NULL) ASC, COALESCE(event_id, 0) ASC
          ROWS BETWEEN 4 PRECEDING AND CURRENT ROW), 6) + 0.0 AS roll_med
 FROM (SELECT event_id, user_id, ts,
-             CASE WHEN abs(value) < 1.0e12
-                  THEN value END AS fv
+             {sql_finite("value")} AS fv
       FROM events)
 """,
 )
@@ -498,7 +496,7 @@ def q_window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_time_weighted_avg",
-    oracle="""
+    oracle=f"""
 WITH seg AS (
   SELECT user_id, value,
          (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) AS t0,
@@ -511,7 +509,7 @@ held AS (
   SELECT user_id, value, t1 - t0 AS dur_ms FROM seg WHERE t1 IS NOT NULL)
 SELECT user_id,
        CAST(SUM(dur_ms) AS BIGINT) AS span_ms,
-       ROUND(CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value * dur_ms) < 1.0e12 THEN value * dur_ms END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value * dur_ms) < 1.0e12 THEN value * dur_ms END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value * dur_ms) < 1.0e12 THEN value * dur_ms END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(28,0))) AS DOUBLE) / 1.0e6
+       ROUND({sql_exact_sum("value * dur_ms", 28, 6)}
              / NULLIF(SUM(dur_ms), 0), 6) AS twa_value,
        CAST(COUNT(*) AS BIGINT) AS n_segments
 FROM held GROUP BY user_id ORDER BY user_id

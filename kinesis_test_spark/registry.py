@@ -9,9 +9,10 @@ Determinism contract (what makes the driver's order-insensitive value-hash
 stable across two engines):
   * every computed column is explicitly aliased, identically on both sides;
   * floating-point AGGREGATES go through exact decimal arithmetic
-    (``CAST(x AS DECIMAL(p,s))`` → sum → ``CAST(... AS DOUBLE)``) so the
-    result is independent of partial-aggregation order — double summation
-    order differs between Spark's partial/final aggs and DuckDB;
+    (``functions/exact.py``: ``dsum``/``davg`` in Spark, the ``sql_*``
+    helpers in SQL) so the result is independent of partial-aggregation
+    order — double summation order differs between Spark's partial/final
+    aggs and DuckDB;
   * window / top-k orderings always carry a unique tie-break key;
   * set-valued results are order-normalized (array_sort / list_sort) or
     serialized to strings.

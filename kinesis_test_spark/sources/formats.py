@@ -13,13 +13,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_test_spark.functions.exact import cents, finite
+from kinesis_test_spark.functions.exact import cents, finite, sql_dsum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
-_ORACLE = """
+_ORACLE = f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value,
+       {sql_dsum("value", "sum_value", 18, 6)},
        CAST(SUM(user_id) AS BIGINT) AS sum_users
 FROM events GROUP BY event_type
 """
@@ -425,9 +425,9 @@ def _stage_logged_table(spark: SparkSession, sf_dir: str):
 
 @query(
     "q_table_snapshot",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value,
+       {sql_dsum("value", "sum_value", 18, 6)},
        CAST(SUM(user_id) AS BIGINT) AS sum_users
 FROM events WHERE user_id % 7 <> 0 OR user_id IS NULL GROUP BY event_type
 """,
@@ -448,9 +448,9 @@ def q_table_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_table_time_travel",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value,
+       {sql_dsum("value", "sum_value", 18, 6)},
        CAST(SUM(user_id) AS BIGINT) AS sum_users
 FROM events GROUP BY event_type
 """,
@@ -578,7 +578,7 @@ GDPR_TARGET_USER = 7
     "q_table_gdpr",
     oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value,
+       {sql_dsum("value", "sum_value", 18, 6)},
        CAST(SUM(user_id) AS BIGINT) AS sum_users
 FROM events WHERE user_id <> {GDPR_TARGET_USER} OR user_id IS NULL
 GROUP BY event_type
@@ -694,9 +694,9 @@ COMPACT_EXEC_TARGET = 3  # target: ~3 source files per compacted output
 
 @query(
     "q_table_compact",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value,
+       {sql_dsum("value", "sum_value", 18, 6)},
        CAST(SUM(user_id) AS BIGINT) AS sum_users
 FROM events GROUP BY event_type
 """,
@@ -758,9 +758,9 @@ def q_table_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_table_evolve",
-    oracle="""
+    oracle=f"""
 SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("value", "sum_value", 18, 6)}
 FROM (SELECT CASE WHEN ((user_id % 2) + 2) % 2 = 1 THEN 'backfill_v1' END AS source,
              value
       FROM events)

@@ -22,7 +22,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite
+from kinesis_test_spark.functions.exact import (
+    cents, finite, sql_cents, sql_dsum, sql_finite
+)
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources.tables import normalize_ts
 from kinesis_test_spark.streaming.pipeline import (
@@ -374,9 +376,9 @@ def s_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s_json_ingest",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("value", "sum_value", 18, 6)}
 FROM events GROUP BY event_type
 """,
 )
@@ -424,10 +426,9 @@ def s_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s_custom_state",
-    oracle="""
+    oracle=f"""
 SELECT user_id, COUNT(*) AS n_events,
-       ROUND(MAX(CASE WHEN abs(value) < 1.0e12
-                 THEN value END), 6) AS max_value
+       ROUND(MAX({sql_finite("value")}), 6) AS max_value
 FROM events GROUP BY user_id
 """,
 )
@@ -496,9 +497,9 @@ def s_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s_static_join",
-    oracle="""
+    oracle=f"""
 SELECT n.n_name, COUNT(*) AS n_events,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(e.value) < 1.0e12 THEN e.value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(e.value) < 1.0e12 THEN e.value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(e.value) < 1.0e12 THEN e.value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("e.value", "sum_value", 18, 6)}
 FROM events e JOIN nation n ON e.user_id % 25 = n.n_nationkey
 GROUP BY n.n_name
 """,
@@ -1320,11 +1321,11 @@ def s_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s_observe",
-    oracle="""
+    oracle=f"""
 SELECT CAST(COUNT(DISTINCT CASE WHEN user_id IS NULL THEN 0
                  ELSE ((user_id % 4) + 4) % 4 END) AS BIGINT) AS n_batches,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COALESCE(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e15 THEN value END) * 1.0e2) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))), 0) AS DOUBLE) / 1.0e2
+       CAST(COALESCE(SUM(CAST({sql_cents(sql_finite("value", 15), 2)} AS DECIMAL(18,0))), 0) AS DOUBLE) / 1.0e2
          AS total_value
 FROM events
 """,
@@ -1384,9 +1385,9 @@ def s_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s_table_stream",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("value", "sum_value", 18, 6)}
 FROM events GROUP BY event_type
 """,
 )
@@ -1459,9 +1460,9 @@ def s_table_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "s_avro_ingest",
-    oracle="""
+    oracle=f"""
 SELECT event_type, COUNT(*) AS n,
-       CAST(SUM(CAST((CASE WHEN (CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6 >= 0 THEN CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) ELSE -CAST(FLOOR(ABS((CASE WHEN abs(value) < 1.0e12 THEN value END) * 1.0e6) + 0.5) AS BIGINT) END) AS DECIMAL(18,0))) AS DOUBLE) / 1.0e6 AS sum_value
+       {sql_dsum("value", "sum_value", 18, 6)}
 FROM events GROUP BY event_type
 """,
 )

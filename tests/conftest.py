@@ -11,7 +11,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 # reference golden cases). Everything else (edge corpora, streaming,
 # codecs, properties) carries the `slow` marker; the FULL suite remains
 # the pre-commit / end-of-round bar.
-_FAST_MODULES = {"test_parity", "test_plans", "test_reference_golden"}
+_FAST_MODULES = {"test_parity", "test_plans", "test_reference_golden", "test_oracle_helpers"}
 
 
 def pytest_collection_modifyitems(config, items):

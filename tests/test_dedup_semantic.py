@@ -12,14 +12,17 @@ fixture scale, a recall dial only on cells deeper than CAP ranks.
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from kinesis_test_spark.streaming.pipeline import local_rows
 from kinesis_test_spark.operators.dedup import (
     SEM_CELL_CAP,
     SEM_DUP_THRESHOLD,
+    _pair_cos_batched,
     _sem_candidates,
     _sem_ranked,
 )
+from kinesis_test_spark.operators.similarity import DIM
 
 
 def _assigned_frame(spark, rows):
@@ -31,6 +34,19 @@ def _assigned_frame(spark, rows):
     return local_rows(
         spark, data, "vec_id bigint, cid bigint, cent_sim double, e array<double>, nrm double"
     )
+
+
+def _band_dups(ranked, keep):
+    """Banded candidate pairs at or above the near-dup threshold, scored by
+    the production pair-cosine kernel."""
+    return _pair_cos_batched(_sem_candidates(ranked), keep).filter(
+        F.col("cos") >= SEM_DUP_THRESHOLD
+    )
+
+
+def _unit(i: int) -> list[float]:
+    """The i-th DIM-wide basis vector (the kernel reads DIM components)."""
+    return [float(i == j) for j in range(DIM)]
 
 
 def _band_count(m: int, cap: int) -> int:
@@ -71,7 +87,7 @@ def test_banded_verdict_equals_bruteforce_when_cap_unbound(spark):
     cosine far from the threshold (≈1 for planted dups, ≈0 across bases),
     so float rounding cannot flip a verdict."""
     rng = np.random.default_rng(7)
-    dim, n_base = 16, 12
+    dim, n_base = DIM, 12
     centroid = np.ones(dim)
     rows, vecs = [], {}
     vid = 0
@@ -107,16 +123,9 @@ def test_banded_verdict_equals_bruteforce_when_cap_unbound(spark):
                 expect_dropped.add(a)
                 break
 
-    from kinesis_test_spark.operators.dedup import _sem_pair_cos
-
     ranked = _sem_ranked(_assigned_frame(spark, rows))
     got_dropped = {
-        r.vec_id
-        for r in _sem_candidates(ranked)
-        .filter(_sem_pair_cos() >= SEM_DUP_THRESHOLD)
-        .select("vec_id")
-        .distinct()
-        .collect()
+        r.vec_id for r in _band_dups(ranked, ["vec_id"]).select("vec_id").distinct().collect()
     }
     assert got_dropped == expect_dropped
     assert len(expect_dropped) > 0  # the corpus actually plants dups
@@ -128,31 +137,20 @@ def test_band_can_miss_a_rank_distant_pair(spark):
     (and would be counted by the unbounded truth side). Two copies of the
     same vector get artificial cent_sim scores CAP+2 ranks apart with
     orthogonal fillers between them — the band must NOT pair them."""
-    from pyspark.sql import functions as F
-
     n_fill = SEM_CELL_CAP + 1
-    rows = [(0, 0, 0.0, [1.0, 0.0, 0.0])]  # dup A, most keepable
+    rows = [(0, 0, 0.0, _unit(0))]  # dup A, most keepable
     for i in range(n_fill):  # orthogonal fillers occupy the band
-        rows.append((i + 1, 0, float(i + 1), [0.0, 1.0, 0.0]))
-    rows.append((n_fill + 1, 0, float(n_fill + 1), [1.0, 0.0, 0.0]))  # dup B
+        rows.append((i + 1, 0, float(i + 1), _unit(1)))
+    rows.append((n_fill + 1, 0, float(n_fill + 1), _unit(0)))  # dup B
     ranked = _sem_ranked(_assigned_frame(spark, rows))
-    from kinesis_test_spark.operators.dedup import _sem_pair_cos
-
     banded = {
         (min(r.vec_id, r.vec_b), max(r.vec_id, r.vec_b))
-        for r in _sem_candidates(ranked)
-        .filter(_sem_pair_cos() >= SEM_DUP_THRESHOLD)
-        .select("vec_id", "vec_b")
-        .collect()
+        for r in _band_dups(ranked, ["vec_id", "vec_b"]).collect()
     }
     assert (0, n_fill + 1) not in banded  # the true pair is outside the band
     # sanity: with the fillers removed the band finds it
-    close = [r for r in rows if r[3] == [1.0, 0.0, 0.0]]
-    found = (
-        _sem_candidates(_sem_ranked(_assigned_frame(spark, close)))
-        .filter(_sem_pair_cos() >= SEM_DUP_THRESHOLD)
-        .count()
-    )
+    close = [r for r in rows if r[3] == _unit(0)]
+    found = _band_dups(_sem_ranked(_assigned_frame(spark, close)), ["vec_id"]).count()
     assert found == 1
 
 

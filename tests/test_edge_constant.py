@@ -24,7 +24,7 @@ observable beside the dirt):
     DISTINCT ids — maximum content duplication, the template-blast
     shape (NOT the dupkeys corpus: identities differ, content ties).
 
-The full-surface sweep lives in tools/probe_constant.py (which imports
+The full-surface sweep lives in tools/battery.py --class constant (which imports
 ``plant_constant`` from here — one source of truth for the corpus);
 this test pins the keys the probe ever flagged plus property checks on
 the dedup family's behavior under a 15-clone content cluster.

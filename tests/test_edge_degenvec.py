@@ -46,7 +46,7 @@ none planted vectors whose VALUES are degenerate while fully valid:
     drift-free regime (m ≲ 2.25e6) and products inside the (28,16)
     integer capacity — so this vector QUARANTINES symmetrically.
 
-The full-surface sweep lives in tools/probe_degenvec.py (imports
+The full-surface sweep lives in tools/battery.py --class degenvec (imports
 ``plant_degenvec`` from here — one source of truth); this test pins the
 embedding-consumer families against the corpus.
 """

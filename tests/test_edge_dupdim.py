@@ -53,7 +53,6 @@ rows never join.
 
 from __future__ import annotations
 
-import os
 import shutil
 from pathlib import Path
 
@@ -129,12 +128,10 @@ def plant_dupdim(src: str, dest: Path) -> None:
 
 
 @pytest.fixture(scope="module")
-def dupdim_dir(spark):
-    d = Path(f"/root/repo/.scratch/dupdim_sf_{os.getpid()}")
-    shutil.rmtree(d, ignore_errors=True)
-    plant_dupdim("/root/testdata/sf0.001", d)
-    yield str(d)
-    shutil.rmtree(d, ignore_errors=True)
+def dupdim_dir(spark, sf_dir, tmp_path_factory):
+    d = tmp_path_factory.mktemp("dupdim_sf")
+    plant_dupdim(sf_dir, d)
+    return str(d)
 
 
 # The keys whose shape is most exposed to dim-PK assumptions: the full

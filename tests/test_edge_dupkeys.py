@@ -25,7 +25,7 @@ arrival-order-defined — not expressible in the batch oracle. The
 corpus keeps payloads byte-identical so every surviving choice is
 canonical.
 
-The full-surface sweep lives in tools/probe_dupkeys.py (which imports
+The full-surface sweep lives in tools/battery.py --class dupkeys (which imports
 ``plant_dupkeys`` from here — one source of truth for the corpus); this
 test pins the keys that ever diverged.
 """

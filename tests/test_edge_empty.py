@@ -15,7 +15,7 @@ The classes this corpus hides:
   * global-total denominators that were only NULL-guarded, not
     empty-guarded
 
-The full-surface sweep lives in tools/probe_empty.py (which imports
+The full-surface sweep lives in tools/battery.py --class empty (which imports
 ``plant_empty`` from here); this test pins the keys that ever diverged.
 """
 
@@ -48,7 +48,7 @@ def empty_sf_dir(tmp_path_factory):
 
 
 # Every key the empty-input probe ever flagged (the round-8 campaign's
-# 16/263 first sweep; see tools/probe_empty.py — 0/263 after the fixes).
+# 16/263 first sweep; see tools/battery.py --class empty — 0/263 after the fixes).
 # Failure classes: Spark emits no grand-total row over an empty relation
 # while SQL emits one (the 4 grouping-set keys — oracles pin Spark's
 # choice via HAVING COUNT(*)>0); .first()[0] None arithmetic in staging

@@ -29,7 +29,7 @@ The corpus plants both diverger shapes plus a genuine cents tie
 and o_totalprice, and a FRACTIONAL quantity 19.5 (the q_sql_script CEIL
 bucket class — the loop's qty <= k admits 19.5 from k = 20, not 19).
 
-Full-surface sweep: tools/probe_fractional.py. In-suite pins gate the
+Full-surface sweep: tools/battery.py --class fractional. In-suite pins gate the
 dsum/davg consumers the class exists for.
 """
 

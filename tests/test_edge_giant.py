@@ -12,7 +12,7 @@ pair math, string-length cutoffs) must not split the engines; (b)
 TOTALITY — no operator may error or hang on a row that is merely large
 (at 100 TB, megabyte documents are ordinary).
 
-Corpus construction (plant_giant) is shared with tools/probe_giant.py —
+Corpus construction (plant_giant) is shared with tools/battery.py --class giant —
 the standing pins here cover the size-sensitive key families.
 """
 

@@ -108,7 +108,7 @@ def hotkey_sf_dir(tmp_path_factory):
 
 
 # The skew-sensitive consumer families, kept exercised in-suite (the full
-# 267-key sweep runs via tools/probe_hotkey.py): per-user groupBy /
+# 267-key sweep runs via tools/battery.py --class hotkey): per-user groupBy /
 # window / session chains, per-source doc pipelines, the dedup families
 # whose pair spaces the hot domain stresses, and the skew-facing
 # operators themselves.

@@ -10,7 +10,7 @@ Two attack surfaces:
    the id↔time anti-correlation a backlogged shard replays with. A batch
    oracle never cares; any engine path that implicitly assumed "later
    file ⇒ later time" does. Swept over the whole surface by
-   tools/probe_late.py.
+   tools/battery.py --class late.
 
 2. **Arrival experiments** (the pins below): purpose-built micro-streams
    delivering rows N minutes past their event-time order across
@@ -85,7 +85,7 @@ def plant_late(src: str, dest: Path) -> None:
 
 
 # --- corpus pins (representative multi-batch rigs; the full surface is
-# --- swept by tools/probe_late.py) --------------------------------------
+# --- swept by tools/battery.py --class late) ---------------------------
 
 LATE_CORPUS_KEYS = [
     "s_checkpoint",      # event_id-range split: last batch now carries Jan-1 ts

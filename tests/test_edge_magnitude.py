@@ -15,7 +15,7 @@ via the same guard (`abs(x) < bound` subsumes NaN/±Inf on both engines —
 NaN compares greater than everything in Spark AND DuckDB, so
 abs(NaN) < b is FALSE in both).
 
-The full-surface sweep lives in tools/probe_magnitude.py (imports
+The full-surface sweep lives in tools/battery.py --class magnitude (imports
 ``plant_magnitude`` from here); this test pins the keys that ever
 diverged.
 """

@@ -19,7 +19,7 @@ data is non-negative, so sign assumptions hide:
   * math funcs on negative values: ln/log10/sqrt of a negative raises in
     DuckDB but yields NULL/NaN in Spark — oracles guard explicitly
 
-The full-surface sweep lives in tools/probe_negatives.py (which imports
+The full-surface sweep lives in tools/battery.py --class negatives (which imports
 ``plant_negatives`` from here — one source of truth for the corpus); this
 test pins the keys that ever diverged.
 """

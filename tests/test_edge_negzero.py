@@ -22,7 +22,7 @@ symmetric by construction (both engines return the stored bits).
 
 The corpus plants -0.0 into events.value (a whole user, plus mixed
 -0.0/+0.0 frames), lineitem monetary doubles, and embedding components.
-Swept over the whole surface by tools/probe_negzero.py.
+Swept over the whole surface by tools/battery.py --class negzero.
 """
 
 from __future__ import annotations
@@ -110,7 +110,7 @@ def plant_negzero(src: str, dest: Path) -> None:
 
 
 # Keys that compute zeros over the planted frames (the class's standing
-# in-suite pins; the full surface is swept by tools/probe_negzero.py).
+# in-suite pins; the full surface is swept by tools/battery.py --class negzero).
 NEGZERO_KEYS = [
     "q_window_rolling_median",  # the key the LATE corpus originally tripped
     "q_agg_group",

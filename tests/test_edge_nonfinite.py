@@ -29,7 +29,7 @@ covers. Bounds are route-derived: min(10^(p-s), 1e15) next to a
 DECIMAL(p,s) cast (functions/exact.finite/sql_finite), the default 1e12
 (functions/exact.EXACT_MAX) for statistics/rendering guards.
 
-The full-surface sweep lives in tools/probe_nonfinite.py (which imports
+The full-surface sweep lives in tools/battery.py --class nonfinite (which imports
 ``plant_nonfinite`` from here — one source of truth for the corpus); this
 test pins the keys that ever diverged.
 """

@@ -15,7 +15,7 @@ own oracle gate.  Covers the four latent classes closed in rounds 7-8:
   5. codec rigs fed None             (fixed r8: NULL payloads quarantine)
   6. pandas dtype drift under NULLs  (fixed r8: symmetric NULL presence)
 
-The full-surface sweep lives in tools/probe_nulls.py (which imports
+The full-surface sweep lives in tools/battery.py --class nulls (which imports
 ``plant_nulls`` from here — one source of truth for the corpus); this test
 pins the keys that ever diverged, so a regression in any of them fails CI,
 not a future probe.

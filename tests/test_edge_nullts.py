@@ -25,7 +25,7 @@ session, and partition key, and the engines disagree on each:
     NULL lag ts is a session start; a NULL current ts never is, unless
     the lag is NULL)
 
-The full-surface sweep lives in tools/probe_nullts.py (which imports
+The full-surface sweep lives in tools/battery.py --class nullts (which imports
 ``plant_nullts`` from here — one source of truth for the corpus); this
 test pins the keys that ever diverged.
 """

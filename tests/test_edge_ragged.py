@@ -23,7 +23,7 @@ assumptions hide:
     quarantine to NULL identically on both engines, the same treatment
     as NULL/non-finite/huge components
 
-The full-surface sweep lives in tools/probe_ragged.py (which imports
+The full-surface sweep lives in tools/battery.py --class ragged (which imports
 ``plant_ragged`` from here — one source of truth for the corpus); this
 test pins the keys that ever diverged.
 """

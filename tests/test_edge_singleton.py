@@ -25,7 +25,7 @@ many identical rows). n=1 is its own regime:
 The single-row tables also make BROADCAST thresholds and zero-task
 stages common — scheduler edge paths the multi-row corpora never hit.
 
-Full-surface sweep: tools/probe_singleton.py (imports plant_singleton
+Full-surface sweep: tools/battery.py --class singleton (imports plant_singleton
 from here). In-suite pins below gate the families the first sweep
 flagged plus the canonical n=1 statistics consumers.
 """

@@ -31,7 +31,7 @@ and scale-6 .{6}5-boundary doubles in events.value (the r13 diverger
 class one scale up, exercising the window/table/flagship (18,6) routes
 that round 13's campaign missed and round 14 converted).
 
-Full-surface sweep: tools/probe_subgrain.py.  In-suite pins gate the
+Full-surface sweep: tools/battery.py --class subgrain.  In-suite pins gate the
 entropy/logprob/perplexity, centroid, and (18,6)-route consumers.
 """
 

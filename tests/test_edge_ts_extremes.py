@@ -25,7 +25,7 @@ stays invisible:
     floor correctly pre-epoch, date_format/strftime agree 1950-2200,
     floor(epoch_ms/N) agrees for negative epochs once the ms agree
 
-The full-surface sweep lives in tools/probe_ts.py (which imports
+The full-surface sweep lives in tools/battery.py --class ts_extremes (which imports
 ``plant_ts_extremes`` from here — one source of truth for the corpus);
 this test pins the keys that ever diverged.
 """

@@ -27,7 +27,7 @@ the engines' different Unicode tables stay invisible:
     binary UTF-8, regex \\s is ASCII-only (NBSP does NOT split) in both
     Java regex and RE2, md5/porthash hash the UTF-8 bytes
 
-The full-surface sweep lives in tools/probe_unicode.py (which imports
+The full-surface sweep lives in tools/battery.py --class unicode (which imports
 ``plant_unicode`` from here — one source of truth for the corpus); this
 test pins the keys that ever diverged.
 """

@@ -26,7 +26,7 @@ Planted (appended under doc_id 3000.., source 'edge-ws'):
     empty-doc class);
   * CRLF line endings embedded mid-text.
 
-The full-surface sweep lives in tools/probe_whitespace.py (imports
+The full-surface sweep lives in tools/battery.py --class whitespace (imports
 ``plant_whitespace`` from here — one source of truth); this test pins
 the keys the probe ever flagged.
 """

@@ -16,12 +16,14 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from kinesis_test_spark import registry  # noqa: E402
 
-SURVEY = "/root/repo/SURVEY.md"
+SURVEY = str(ROOT / "SURVEY.md")
 BEGIN = "<!-- registry-count:begin"
 END = "<!-- registry-count:end -->"
 

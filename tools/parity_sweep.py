@@ -11,9 +11,11 @@ only at sf0.1 and had passed ten rounds of sf0.001/sf0.01 sweeps by
 luck (EDGES.md round-10 note)."""
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
+sys.path.insert(0, str(ROOT / "tests"))
 
 from kinesis_test_spark import registry  # noqa: E402
 from kinesis_test_spark.oracle import check_query  # noqa: E402
