@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite, sql_dsum
+from kinesis_test_spark.functions.exact import dsum, sql_dsum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -76,10 +76,7 @@ def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_events"),
             F.countDistinct("user_id").alias("n_users"),
-            (
-                F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).cast("double")
-                / F.lit(1000000.0)
-            ).alias("sum_value"),
+            dsum("value", "sum_value", 18, 6),
         )
         .orderBy(F.col("n_events").desc(), "hour_key", "event_type")
         .limit(500)

@@ -11,11 +11,16 @@ Pattern (r14 floor-LONG form):
     Spark :  F.sum(cents(x, s).cast("decimal(p,0)")).cast("double") / 10^s
     SQL   :  CAST(SUM(CAST({sql_cents(x, s)} AS DECIMAL(p,0))) AS DOUBLE) / 10^s
 
-This module is the only place that spells the SQL form. Oracle strings and
-Spark-side SQL texts (``spark.sql``, ``F.expr``) interpolate the ``sql_*``
-helpers below and never paste their expansion; ``sql_exact_sum`` covers the
-un-aliased, windowed and conditional sums, ``sql_dsum``/``sql_davg`` the
-aliased ones. ``tests/test_oracle_helpers.py`` fails on any pasted copy.
+This module is the only place that spells either form. Spark Column code
+calls ``exact_sum`` (un-aliased; ``over=`` for window sums, ``guard=False``
+for already-guarded or bounded inputs), ``dsum``/``davg`` (aliased),
+``cents_sum`` (the DECIMAL(p,0) partial of a two-level sum) or
+``cents_term`` (one row's quantized term), never ``cents`` itself. Oracle
+strings and Spark-side SQL texts (``spark.sql``, ``F.expr``) interpolate
+the ``sql_*`` mirrors and never paste their expansion: ``sql_exact_sum``
+for the un-aliased, windowed and conditional sums, ``sql_dsum``/
+``sql_davg`` for the aliased ones. ``tests/test_oracle_helpers.py`` fails
+on a ``cents(`` call or a pasted SQL copy outside this module.
 
 WHY quantization is sign·FLOOR(|x·10^s| + 0.5) through BIGINT rather than
 either earlier form:
@@ -61,7 +66,7 @@ bound is unchanged.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 # The exact-aggregation domain: |x| < 1e12. One bound quarantines every
@@ -144,19 +149,57 @@ def sql_cents(expr: str, scale: int) -> str:
     return f"(CASE WHEN ({expr}) * 1.0e{scale} >= 0 THEN {mag} ELSE -{mag} END)"
 
 
-def dsum(col: Column | str, alias: str, prec: int = 18, scale: int = 2) -> Column:
-    """Order-independent SUM over a double column, returned as double.
+def cents_term(
+    col: Column | str, prec: int = 18, scale: int = 2, guard: bool = True
+) -> Column:
+    """One row's quantized cents as DECIMAL(prec,0), the summand of every
+    exact sum. For split routes that quantize per row before a join or a
+    projection (the PageRank ``term``, the text entropy term, the
+    ``scalar`` decimal product). ``guard=False`` skips the route guard,
+    for inputs that are already guarded or bounded."""
+    c = F.col(col) if isinstance(col, str) else col
+    g = finite(c, route_exp(prec, scale)) if guard else c
+    return cents(g, scale).cast(f"decimal({prec},0)")
 
-    Inputs the route cannot represent are excluded explicitly (see
-    ``finite``; bound ``route_exp(prec, scale)``). Quantization via the
-    floor-LONG cents form (module docstring) — both the direct
+
+def cents_sum(
+    col: Column | str,
+    prec: int = 18,
+    scale: int = 2,
+    over: WindowSpec | None = None,
+    guard: bool = True,
+) -> Column:
+    """The DECIMAL(prec,0) cents sum before its rescale, for two-level
+    sums that re-aggregate exact partials (q_rollup's ``psum``, the
+    twophase chunk totals). ``over`` makes it a window aggregate."""
+    s = F.sum(cents_term(col, prec, scale, guard))
+    return s.over(over) if over is not None else s
+
+
+def exact_sum(
+    col: Column | str,
+    prec: int = 18,
+    scale: int = 2,
+    over: WindowSpec | None = None,
+    guard: bool = True,
+) -> Column:
+    """Order-independent SUM over a double column, returned as double and
+    un-aliased, for sums inside larger expressions (ratios, conditional
+    and windowed sums). Inputs the route cannot represent are excluded
+    explicitly (see ``finite``; bound ``route_exp(prec, scale)``);
+    ``guard=False`` takes an already-guarded or bounded input. Quantization
+    via the floor-LONG cents form (module docstring): both the direct
     DECIMAL(p,s) cast and a double→DECIMAL(p,0) cast of the cents are
-    engine-ambiguous (at the .{s}5 boundary / above 2^53 respectively)."""
-    c = finite(col, route_exp(prec, scale))
-    return (
-        F.sum(cents(c, scale).cast(f"decimal({prec},0)")).cast("double")
-        / F.lit(float(10**scale))
-    ).alias(alias)
+    engine-ambiguous (at the .{s}5 boundary / above 2^53 respectively).
+    Mirror: ``sql_exact_sum``."""
+    return cents_sum(col, prec, scale, over, guard).cast("double") / F.lit(
+        float(10**scale)
+    )
+
+
+def dsum(col: Column | str, alias: str, prec: int = 18, scale: int = 2) -> Column:
+    """Aliased ``exact_sum`` (mirror: ``sql_dsum``)."""
+    return exact_sum(col, prec, scale).alias(alias)
 
 
 def davg(col: Column | str, alias: str, prec: int = 18, scale: int = 2) -> Column:
@@ -164,12 +207,8 @@ def davg(col: Column | str, alias: str, prec: int = 18, scale: int = 2) -> Colum
 
     The count is over the SAME finite-guarded value as the sum — counting
     raw non-NULLs would divide a non-finite-excluded sum by a larger n."""
-    c = finite(col, route_exp(prec, scale))
-    return (
-        F.sum(cents(c, scale).cast(f"decimal({prec},0)")).cast("double")
-        / F.lit(float(10**scale))
-        / F.count(c)
-    ).alias(alias)
+    n = F.count(finite(col, route_exp(prec, scale)))
+    return (exact_sum(col, prec, scale) / n).alias(alias)
 
 
 def sql_exact_sum(

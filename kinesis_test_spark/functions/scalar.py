@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents, finite, sql_cents, sql_cents_mag, sql_finite
+    cents_term, finite, sql_cents, sql_cents_mag, sql_finite
 )
 from kinesis_test_spark.functions.porthash import ascii_lower, sql_ascii_lower
 from kinesis_test_spark.registry import query
@@ -230,8 +230,8 @@ def q_fn_math(spark: SparkSession, sf_dir: str) -> DataFrame:
             # product's DOUBLE conversion is deterministic only < 2^53
             F.abs(finite("l_extendedprice") * finite("l_quantity")) < F.lit(1.0e11),
             (
-                cents(finite("l_extendedprice"), 2).cast("decimal(18,0)")
-                * cents(finite("l_quantity"), 2).cast("decimal(18,0)")
+                cents_term(finite("l_extendedprice"), guard=False)
+                * cents_term(finite("l_quantity"), guard=False)
             ).cast("double")
             / F.lit(10000.0),
         ).alias("exact_product"),

@@ -41,7 +41,7 @@ from kinesis_test_spark.iterate import truncate_lineage
 from kinesis_test_spark.operators.similarity import (
     _SQL_VEC_E, _SQL_VEC_VALID, _dot, sql_vec_e, vec_valid
 )
-from kinesis_test_spark.functions.exact import cents, sql_exact_sum
+from kinesis_test_spark.functions.exact import cents_term, sql_exact_sum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import SQL_UNIQUE_DOCS, t, unique_docs
 
@@ -2344,7 +2344,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         contrib = edges.join(
             ranks.select(
                 F.col("node").alias("src"),
-                cents(F.col("r") / F.col("d"), 18).cast("decimal(28,0)").alias("term"),
+                cents_term(F.col("r") / F.col("d"), 28, 18, guard=False).alias("term"),
             ).hint("shuffle_hash"),
             F.col("u") == F.col("src"),
         ).select("v", "term")

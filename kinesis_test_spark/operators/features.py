@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents, finite, sql_dsum, sql_exact_sum, sql_finite
+    dsum, exact_sum, finite, sql_dsum, sql_exact_sum, sql_finite
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
@@ -113,15 +113,11 @@ def q_feature_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(is_type("click")).alias("n_clicks"),
         F.count(is_type("purchase")).alias("n_purchases"),
         F.count(is_type("error")).alias("n_errors"),
-        (
-            F.sum(
-                cents(
-                    F.when(F.col("event_type") == "purchase", finite(F.col("value")))
-                    .otherwise(F.lit(0.0)),
-                    6,
-                ).cast("decimal(18,0)")
-            ).cast("double")
-            / F.lit(1000000.0)
+        exact_sum(
+            F.when(F.col("event_type") == "purchase", finite(F.col("value"))).otherwise(F.lit(0.0)),
+            18,
+            6,
+            guard=False,
         ).alias("purchase_value"),
         F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("last_seen"),
     )
@@ -267,9 +263,7 @@ def q_cdc_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter((F.col("ts") >= lo) & (F.col("ts") < hi))
             .groupBy("user_id", "event_type")
             .agg(
-                (F.sum(cents(finite("value", 16), 2).cast("decimal(18,0)"))
-                .cast("double") / F.lit(100.0))
-                .alias(vk),
+                dsum("value", vk),
                 F.count(F.lit(1)).cast("bigint").alias(nk),
             )
             .select(

@@ -103,18 +103,6 @@ def pil_available() -> bool:
         return False
 
 
-def decode_batch_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Real media decode — requires a codec library. When Pillow is present
-    the registered q_mm_decode_real query uses _pil_decode_batch below; in
-    a codec-less build this raises so nobody silently gets fake dims."""
-    if not pil_available():
-        raise NotImplementedError(
-            "real image/audio decode needs codec libraries; use decode_batch "
-            "(deterministic stub) — the Spark plumbing is identical"
-        )
-    return _pil_decode_batch(batches)
-
-
 def _pil_png_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Encode one real PNG per doc (dims derived from doc_id) — the
     synthesizing half of the real-codec round trip."""

@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents, davg, dsum, finite, sql_cents, sql_davg, sql_dsum, sql_exact_sum,
-    sql_finite
+    cents_sum, davg, dsum, exact_sum, finite, route_exp, sql_cents, sql_davg,
+    sql_dsum, sql_exact_sum, sql_finite
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, views
@@ -1043,7 +1043,7 @@ def q_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dayofmonth("ts").cast("int").alias("d"),
     ).agg(
         F.count("*").alias("pn"),
-        F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).alias("psum"),
+        cents_sum("value", 18, 6).alias("psum"),
     )
     return daily.groupBy("y", "m").agg(
         F.sum("pn").alias("n"),
@@ -1133,7 +1133,7 @@ def q_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH stats AS (
   SELECT event_type,
-         {sql_exact_sum("value", 18, 6)} / COUNT(*) AS mu,
+         {sql_davg("value", "mu", 18, 6)},
          ROUND(stddev_samp({sql_finite("value")}), 6) AS sigma
   FROM events GROUP BY event_type)
 SELECT e.event_id, e.event_type, e.value,
@@ -1151,9 +1151,7 @@ def q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tripping ANSI division (CLAUDE.md: guard data-dependent denominators)."""
     ev = t(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
-        (
-            F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).cast("double") / F.lit(1000000.0) / F.count("*")
-        ).alias("mu"),
+        davg("value", "mu", 18, 6),
         F.round(F.stddev_samp(finite(F.col("value"))), 6).alias("sigma"),
     )
     z = F.round((F.col("value") - F.col("mu")) / F.col("sigma"), 4)
@@ -1237,9 +1235,7 @@ def q_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
-            (F.sum(cents(finite("o_totalprice", 12), 6).cast("decimal(25,0)"))
-            .cast("double") / F.lit(1000000.0))
-            .alias("seg_rev")
+            dsum("o_totalprice", "seg_rev", 25, 6)
         )
     )
     from pyspark.sql import Window
@@ -1342,8 +1338,8 @@ WITH assigned AS (
   FROM events WHERE event_type = 'purchase'),
 stats AS (
   SELECT variant,
-         CAST(COUNT(*) AS BIGINT) AS n,
-         {sql_exact_sum("value")} / COUNT(*) AS mean_v,
+         CAST(COUNT({sql_finite("value", route_exp(18, 2))}) AS BIGINT) AS n,
+         {sql_davg("value", "mean_v")},
          ROUND(VAR_SAMP({sql_finite("value")}), 6) AS var_v
   FROM assigned GROUP BY variant),
 wide AS (
@@ -1383,13 +1379,8 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     stats = assigned.groupBy("variant").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        (
-            F.sum(cents(finite("value", 16), 2).cast("decimal(18,0)"))
-            .cast("double")
-            / F.lit(100.0)
-            / F.count(F.lit(1))
-        ).alias("mean_v"),
+        F.count(finite("value", route_exp(18, 2))).cast("bigint").alias("n"),
+        davg("value", "mean_v"),
         F.round(F.var_samp(finite(F.col("value"))), 6).alias("var_v"),
     )
 
@@ -1462,7 +1453,7 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.groupBy("user_id").agg(
         F.max("ts").alias("last_seen"),
         F.count(F.lit(1)).cast("bigint").alias("freq"),
-        (F.sum(cents(finite("value", 16), 2).cast("decimal(18,0)")).cast("double") / F.lit(100.0)).alias("monetary"),
+        dsum("value", "monetary"),
     )
     scored = base.select(
         "user_id",
@@ -1671,9 +1662,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("week_offset"),
         )
-        .agg(
-            (F.sum(cents(finite("value", 16), 2).cast("decimal(18,0)")).cast("double") / F.lit(100.0)).alias("revenue")
-        )
+        .agg(dsum("value", "revenue"))
     )
     w = (
         Window.partitionBy("cohort_week")
@@ -1682,10 +1671,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return weekly.withColumn(
         "cumulative_ltv",
-        F.sum(cents(F.col("revenue"), 2).cast("decimal(18,0)"))
-        .over(w)
-        .cast("double")
-        / F.lit(100.0),
+        exact_sum("revenue", over=w, guard=False),
     ).orderBy("cohort_week", "week_offset")
 
 
@@ -1785,12 +1771,12 @@ means AS (
   FROM rs GROUP BY b),
 base AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         {sql_exact_sum("value")} / COUNT(*) AS mv
+         {sql_davg("value", "mv")}
   FROM p),
 se AS (SELECT ROUND(stddev_samp(m), 6) AS se_boot FROM means)
-SELECT base.n, ROUND(base.mv, 6) AS mean_value, se.se_boot,
-       ROUND(base.mv - 2 * se.se_boot, 6) AS ci_lo,
-       ROUND(base.mv + 2 * se.se_boot, 6) AS ci_hi
+SELECT base.n, base.mv AS mean_value, se.se_boot,
+       base.mv - 2 * se.se_boot AS ci_lo,
+       base.mv + 2 * se.se_boot AS ci_hi
 FROM base, se
 """,
 )
@@ -1802,7 +1788,10 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds: the SAME resamples materialize on any engine, run, or
     partitioning — a reproducible CI, where seeded rand() would move the
     interval between runs. Cost: one B-way explode collapsed map-side to
-    B partial means; the CI combine is a 20-row aggregate."""
+    B partial means; the CI combine is a 20-row aggregate. The mean and
+    the CI bounds are IEEE combinations of engine-identical inputs (the
+    exact mean, the ROUNDed se), so they are not ROUNDed again: ROUND(x, 6)
+    itself splits the engines once x's ULP exceeds 1e-6 (|x| ≳ 1e10)."""
     from kinesis_test_spark.functions.porthash import spark_hex16
 
     p = t(spark, sf_dir, "events").filter(
@@ -1829,31 +1818,23 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("b")
         .agg(
             F.try_divide(
-                F.sum(
-                    cents(finite(F.col("value") * F.col("w"), 16), 2).cast("decimal(18,0)")
-                ).cast("double")
-                / F.lit(100.0),
+                exact_sum(F.col("value") * F.col("w")),
                 F.sum("w"),
             ).alias("m")
         )
     )
     base = p.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (
-            F.sum(cents(finite("value", 16), 2).cast("decimal(18,0)"))
-            .cast("double")
-            / F.lit(100.0)
-            / F.count(F.lit(1))
-        ).alias("mv"),
+        davg("value", "mv"),
     )
     se = means.agg(F.round(F.stddev_samp("m"), 6).alias("se_boot"))
     return (
         base.crossJoin(F.broadcast(se))
         .select(
             "n",
-            F.round("mv", 6).alias("mean_value"),
+            F.col("mv").alias("mean_value"),
             "se_boot",
-            F.round(F.col("mv") - 2 * F.col("se_boot"), 6).alias("ci_lo"),
-            F.round(F.col("mv") + 2 * F.col("se_boot"), 6).alias("ci_hi"),
+            (F.col("mv") - 2 * F.col("se_boot")).alias("ci_lo"),
+            (F.col("mv") + 2 * F.col("se_boot")).alias("ci_hi"),
         )
     )

@@ -117,16 +117,16 @@ FUNNEL_STEP_MS = 24 * 3600 * 1000
 
 @query(
     "q_funnel",
-    oracle="""
+    oracle=f"""
 WITH v AS (SELECT user_id, MIN(ts) AS t_view FROM events
            WHERE event_type = 'view' GROUP BY user_id),
 c AS (SELECT e.user_id, MIN(e.ts) AS t_click
       FROM events e JOIN v ON v.user_id = e.user_id AND e.ts > v.t_view
-       AND (epoch_us(time_bucket(INTERVAL '1 millisecond', e.ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', v.t_view)) // 1000) <= 86400000
+       AND (epoch_us(time_bucket(INTERVAL '1 millisecond', e.ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', v.t_view)) // 1000) <= {FUNNEL_STEP_MS}
       WHERE e.event_type = 'click' GROUP BY e.user_id),
 p AS (SELECT e.user_id, MIN(e.ts) AS t_purchase
       FROM events e JOIN c ON c.user_id = e.user_id AND e.ts > c.t_click
-       AND (epoch_us(time_bucket(INTERVAL '1 millisecond', e.ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', c.t_click)) // 1000) <= 86400000
+       AND (epoch_us(time_bucket(INTERVAL '1 millisecond', e.ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', c.t_click)) // 1000) <= {FUNNEL_STEP_MS}
       WHERE e.event_type = 'purchase' GROUP BY e.user_id)
 SELECT (SELECT COUNT(*) FROM v) AS n_view,
        (SELECT COUNT(*) FROM c) AS n_view_click,
@@ -150,7 +150,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(v, "user_id")
         .filter(
             (F.col("ts") > F.col("t_view"))
-            & (F.unix_millis("ts") - F.unix_millis("t_view") <= 86400000)
+            & (F.unix_millis("ts") - F.unix_millis("t_view") <= FUNNEL_STEP_MS)
         )
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
@@ -160,7 +160,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(c, "user_id")
         .filter(
             (F.col("ts") > F.col("t_click"))
-            & (F.unix_millis("ts") - F.unix_millis("t_click") <= 86400000)
+            & (F.unix_millis("ts") - F.unix_millis("t_click") <= FUNNEL_STEP_MS)
         )
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_purchase"))

@@ -907,8 +907,6 @@ def q_sim_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "cid", F.col("s.m").alias("m"), F.col("s.rs").alias("rs"))
     # the sub relation fans out to the codebook, the query LUT, and the
     # candidate coding — materialize once (r11/r12 fan-out class)
-    from kinesis_test_spark.iterate import truncate_lineage
-
     sub = truncate_lineage(sub)
     cb = F.broadcast(
         sub.filter(F.col("vec_id") < PQ_CODES).select(
@@ -1526,8 +1524,6 @@ def q_index_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # function runs for g1, g2, and the query vector — without the
     # checkpoint that is ~5 executions of the dedup pipeline (the
     # r12 keeper-build fan-out class, caught again by the r14 review).
-    from kinesis_test_spark.iterate import truncate_lineage
-
     v = truncate_lineage(_vectors(spark, sf_dir).select("vec_id", "e"))
 
     # ONE aggregate computes BOTH generations' scales (they differ only

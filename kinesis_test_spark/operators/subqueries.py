@@ -10,17 +10,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from kinesis_test_spark.functions.exact import sql_dsum, sql_exact_sum, sql_finite
+from kinesis_test_spark.functions.exact import sql_davg, sql_dsum, sql_exact_sum, sql_finite
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import views
 
 # scalar subquery threshold computed exactly (decimal) so both engines agree
-_AVG = f"{sql_exact_sum('o_totalprice')} / COUNT(*)"
-
 _SCALAR_SQL = f"""
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders
-WHERE o_totalprice > 1.5 * (SELECT {_AVG} FROM orders)
+WHERE o_totalprice > 1.5 * (SELECT {sql_davg('o_totalprice', 'avg_price')} FROM orders)
 """
 
 

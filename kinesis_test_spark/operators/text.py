@@ -24,7 +24,7 @@ from kinesis_test_spark.functions.porthash import (
     sql_ascii_lower,
     sql_hex16,
 )
-from kinesis_test_spark.functions.exact import cents, sql_exact_sum
+from kinesis_test_spark.functions.exact import cents_term, exact_sum, sql_exact_sum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, unique_docs
 
@@ -839,10 +839,7 @@ def q_text_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.log(F.col("c") / F.col("t")).alias("lp"))
         .groupBy("doc_id")
         .agg(
-            (
-                F.sum(cents(F.col("lp"), 8).cast("decimal(18,0)")).cast("double")
-                / F.lit(1.0e8)
-            ).alias("logprob"),
+            exact_sum("lp", 18, 8, guard=False).alias("logprob"),
             F.count("*").alias("n_tokens"),
         )
     )
@@ -1556,7 +1553,7 @@ def q_text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.col("c").cast("double") / F.col("n")
     return (
         cnt.withColumn("n", F.sum("c").over(win).cast("bigint"))
-        .withColumn("term", cents(-p * F.log2(p), 12).cast("decimal(18,0)"))
+        .withColumn("term", cents_term(-p * F.log2(p), 18, 12, guard=False))
         .groupBy("doc_id", F.col("n").alias("n_tokens"))
         .agg(
             F.round(
@@ -1889,9 +1886,7 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = c12.groupBy("w1").agg(F.sum("c12").cast("bigint").alias("c1"))
     vocab = c1.agg(F.count(F.lit(1)).cast("bigint").alias("v"))
-    term = cents(
-        -F.log((F.col("c12") + 1.0) / (F.col("c1") + F.col("v"))), 8
-    ).cast("decimal(18,0)")
+    nll = -F.log((F.col("c12") + 1.0) / (F.col("c1") + F.col("v")))
     return (
         bg.join(c12, ["w1", "w2"])
         .join(c1, "w1")
@@ -1900,7 +1895,7 @@ def q_text_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
             F.round(
-                F.sum(term).cast("double") / F.lit(1.0e8) / F.count(F.lit(1)), 6
+                exact_sum(nll, 18, 8, guard=False) / F.count(F.lit(1)), 6
             ).alias("avg_nll"),
         )
         .orderBy("doc_id")

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents, davg, dsum, finite, sql_davg, sql_dsum, sql_exact_sum, sql_finite
+    davg, dsum, exact_sum, finite, sql_davg, sql_dsum, sql_exact_sum, sql_finite
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
@@ -625,7 +625,7 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_grp")
         .agg(
             F.count("*").alias("numcust"),
-            (F.sum(cents(finite("c_acctbal", 16), 2).cast("decimal(18,0)")).cast("double") / F.lit(100.0)).alias("totacctbal"),
+            dsum("c_acctbal", "totacctbal"),
         )
         .orderBy("n_grp")
     )
@@ -785,12 +785,11 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("l_partkey")
     joined = li.join(p, li.l_partkey == p.p_partkey).withColumn(
         "avg_qty",
-        F.sum(cents(finite("l_quantity", 16), 2).cast("decimal(18,0)")).over(w).cast("double") / F.lit(100.0)
-        / F.count("l_quantity").over(w),
+        exact_sum("l_quantity", over=w) / F.count("l_quantity").over(w),
     )
     return joined.filter(F.col("l_quantity") < 0.2 * F.col("avg_qty")).agg(
         F.round(
-            F.sum(cents(finite("l_extendedprice", 12), 6).cast("decimal(25,0)")).cast("double") / F.lit(1000000.0) / 7.0,
+            exact_sum("l_extendedprice", 25, 6) / 7.0,
             6,
         ).alias("avg_yearly")
     )
@@ -969,9 +968,7 @@ def _ps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
     ).agg(
-        (F.sum(cents(finite("l_quantity", 16), 2).cast("decimal(18,0)"))
-        .cast("double") / F.lit(100.0))
-        .alias("ps_availqty"),
+        dsum("l_quantity", "ps_availqty"),
         F.min("l_extendedprice").alias("ps_supplycost"),
     )
 
@@ -1086,22 +1083,13 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("ps_partkey")
         .agg(
-            (
-                F.sum(
-                    cents(
-                        finite(F.col("ps_supplycost") * F.col("ps_availqty"), 12), 6).cast("decimal(25,0)")
-                ).cast("double")
-                / F.lit(1000000.0)
-            ).alias("part_value")
+            dsum(F.col("ps_supplycost") * F.col("ps_availqty"), "part_value", 25, 6)
         )
     )
     w = Window.partitionBy()
     win = agg.withColumn(
         "total",
-        F.sum(cents(F.col("part_value"), 6).cast("decimal(25,0)"))
-        .over(w)
-        .cast("double")
-        / F.lit(1000000.0),
+        exact_sum("part_value", 25, 6, over=w, guard=False),
     ).withColumn("n_parts", F.count(F.lit(1)).over(w))
     return (
         win.filter(F.col("part_value") > 2.0 * F.col("total") / F.col("n_parts"))
@@ -1198,15 +1186,9 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
     ).agg(
-        (F.sum(cents(finite("l_quantity", 16), 2).cast("decimal(18,0)"))
-        .cast("double") / F.lit(100.0))
-        .alias("ps_availqty"),
-        (
-            F.sum(
-                cents(
-                    F.when(in_96, finite("l_quantity", 16)).otherwise(F.lit(0.0)), 2).cast("decimal(18,0)")
-            ).cast("double")
-            / F.lit(100.0)
+        dsum("l_quantity", "ps_availqty"),
+        exact_sum(
+            F.when(in_96, finite("l_quantity", 15)).otherwise(F.lit(0.0)), guard=False
         ).alias("qty_1996"),
     )
     cold = (

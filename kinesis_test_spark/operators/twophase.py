@@ -40,7 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite, sql_exact_sum
+from kinesis_test_spark.functions.exact import cents_sum, sql_exact_sum
 from kinesis_test_spark.operators.sessionize import GAP_MS, SESSIONIZE_ORACLE
 from kinesis_test_spark.operators.windows import TRANSITIONS_ORACLE
 from kinesis_test_spark.registry import query
@@ -221,12 +221,12 @@ def q_window_cumsum_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "ts",
         "chunk",
-        F.sum(cents(finite("value"), 6).cast("decimal(18,0)"))
-        .over(w1.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("local_sum"),
+        cents_sum(
+            "value", 18, 6, over=w1.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ).alias("local_sum"),
     )
     totals = ev.groupBy("user_id", "chunk").agg(
-        F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).alias("chunk_total")
+        cents_sum("value", 18, 6).alias("chunk_total")
     )
     w2 = Window.partitionBy("user_id").orderBy("chunk")
     # EXCLUSIVE prefix, left nullable: SUM skips NULL chunk totals (a chunk

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import cents, finite, sql_exact_sum, sql_finite
+from kinesis_test_spark.functions.exact import exact_sum, finite, sql_exact_sum, sql_finite
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -110,11 +110,8 @@ def q_window_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        (
-            F.sum(cents(finite("value"), 6).cast("decimal(18,0)"))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double")
-            / F.lit(1000000.0)
+        exact_sum(
+            "value", 18, 6, over=w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         ).alias("running_value"),
         F.count("*").over(w.rowsBetween(-2, Window.currentRow)).alias("n_last3"),
     )
@@ -208,12 +205,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts",
-        (
-            F.sum(cents(finite("value"), 6).cast("decimal(18,0)"))
-            .over(w)
-            .cast("double")
-            / F.lit(1000000.0)
-        ).alias("trailing_5m_value"),
+        exact_sum("value", 18, 6, over=w).alias("trailing_5m_value"),
         F.count("*").over(w).alias("trailing_5m_events"),
     )
 
@@ -542,7 +534,7 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("dur_ms").cast("bigint").alias("span_ms"),
             F.round(
                 F.try_divide(
-                    F.sum(cents(finite(F.col("value") * F.col("dur_ms"), 12), 6).cast("decimal(28,0)")).cast("double") / F.lit(1000000.0),
+                    exact_sum(F.col("value") * F.col("dur_ms"), 28, 6),
                     F.sum("dur_ms"),
                 ),
                 6,

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from kinesis_test_spark.functions.exact import cents, finite, sql_dsum
+from kinesis_test_spark.functions.exact import dsum, sql_dsum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -41,10 +41,7 @@ def _land_single(df: DataFrame, dest) -> None:
 def _agg(df: DataFrame) -> DataFrame:
     return df.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        (
-            F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).cast("double")
-            / F.lit(1000000.0)
-        ).alias("sum_value"),
+        dsum("value", "sum_value", 18, 6),
         F.sum("user_id").alias("sum_users"),
     )
 
@@ -814,8 +811,5 @@ def q_table_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     evolved = spark.read.schema(schema_ddl(d)).parquet(*live_files(d))
     return evolved.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        (
-            F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).cast("double")
-            / F.lit(1000000.0)
-        ).alias("sum_value"),
+        dsum("value", "sum_value", 18, 6),
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents, finite, sql_cents, sql_dsum, sql_finite
+    cents_sum, dsum, sql_cents, sql_dsum, sql_finite
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources.tables import normalize_ts
@@ -57,7 +57,9 @@ def _evt_state_parts(spark: SparkSession, sf_dir: str) -> int:
     RocksDB instance instead of 32 idle ones per micro-batch (the
     dominant per-drain cost — measured 3-5 s/batch of pure commit
     machinery on 5 state rows), while a 100 TB stream derives the
-    thousands of partitions its state actually needs."""
+    thousands of partitions its state actually needs. The path is a plain
+    string join, not pathlib, which would collapse an hdfs://host double
+    slash."""
     return state_partitions_for(spark, f"{sf_dir}/events.parquet")
 
 
@@ -71,17 +73,7 @@ def s_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = scratch_dir("s_ingest")
     name = _mem_name("ingest")
     counts = read_events_stream(spark, sf_dir).groupBy("event_type").agg(F.count("*").alias("n"))
-    # state partitions sized to the input volume, not the core count —
-    # every state partition is a live RocksDB instance per micro-batch
-    # (see pipeline.state_partitions_for; measured 3-5 s of commit
-    # machinery for 5 state rows at the session default). The path is a
-    # plain string join, not pathlib (pathlib would collapse an
-    # hdfs://host double slash; the sizing helper lists it through
-    # Hadoop's FileSystem either way).
-    from kinesis_test_spark.streaming.pipeline import sized_state, state_partitions_for
-
-    with sized_state(spark, state_partitions_for(spark, f"{sf_dir}/events.parquet")):
-        run_to_memory(counts, name, d / "cp", output_mode="complete")
+    run_to_memory(counts, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
     return spark.table(name)
 
 
@@ -418,7 +410,7 @@ def s_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = _mem_name("json_ingest")
     agg = stream.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        (F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).cast("double") / F.lit(1000000.0)).alias("sum_value"),
+        dsum("value", "sum_value", 18, 6),
     )
     run_to_memory(agg, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
     return spark.table(name)
@@ -516,7 +508,7 @@ def s_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = stream.join(nation, stream.user_id % 25 == nation.n_nationkey)
     agg = joined.groupBy("n_name").agg(
         F.count("*").alias("n_events"),
-        (F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).cast("double") / F.lit(1000000.0)).alias("sum_value"),
+        dsum("value", "sum_value", 18, 6),
     )
     run_to_memory(agg, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
     return spark.table(name)
@@ -1045,11 +1037,9 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unaffected: it runs in the scan stage, whose parallelism is the
     # staged file count above.
     from kinesis_test_spark.operators.dedup import N_BANDS
-    from kinesis_test_spark.streaming.pipeline import sized_state
 
     n_state = max(1, -(-(n_docs * N_BANDS) // 500_000))
-    with sized_state(spark, n_state):
-        run_to_memory(winners, name, cp, output_mode="append")
+    run_to_memory(winners, name, cp, output_mode="append", state_partitions=n_state)
 
     won = spark.table(name)
     # verdict side reads the session-cached signature relation instead of
@@ -1354,7 +1344,7 @@ def s_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).observe(
         "metrics",
         F.count(F.lit(1)).alias("n"),
-        F.sum(cents(finite("value", 16), 2).cast("decimal(18,0)")).alias("v"),
+        cents_sum("value", 18, 2).alias("v"),
     )
     q = (
         observed.select("event_id")
@@ -1454,7 +1444,7 @@ def s_table_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.parquet(*live_files(table))
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        (F.sum(cents(finite("value"), 6).cast("decimal(18,0)")).cast("double") / F.lit(1000000.0)).alias("sum_value"),
+        dsum("value", "sum_value", 18, 6),
     )
 
 
@@ -1522,9 +1512,7 @@ def s_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
-            (F.sum(cents(finite("value"), 6).cast("decimal(18,0)"))
-            .cast("double") / F.lit(1000000.0))
-            .alias("sum_value"),
+            dsum("value", "sum_value", 18, 6),
         )
     )
     name = _mem_name("avro_ingest")

@@ -205,5 +205,5 @@ def test_transform_with_state_probe():
         pytest.skip("google.protobuf absent; transformWithStateInPandas blocked")
     raise AssertionError(
         "google.protobuf is now available — implement transformWithStateInPandas "
-        "(see CLAUDE.md round-3 notes)"
+        "(see the environment gotcha in CLAUDE.md)"
     )

@@ -1,5 +1,5 @@
-"""Source scan: the exact-sum, finite-guard and vector-validity SQL is spelled
-only by its helper.
+"""Source scan: the exact-sum, finite-guard and vector-validity rules are
+spelled only by their helpers.
 
 Oracle strings and Spark-side SQL texts interpolate ``functions/exact.py``
 (``sql_cents``/``sql_finite``/``sql_exact_sum``/``sql_dsum``/``sql_davg``)
@@ -8,6 +8,9 @@ pasted expansion drifts from its helper the next time the rule changes, so
 any copy outside the owning definition fails here. The scan reads every
 string literal in ``kinesis_test_spark/`` (f-string fields rendered as
 ``{expr}``), whitespace-normalized, so copies split across lines count too.
+The Column side is scanned as code: ``cents(...)`` is called only inside
+``exact.py``; every other site goes through ``exact_sum``/``cents_sum``/
+``cents_term``/``dsum``/``davg``.
 """
 
 from __future__ import annotations
@@ -113,6 +116,31 @@ def test_no_pasted_helper_expansions():
     copies = _copies()
     assert not any(copies.values()), "pasted helper SQL (interpolate the helper): " + "; ".join(
         f"{rule} x{len(v)}: {', '.join(v[:8])}" for rule, v in copies.items() if v
+    )
+
+
+def _cents_calls() -> list[str]:
+    """file:line of every ``cents(...)`` call (bare or attribute) outside
+    ``exact.py``."""
+    calls = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == EXACT:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name == "cents":
+                calls.append(f"{rel}:{node.lineno}")
+    return calls
+
+
+def test_no_column_cents_outside_exact():
+    calls = _cents_calls()
+    assert not calls, f"{len(calls)} cents( calls outside {EXACT} (use its sum helpers): " + ", ".join(
+        calls
     )
 
 

@@ -8,8 +8,8 @@ Usage:
 
 Keys default to every registered key; ``--class`` (repeatable) restricts
 the corpus classes, which default to all of them. A per-key battery is the
-round-discipline tool for "every changed/new key carries its own corpus
-battery from final code" (CLAUDE.md round-10 closing note): it costs
+tool for "every changed/new key carries its own corpus battery from final
+code" (CLAUDE.md Gotchas, validation): it costs
 |classes| × |changed| key-checks instead of a full-surface sweep's
 |classes| × |registry|. A full-surface single-class sweep is what to run
 when an operator touches a new column shape of that class.
