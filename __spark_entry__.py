@@ -187,6 +187,12 @@ _RECHECK: dict[str, int] = {
         # selections) + the ADC LUT saturation.
         "q_fn_cast", "q_explode_dq", "q_stats_profile", "q_sim_search_ivfpq",
     )},
+    # r16: exact means divide by the finite-guarded population; q_ab_test
+    # and q_bootstrap_ci means leave unrounded, and q_ab_test's variance
+    # counts the same (18,2)-route population as its n and mean.
+    **{k: 16 for k in (
+        "q_ab_test", "q_bootstrap_ci", "q_outliers", "q_subquery_scalar",
+    )},
 }
 
 

@@ -19,8 +19,9 @@ for already-guarded or bounded inputs), ``dsum``/``davg`` (aliased),
 strings and Spark-side SQL texts (``spark.sql``, ``F.expr``) interpolate
 the ``sql_*`` mirrors and never paste their expansion: ``sql_exact_sum``
 for the un-aliased, windowed and conditional sums, ``sql_dsum``/
-``sql_davg`` for the aliased ones. ``tests/test_oracle_helpers.py`` fails
-on a ``cents(`` call or a pasted SQL copy outside this module.
+``sql_davg`` for the aliased ones, ``sql_cents_term`` for one row's
+quantized term. ``tests/test_oracle_helpers.py`` fails on a ``cents(``
+call or a pasted SQL copy outside this module.
 
 WHY quantization is sign·FLOOR(|x·10^s| + 0.5) through BIGINT rather than
 either earlier form:
@@ -211,6 +212,14 @@ def davg(col: Column | str, alias: str, prec: int = 18, scale: int = 2) -> Colum
     return (exact_sum(col, prec, scale) / n).alias(alias)
 
 
+def sql_cents_term(expr: str, prec: int = 18, scale: int = 2, guard: bool = True) -> str:
+    """SQL mirror of ``cents_term``: one row's quantized cents as
+    DECIMAL(prec,0), for oracles that quantize per row before a join, a
+    product or a COALESCEd sum."""
+    g = sql_finite(expr, route_exp(prec, scale)) if guard else expr
+    return f"CAST({sql_cents(g, scale)} AS DECIMAL({prec},0))"
+
+
 def sql_exact_sum(
     expr: str,
     prec: int = 18,
@@ -224,12 +233,9 @@ def sql_exact_sum(
     route guard, for inputs that are already guarded or bounded (a
     conditional ``CASE ... THEN <sql_finite> ELSE 0 END``, a sum of
     guarded sums)."""
-    g = sql_finite(expr, route_exp(prec, scale)) if guard else expr
     win = f" OVER {over}" if over else ""
-    return (
-        f"CAST(SUM(CAST({sql_cents(g, scale)} AS DECIMAL({prec},0))){win}"
-        f" AS DOUBLE) / 1.0e{scale}"
-    )
+    term = sql_cents_term(expr, prec, scale, guard)
+    return f"CAST(SUM({term}){win} AS DOUBLE) / 1.0e{scale}"
 
 
 def sql_dsum(expr: str, alias: str, prec: int = 18, scale: int = 2) -> str:

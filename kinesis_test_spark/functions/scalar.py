@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents_term, finite, sql_cents, sql_cents_mag, sql_finite
+    cents_term, finite, sql_cents_mag, sql_cents_term, sql_finite
 )
 from kinesis_test_spark.functions.porthash import ascii_lower, sql_ascii_lower
 from kinesis_test_spark.registry import query
@@ -186,8 +186,8 @@ SELECT l_orderkey, l_linenumber,
        -- below 2^53 — so the PRODUCT (not just each factor) is guarded:
        -- |p·q| < 1e11 keeps product cents < ~1e15 with 9x margin.
        CASE WHEN abs(fprice * fqty) < 1.0e11 THEN
-       CAST(CAST({sql_cents("fprice", 2)} AS DECIMAL(18,0))
-            * CAST({sql_cents("fqty", 2)} AS DECIMAL(18,0)) AS DOUBLE) / 1.0e4
+       CAST({sql_cents_term("fprice", guard=False)}
+            * {sql_cents_term("fqty", guard=False)} AS DOUBLE) / 1.0e4
        END AS exact_product
 FROM (SELECT *,
              -- the decimal/int routes are range-guarded NULL on non-finite

@@ -23,8 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents_sum, davg, dsum, exact_sum, finite, route_exp, sql_cents, sql_davg,
-    sql_dsum, sql_exact_sum, sql_finite
+    cents_sum, davg, dsum, exact_sum, finite, route_exp, sql_cents_term,
+    sql_davg, sql_dsum, sql_exact_sum, sql_finite
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, views
@@ -1340,7 +1340,7 @@ stats AS (
   SELECT variant,
          CAST(COUNT({sql_finite("value", route_exp(18, 2))}) AS BIGINT) AS n,
          {sql_davg("value", "mean_v")},
-         ROUND(VAR_SAMP({sql_finite("value")}), 6) AS var_v
+         ROUND(VAR_SAMP({sql_finite("value", route_exp(18, 2))}), 6) AS var_v
   FROM assigned GROUP BY variant),
 wide AS (
   SELECT
@@ -1352,9 +1352,9 @@ wide AS (
     MAX(CASE WHEN variant = 'treatment' THEN var_v END) AS var_t
   FROM stats)
 SELECT n_c, n_t,
-       ROUND(mean_c, 6) AS mean_control,
-       ROUND(mean_t, 6) AS mean_treatment,
-       ROUND(mean_t - mean_c, 6) AS lift,
+       mean_c AS mean_control,
+       mean_t AS mean_treatment,
+       mean_t - mean_c AS lift,
        ROUND((mean_t - mean_c)
              / NULLIF(sqrt(var_c / n_c + var_t / n_t), 0), 6)
          AS t_statistic
@@ -1367,8 +1367,11 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     and t-statistic — the readout every experimentation platform computes.
     One scan + one two-group aggregate; the variant pivot is a 2-row
     conditional MAX (no join, no second scan). Means go through the
-    decimal-exact route and variance/ratio land under ROUND(6), matching
-    the repo's cross-engine float rules. Variant assignment by user_id
+    decimal-exact route and stay unrounded (IEEE ops on engine-identical
+    inputs; ROUND(6) splits the engines once ULP(x) > 1e-6); n, mean and
+    variance count one population, the route's finite guard. Variance
+    and the t ratio land under ROUND(6), matching the repo's
+    cross-engine float rules. Variant assignment by user_id
     parity is the deterministic stand-in for the salted-hash bucketing of
     a real assignment service (q_sample_hash shows that machinery)."""
     ev = t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
@@ -1381,7 +1384,7 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = assigned.groupBy("variant").agg(
         F.count(finite("value", route_exp(18, 2))).cast("bigint").alias("n"),
         davg("value", "mean_v"),
-        F.round(F.var_samp(finite(F.col("value"))), 6).alias("var_v"),
+        F.round(F.var_samp(finite("value", route_exp(18, 2))), 6).alias("var_v"),
     )
 
     def pick(col, variant):
@@ -1398,9 +1401,9 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wide.select(
         "n_c",
         "n_t",
-        F.round("mean_c", 6).alias("mean_control"),
-        F.round("mean_t", 6).alias("mean_treatment"),
-        F.round(F.col("mean_t") - F.col("mean_c"), 6).alias("lift"),
+        F.col("mean_c").alias("mean_control"),
+        F.col("mean_t").alias("mean_treatment"),
+        (F.col("mean_t") - F.col("mean_c")).alias("lift"),
         F.round(
             F.try_divide(
                 F.col("mean_t") - F.col("mean_c"),
@@ -1615,7 +1618,7 @@ revenue AS (
          CAST(floor(((epoch_us(time_bucket(INTERVAL '1 millisecond', time_bucket(INTERVAL '1 week', e.ts))) // 1000)
                      - (epoch_us(time_bucket(INTERVAL '1 millisecond', f.cohort)) // 1000)) / 604800000.0) AS BIGINT)
            AS week_offset,
-         CAST({sql_cents(sql_finite("e.value", 15), 2)} AS DECIMAL(18,0)) AS v
+         {sql_cents_term("e.value")} AS v
   FROM events e JOIN first_seen f ON f.user_id = e.user_id
   WHERE e.event_type = 'purchase' AND e.ts IS NOT NULL),
 weekly AS (

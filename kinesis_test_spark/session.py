@@ -41,14 +41,23 @@ def get_spark(app_name: str = "kinesis_test_spark", driver_mem: str | None = Non
         # type — read as long and convert in sources.tables (µs truncation,
         # matching DuckDB/Arrow semantics).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # local file: scheme without the ChecksumFileSystem wrapper — every
-        # local write otherwise lands a .crc sidecar next to each file,
-        # doubling the file count of partitioned sinks (measured 3x on the
-        # 720-dir y/m/d/h JSON sink: per-file create+rename dominates, not
-        # bytes). Scheme-scoped: on a cluster the data path is hdfs:// or
-        # s3a://, where this conf is inert and those filesystems carry
-        # their own integrity checks (as does parquet via column CRCs).
-        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        # Stream checkpoints (offsets, commits, source/sink logs, RocksDB
+        # changelogs and snapshots) go through the cached FileSystem that
+        # _raw_local_io configures: temp file, target-absent check, rename.
+        # Without native libhadoop every local metadata call forks a
+        # process, and the default FileContext manager routes file:
+        # through LocalFs (ChecksumFs): a .crc sidecar per checkpoint file
+        # and a `readlink` fork per rename. The perfbench stream_ref drain
+        # (4-CPU VM) measured 82 process starts per micro-batch with it,
+        # 27 (all `chmod`s of new files and dirs) with this manager -- a
+        # per-trigger cost that never amortizes. The rename is safe under
+        # Spark's single-writer rule per checkpoint; on hdfs:// a
+        # FileSystem rename is atomic too.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # RocksDB state store as the streaming default: state lives off-heap
         # and spills to disk, so stateful queries (dedup gate, session
@@ -66,4 +75,23 @@ def get_spark(app_name: str = "kinesis_test_spark", driver_mem: str | None = Non
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _raw_local_io(spark)
     return spark
+
+
+def _raw_local_io(spark: SparkSession) -> None:
+    """Turn off checksum sidecars on the JVM's cached local FileSystem.
+
+    Every file: path resolves to this one cached ``LocalFileSystem``, so
+    sink files and checkpoint files land without a ``.crc`` beside them
+    (each sidecar is one more create, and each create forks a ``chmod``
+    when libhadoop is absent). The scheme's class stays the default
+    ``LocalFileSystem``: replacing it via ``fs.file.impl`` breaks
+    ``FileSystem.getLocal``'s cast, and with it every RocksDB snapshot
+    upload. Scheme-scoped: hdfs:// and s3a:// keep their own integrity
+    checks, as parquet keeps its column CRCs.
+    """
+    sc = spark.sparkContext
+    local = sc._jvm.org.apache.hadoop.fs.FileSystem.getLocal(sc._jsc.hadoopConfiguration())
+    local.setWriteChecksum(False)
+    local.setVerifyChecksum(False)

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents_sum, dsum, sql_cents, sql_dsum, sql_finite
+    cents_sum, dsum, sql_cents_term, sql_dsum, sql_finite
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources.tables import normalize_ts
@@ -1315,7 +1315,7 @@ def s_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT CAST(COUNT(DISTINCT CASE WHEN user_id IS NULL THEN 0
                  ELSE ((user_id % 4) + 4) % 4 END) AS BIGINT) AS n_batches,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(COALESCE(SUM(CAST({sql_cents(sql_finite("value", 15), 2)} AS DECIMAL(18,0))), 0) AS DOUBLE) / 1.0e2
+       CAST(COALESCE(SUM({sql_cents_term("value")}), 0) AS DOUBLE) / 1.0e2
          AS total_value
 FROM events
 """,

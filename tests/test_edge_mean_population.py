@@ -29,6 +29,32 @@ from kinesis_test_spark.oracle import check_query
 KEYS = ["q_outliers", "q_ab_test", "q_bootstrap_ci", "q_subquery_scalar"]
 
 
+def _restage(src: str, dest: Path) -> None:
+    dest.mkdir(parents=True, exist_ok=True)
+    for f in Path(src).glob("*.parquet"):
+        shutil.copy(f, dest / f.name)
+
+
+def _add_control_purchases(dest: Path, values: list) -> None:
+    """Append one purchase per value on an even (control-variant) user."""
+    ev = pq.read_table(dest / "events.parquet")
+    head = ev.to_pandas()
+    row = head[(head.event_type == "purchase") & (head.user_id % 2 == 0)].iloc[0]
+    n = len(values)
+    extra = pa.table(
+        {
+            "event_id": [97000001 + i for i in range(n)],
+            "ts": [row.ts.to_pydatetime()] * n,
+            "user_id": [int(row.user_id)] * n,
+            "event_type": ["purchase"] * n,
+            "value": values,
+            "props": [row.props] * n,
+        },
+        schema=ev.schema,
+    )
+    pq.write_table(pa.concat_tables([ev, extra]), dest / "events.parquet")
+
+
 def plant_mean_population(src: str, dest: Path) -> None:
     """Restage ``src`` into ``dest``: a NULL and a NaN purchase value on an
     even (control-variant) user, a NULL and a NaN ``o_totalprice``, and one
@@ -36,25 +62,8 @@ def plant_mean_population(src: str, dest: Path) -> None:
     between the finite-population threshold and the ``COUNT(*)`` one
     (which counts the two dirty orders), so q_subquery_scalar returns it
     only under the wrong denominator."""
-    dest.mkdir(parents=True, exist_ok=True)
-    for f in Path(src).glob("*.parquet"):
-        shutil.copy(f, dest / f.name)
-
-    ev = pq.read_table(dest / "events.parquet")
-    head = ev.to_pandas()
-    row = head[(head.event_type == "purchase") & (head.user_id % 2 == 0)].iloc[0]
-    extra = pa.table(
-        {
-            "event_id": [97000001, 97000002],
-            "ts": [row.ts.to_pydatetime()] * 2,
-            "user_id": [int(row.user_id)] * 2,
-            "event_type": ["purchase", "purchase"],
-            "value": [None, float("nan")],
-            "props": [row.props] * 2,
-        },
-        schema=ev.schema,
-    )
-    pq.write_table(pa.concat_tables([ev, extra]), dest / "events.parquet")
+    _restage(src, dest)
+    _add_control_purchases(dest, [None, float("nan")])
 
     orders = pq.read_table(dest / "orders.parquet")
     price = orders.column("o_totalprice").to_pandas()
@@ -119,4 +128,42 @@ def test_means_count_the_finite_population(spark, planted):
 @pytest.mark.parametrize("key", KEYS)
 def test_mean_population_oracle_parity(spark, planted, key):
     problems = check_query(spark, planted[0], key)
+    assert not problems, "; ".join(problems)
+
+
+# Inside the (18,2) route's 1e15 guard, outside the 1e12 statistics default.
+ROUTE_MAGNITUDE = 5e13
+
+
+@pytest.fixture(scope="module")
+def planted_magnitude(tmp_path_factory, sf_dir):
+    d = tmp_path_factory.mktemp("mean_population_magnitude_sf")
+    _restage(sf_dir, d)
+    _add_control_purchases(d, [ROUTE_MAGNITUDE])
+    return str(d), pd.read_parquet(d / "events.parquet")
+
+
+def test_ab_test_variance_counts_the_route_population(spark, planted_magnitude):
+    """q_ab_test's n, mean and variance count one population, the (18,2)
+    route's: a value in [1e12, 1e15) counted in n and the mean but not in
+    var_control leaves the Welch t over two different samples."""
+    d, ev = planted_magnitude
+    purchase = ev[ev.event_type == "purchase"]
+    in_route = purchase[purchase.value.abs().lt(1e15)]
+    c = in_route[in_route.user_id % 2 == 0].value
+    tr = in_route[in_route.user_id % 2 == 1].value
+    assert ROUTE_MAGNITUDE in set(c)
+
+    registry.load_all()
+    ab = registry.QUERIES["q_ab_test"](spark, d).collect()[0]
+    assert ab["n_c"] == len(c) and ab["n_t"] == len(tr)
+    assert ab["mean_control"] == pytest.approx(c.mean(), rel=1e-12)
+    assert ab["lift"] == pytest.approx(tr.mean() - c.mean(), rel=1e-12)
+    var_c, var_t = round(c.var(ddof=1), 6), round(tr.var(ddof=1), 6)
+    welch = (tr.mean() - c.mean()) / math.sqrt(var_c / len(c) + var_t / len(tr))
+    assert ab["t_statistic"] == pytest.approx(round(welch, 6), abs=1.5e-6)
+
+
+def test_ab_test_magnitude_oracle_parity(spark, planted_magnitude):
+    problems = check_query(spark, planted_magnitude[0], "q_ab_test")
     assert not problems, "; ".join(problems)

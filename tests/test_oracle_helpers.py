@@ -2,7 +2,8 @@
 spelled only by their helpers.
 
 Oracle strings and Spark-side SQL texts interpolate ``functions/exact.py``
-(``sql_cents``/``sql_finite``/``sql_exact_sum``/``sql_dsum``/``sql_davg``)
+(``sql_cents``/``sql_cents_term``/``sql_finite``/``sql_exact_sum``/
+``sql_dsum``/``sql_davg``)
 and ``operators/similarity.py`` (``sql_vec_valid``/``_SQL_VECTORS``). A
 pasted expansion drifts from its helper the next time the rule changes, so
 any copy outside the owning definition fails here. The scan reads every
@@ -25,6 +26,8 @@ EXACT = "functions/exact.py"
 SIMILARITY = "operators/similarity.py"
 
 CENTS = re.compile(r"FLOOR\s*\(\s*ABS\s*\(", re.I)
+# the per-row term pasted around the helper field: CAST({sql_cents(...)} AS DECIMAL(p,0))
+CENTS_TERM = re.compile(r"CAST\s*\(\s*\{\s*sql_cents\(", re.I)
 VEC_VALID = re.compile(r"len\s*\(\s*list_filter\s*\(\s*[\w.]*embedding\b", re.I)
 VECTORS = re.compile(
     r"SELECT DISTINCT vec_id, label, embedding FROM embeddings"
@@ -98,7 +101,13 @@ def _bare_guards(s: str) -> list[str]:
 
 
 def _copies() -> dict[str, list[str]]:
-    rules = {"cents": [], "finite guard": [], "vec validity": [], "vec identity": []}
+    rules = {
+        "cents": [],
+        "cents term": [],
+        "finite guard": [],
+        "vec validity": [],
+        "vec identity": [],
+    }
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
         exempt = {"sql_vec_valid", "_SQL_VECTORS"} if rel == SIMILARITY else set()
@@ -106,6 +115,7 @@ def _copies() -> dict[str, list[str]]:
             where = f"{rel}:{line}"
             if rel != EXACT:
                 rules["cents"] += [where] * len(CENTS.findall(s))
+                rules["cents term"] += [where] * len(CENTS_TERM.findall(s))
                 rules["finite guard"] += [f"{where} abs({e})" for e in _bare_guards(s)]
             rules["vec validity"] += [where] * len(VEC_VALID.findall(s))
             rules["vec identity"] += [where] * len(VECTORS.findall(s))
@@ -150,6 +160,8 @@ def test_scan_sees_the_helper_definitions():
     from kinesis_test_spark.operators.similarity import _SQL_VECTORS, sql_vec_valid
 
     assert CENTS.search(sql_cents("x", 2))
+    pasted = ast.parse("f'CAST({sql_cents(sql_finite(x, 15), 2)} AS DECIMAL(18,0))'")
+    assert CENTS_TERM.search(_text(pasted.body[0].value))
     assert _bare_guards(" ".join(sql_finite("a.b * (1 - c)").split())) == ["a.b * (1 - c)"]
     assert VEC_VALID.search(sql_vec_valid("a.embedding"))
     assert VECTORS.search(" ".join(_SQL_VECTORS.split()))

@@ -75,6 +75,10 @@ def test_sink_layout_matches_reference(spark, sf_dir):
     # beside the hour tree, the root holds only the file sink's commit log
     rest = {p.name for p in Path(out).iterdir() if not p.name.startswith("y=")}
     assert rest == {"_spark_metadata"}, sorted(rest)
+    # no Hadoop checksum sidecar (.<name>.crc) beside any sink file or any
+    # offsets/commits/metadata file of the checkpoint
+    sidecars = [p for root in (out, d / "cp") for p in Path(root).rglob(".*.crc")]
+    assert not sidecars, sorted(map(str, sidecars))[:5]
 
 
 def test_replay_with_idempotent_sink_no_duplicates(spark, sf_dir):
@@ -125,7 +129,7 @@ def test_replay_with_idempotent_sink_no_duplicates(spark, sf_dir):
     # not yet" (the window where a crash forces a replay) and restart from
     # the clone — exactly a restart after a mid-commit failure
     cp2 = d / "cp_after_crash"
-    shutil.copytree(cp, cp2, ignore=shutil.ignore_patterns("*.crc"))
+    shutil.copytree(cp, cp2)
     commits = [p for p in (cp2 / "commits").iterdir() if not p.name.startswith(".")]
     max(commits, key=lambda p: int(p.name)).unlink()
     run(cp2)
@@ -160,7 +164,7 @@ def test_partitioned_sink_replay_writes_once(spark, sf_dir):
 
     run(cp)
     cp2 = d / "cp_after_crash"
-    shutil.copytree(cp, cp2, ignore=shutil.ignore_patterns("*.crc"))
+    shutil.copytree(cp, cp2)
     commits = [p for p in (cp2 / "commits").iterdir() if not p.name.startswith(".")]
     assert len(commits) == 2
     max(commits, key=lambda p: int(p.name)).unlink()
@@ -312,12 +316,7 @@ def test_tablelog_sink_crash_mid_batch_exactly_once(spark, sf_dir):
     # window 2: tablelog commit published, checkpoint commit marker lost
     commits = [p for p in (cp / "commits").iterdir() if not p.name.startswith(".")]
     lost = max(commits, key=lambda p: int(p.name))
-    lost.unlink()
-    # the marker and its Hadoop checksum sidecar publish together — a
-    # crash loses both (a stale .crc would block the replay's rename)
-    crc = lost.parent / f".{lost.name}.crc"
-    if crc.exists():
-        crc.unlink()
+    lost.unlink()  # the marker has no checksum sidecar to lose with it
     run(land)
     assert spark.read.parquet(*live_files(table)).count() == n_src
     assert len(live_files(table)) == 4  # one commit per batch, no extras
@@ -407,6 +406,89 @@ def test_rocksdb_state_survives_restart(spark, sf_dir):
         .set_index("user_id")["count"]
     )
     assert out.sort_index().equals(truth.sort_index().rename("n"))
+
+
+def test_rocksdb_snapshot_uploads_and_serves_restart(spark, sf_dir):
+    """RocksDB snapshots must upload and serve a restart. With changelog
+    checkpointing the maintenance task zips a snapshot every
+    ``minDeltasForSnapshot`` commits, and a restart loads the newest one
+    and replays only the changelogs after it. A failed upload is swallowed
+    (a replaced ``fs.file.impl`` breaks ``FileSystem.getLocal``'s cast):
+    SnapshotLastUploaded stays -1 and every restart replays every
+    changelog, so load time grows with the stream's age."""
+    from pyspark.sql import functions as F
+
+    from kinesis_test_spark.streaming.pipeline import (
+        mod_slice,
+        read_staged_stream,
+        scratch_dir,
+        sized_state,
+        stage_events,
+    )
+
+    store = spark.sparkContext._jvm.org.apache.spark.sql.execution.streaming.state.StateStore
+    confs = {
+        "spark.sql.streaming.stateStore.maintenanceInterval": "1s",
+        "spark.sql.streaming.stateStore.minDeltasForSnapshot": "2",
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    d = scratch_dir("rocksdb_snapshot")
+    stage, out, cp = d / "src", d / "out", d / "cp"
+    n = 12
+    for i in range(n):
+        stage_events(spark, sf_dir, stage, f"a{i}", where=mod_slice(n, i, "event_id"))
+
+    def drain() -> dict:
+        stream = (
+            read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger=1)
+            .filter(F.col("event_id").isNotNull())
+            .dropDuplicates(["event_id"])
+        )
+        with sized_state(spark, 1):
+            q = (
+                stream.writeStream.format("parquet")
+                .option("path", str(out))
+                .option("checkpointLocation", str(cp))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        return q.lastProgress
+
+    # the JVM's maintenance task keeps the interval it started with:
+    # stop it so the next store load restarts it at 1s, and again after
+    # the test so later queries get the session's interval back
+    store.stop()
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        last = drain()
+        assert last["batchId"] == n - 1
+        metrics = last["stateOperators"][0]["customMetrics"]
+        assert metrics["SnapshotLastUploaded.partition_0_default"] >= 0, metrics
+        assert list((cp / "state").rglob("*.zip")), "no snapshot in the state dir"
+
+        # restart on a re-delivered arrival: the store loads from a
+        # snapshot and still holds every id, so the re-delivery is dropped
+        stage_events(spark, sf_dir, stage, "redelivery", where=mod_slice(n, 0, "event_id"))
+        last = drain()
+        op = last["stateOperators"][0]
+        assert last["batchId"] == n
+        assert op["customMetrics"]["rocksdbNumReplayChangelogFiles"] < n, op["customMetrics"]
+        ids = (
+            spark.read.parquet(str(stage))
+            .filter("event_id IS NOT NULL")
+            .select("event_id")
+            .distinct()
+            .count()
+        )
+        assert op["numRowsTotal"] == ids, op
+        assert op["numRowsUpdated"] == 0, op
+        assert spark.read.parquet(str(out)).count() == ids
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        store.stop()
 
 
 def test_compaction_preserves_content_and_reduces_files(spark, sf_dir):
