@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_test_spark import registry
+from kinesis_test_spark.session import apply_sql_confs
 import kinesis_test_spark.flagship  # noqa: F401  (registers q_flagship)
 
 registry.load_all()
@@ -263,8 +264,7 @@ def _ordered_keys() -> list[str]:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001 (SURVEY.md §7 step 1)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    apply_sql_confs(spark)
     return registry.QUERIES["q_flagship"](spark, "/root/testdata/sf0.001")
 
 
@@ -273,22 +273,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _wrap(fn: registry.QueryFn) -> Callable[[SparkSession, str], DataFrame]:
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # events.ts is parquet TIMESTAMP(NANOS); see sources/tables.py.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            # timestamps must render identically to DuckDB's tz-naive reads
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-            # streaming state on RocksDB (the at-scale default; no-op for
-            # batch queries) — see kinesis_test_spark/session.py
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.rocksdb."
-                "changelogCheckpointing.enabled",
-                "true",
-            )
+            # the engine's session settings (kinesis_test_spark/session.py),
+            # whatever session the caller built
+            apply_sql_confs(spark)
             return fn(spark, sf_dir)
 
         return run

@@ -27,7 +27,7 @@ from __future__ import annotations
 from collections import OrderedDict
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.porthash import (
@@ -75,46 +75,67 @@ shingles AS (
 """
 
 
-def _spark_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, s): distinct word-3-gram shingles per document —
-    session-cached (see _session_cached): minhash, the exact-Jaccard family
-    and the contamination sweep all start from this relation, so it is
-    materialized once per (session, sf_dir) and read back from storage."""
-    return _session_cached(
-        spark, ("shingles", str(sf_dir)), lambda: _build_shingles(spark, sf_dir)
-    )
-
-
-def _build_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Uncached shingle construction.
-
-    Repartitioned before the explode: the test tables are single parquet
-    files (one input split), which would serialize the md5-heavy shingle
-    work onto one core — on a real multi-file/multi-row-group table the
-    scan itself provides this parallelism."""
-    # one row per doc IDENTITY (sources.unique_docs contract): a
-    # redelivered byte-identical copy must not double the shingle
-    # multiset (the oracle's DISTINCT (doc_id, s) is per-set already).
-    # repartition FIRST: the dedup aggregate then reuses the doc_id hash
-    # partitioning instead of adding a second exchange.
-    d = unique_docs(
-        spark, sf_dir, partitions=spark.sparkContext.defaultParallelism
-    )
-    # split() is hoisted into a real column: referencing it from inside a
-    # higher-order-function lambda would re-tokenize the full text per
-    # element (no CSE inside lambdas — measured 2.4× slower).  The
-    # slice/zip_with shape is also empty-safe: greatest(size-2, 0) gives
-    # zero-length slices for docs under 3 words (sequence(1, size-2) would
-    # be DESCENDING there, and element_at(words, 0) errors under ANSI).
-    d = d.withColumn("w", F.split("text", " "))
-    w = F.col("w")
+def shingle_set(w: Column) -> Column:
+    """The distinct word-3-gram shingles of a word array (the mirror of
+    SQL_SHINGLES). ``w`` must be a real column holding ``split(text, ' ')``:
+    Spark does no CSE inside higher-order-function lambdas, so a split()
+    referenced from here would re-tokenize the full text per element
+    (measured 2.4x slower). The slice/zip_with shape is empty-safe:
+    greatest(size-2, 0) gives zero-length slices for docs under 3 words
+    (sequence(1, size-2) would be DESCENDING there, and element_at(w, 0)
+    errors under ANSI)."""
     k = F.greatest(F.size(w) - 2, F.lit(0))
     sh = F.zip_with(
         F.slice(w, 1, k),
         F.zip_with(F.slice(w, 2, k), F.slice(w, 3, k), lambda a, b: F.concat_ws(" ", a, b)),
         lambda a, bc: F.concat_ws(" ", a, bc),
     )
-    return d.select("doc_id", F.explode(F.array_distinct(sh)).alias("s"))
+    return F.array_distinct(sh)
+
+
+def shingle_sets(docs: DataFrame, carry: list[str] | None = None) -> DataFrame:
+    """(carry..., doc_id, sh): the shingle set of every (doc_id, text) row
+    with at least one shingle. Row-local, so batch and stream share it;
+    docs under 3 words have no signature and so no near-dup evidence
+    (consumers keep them unconditionally)."""
+    carry = carry or []
+    return (
+        docs.withColumn("w", F.split("text", " "))
+        # a 3-gram needs three words. Filtering on the shingle set instead
+        # would be pushed below its projection and build every set twice.
+        .filter(F.size("w") >= 3)
+        .select(*carry, "doc_id", shingle_set(F.col("w")).alias("sh"))
+    )
+
+
+def _build_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Uncached (doc_id, sh) shingle sets over the unique-docs grain.
+
+    One row per doc IDENTITY (sources.unique_docs contract): a redelivered
+    byte-identical copy must not double the shingle multiset. Repartitioned
+    by doc_id FIRST, so the identity dedup reuses that exchange instead of
+    adding a second one, and the md5-heavy signature work downstream is not
+    serialized onto the one input split of a single-file table (on a real
+    multi-file table the scan itself provides this parallelism)."""
+    return shingle_sets(
+        unique_docs(spark, sf_dir, partitions=spark.sparkContext.defaultParallelism)
+    )
+
+
+def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sh): the per-document shingle set, session-cached (see
+    _session_cached). Every shingle consumer starts here: the exact-Jaccard
+    family through its explode (_spark_shingles), the MinHash family
+    through its signature projection (_spark_signatures)."""
+    return _session_cached(
+        spark, ("shingles", str(sf_dir)), lambda: _build_shingles(spark, sf_dir)
+    )
+
+
+def _spark_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, s): distinct word-3-gram shingles per document, exploded
+    from the cached shingle sets."""
+    return _shingle_sets(spark, sf_dir).select("doc_id", F.explode("sh").alias("s"))
 
 
 # ---------------------------------------------------------------------------
@@ -143,179 +164,128 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH banding
 # ---------------------------------------------------------------------------
 
-_seed_list = ", ".join(str(i) for i in range(N_SEEDS))
-_band_cases = ", ".join(str(b) for b in range(N_BANDS))
+# One MinHash rule per engine. The shingle set, the seed-salted md5
+# signature, the band key and the matched-position estimate are each
+# spelled once below (Column helpers for Spark, SQL generators for the
+# oracles); batch, stream and oracle all call them, so a change to the
+# shingle, salt or band layout is one edit. The Spark signature is the
+# row-local array form (array_min over transform): a map-only projection
+# with no aggregate, which a stream can evaluate with zero state and which
+# a batch corpus evaluates without a shuffle.
 
-MINHASH_ORACLE = f"""
-WITH {SQL_SHINGLES},
-seeds AS (SELECT unnest([{_seed_list}]) AS seed),
+SQL_MINHASH_SIG = f"""{SQL_SHINGLES},
+seeds AS (SELECT unnest([{", ".join(str(i) for i in range(N_SEEDS))}]) AS seed),
 mh AS (
   SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || '|' || s)) AS h
   FROM shingles, seeds GROUP BY doc_id, seed),
-sig AS (SELECT doc_id, list(h ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-bands AS (
-  SELECT doc_id, b, sig[2*b + 1] || sig[2*b + 2] AS bkey
-  FROM sig, (SELECT unnest([{_band_cases}]) AS b)),
+sig AS (SELECT doc_id, list(h ORDER BY seed) AS sig FROM mh GROUP BY doc_id)"""
+
+
+def sql_bands(n_bands: int = N_BANDS, name: str = "bands") -> str:
+    """The ``name`` CTE: (doc_id, b, bkey) band keys off the ``sig`` CTE of
+    SQL_MINHASH_SIG, N_SEEDS/n_bands positions per band."""
+    rpb = N_SEEDS // n_bands
+    bkey = " || ".join(f"sig[{rpb}*b + {j + 1}]" for j in range(rpb))
+    cases = ", ".join(str(b) for b in range(n_bands))
+    return f"""{name} AS (
+  SELECT doc_id, b, {bkey} AS bkey
+  FROM sig, (SELECT unnest([{cases}]) AS b))"""
+
+
+def sql_est(a: str, b: str) -> str:
+    """Estimated Jaccard of two ``sig`` rows: matching positions / N_SEEDS."""
+    return (
+        f"len([i FOR i IN generate_series(1, {N_SEEDS}) IF {a}.sig[i] = {b}.sig[i]])"
+        f" / {N_SEEDS}.0"
+    )
+
+
+def minhash_sig(sh: Column) -> Column:
+    """The N_SEEDS MinHash minima of a shingle-set column: per seed, the
+    minimum of md5('{seed}|' || shingle) (the mirror of SQL_MINHASH_SIG)."""
+    return F.array(
+        *[
+            F.array_min(F.transform(sh, lambda x: F.md5(F.concat(F.lit(f"{s}|"), x))))
+            for s in range(N_SEEDS)
+        ]
+    )
+
+
+def band_key(sig: Column, b: int, rows_per_band: int) -> Column:
+    """Band ``b``'s LSH key: its signature positions concatenated."""
+    return F.concat(
+        *[F.element_at(sig, rows_per_band * b + j + 1) for j in range(rows_per_band)]
+    )
+
+
+def est_jaccard(sig_a: Column, sig_b: Column) -> Column:
+    """Estimated Jaccard of two signatures (the mirror of sql_est)."""
+    matches = F.filter(
+        F.sequence(F.lit(1), F.lit(N_SEEDS)),
+        lambda i: F.element_at(sig_a, i) == F.element_at(sig_b, i),
+    )
+    return F.size(matches) / F.lit(float(N_SEEDS))
+
+
+MINHASH_ORACLE = f"""
+WITH {SQL_MINHASH_SIG},
+{sql_bands()},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
   FROM bands a JOIN bands c ON a.b = c.b AND a.bkey = c.bkey AND a.doc_id < c.doc_id)
-SELECT doc_a, doc_b,
-       len([i FOR i IN generate_series(1, {N_SEEDS}) IF sa.sig[i] = sb.sig[i]]) / {N_SEEDS}.0
-         AS est_jaccard
+SELECT doc_a, doc_b, {sql_est("sa", "sb")} AS est_jaccard
 FROM cand JOIN sig sa ON sa.doc_id = doc_a JOIN sig sb ON sb.doc_id = doc_b
-WHERE len([i FOR i IN generate_series(1, {N_SEEDS}) IF sa.sig[i] = sb.sig[i]]) / {N_SEEDS}.0
-      >= {MINHASH_THRESHOLD}
+WHERE {sql_est("sa", "sb")} >= {MINHASH_THRESHOLD}
 """
 
 
-def minhash_signatures(sh: DataFrame, n_seeds: int = N_SEEDS) -> DataFrame:
-    """(doc_id, sig): the n_seeds MinHash minima in ONE groupBy pass (one
-    agg column per seed) — no seed cross-join, so shuffle volume is
-    |shingles| rows once, collapsed map-side to |docs| before the
-    exchange. This is the relation a production pipeline PERSISTS between
-    runs (see q_dedup_incremental)."""
-    mins = [
-        F.min(F.md5(F.concat(F.lit(f"{s}|"), F.col("s")))).alias(f"m{s}")
-        for s in range(n_seeds)
-    ]
-    return (
-        sh.groupBy("doc_id")
-        .agg(*mins)
-        .select("doc_id", F.array(*[F.col(f"m{s}") for s in range(n_seeds)]).alias("sig"))
-    )
-
-
 def _spark_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sig): the default-dial MinHash signature relation over the
-    session shingles — session-cached (r14 VERDICT #5): the signature
-    aggregate is dial- and leg-independent but feeds BOTH legs of every
-    band-bucket self-join (an exchange Spark does not recognize as
-    reusable), so q_dedup_minhash / q_dedup_verify / q_dedup_eval share
-    ONE materialization per (session, sf_dir) instead of each executing
-    (or re-checkpointing) the 8-seed aggregate themselves."""
+    """(doc_id, sig): the MinHash signature of every document with at least
+    one shingle, projected from the cached shingle sets and itself
+    session-cached: it feeds both legs of every band-bucket self-join (an
+    exchange Spark does not recognize as reusable), so q_dedup_minhash,
+    q_dedup_verify, q_dedup_eval, the q_dedup_incremental corpus side and
+    s_dedup_near's verdict share ONE materialization per (session, sf_dir)
+    instead of each re-running the md5 sweep."""
     return _session_cached(
         spark,
         ("minhash_sig", str(sf_dir), N_SEEDS),
-        lambda: minhash_signatures(_spark_shingles(spark, sf_dir)),
-    )
-
-
-def minhash_bands(
-    sig: DataFrame, n_seeds: int = N_SEEDS, n_bands: int = N_BANDS
-) -> DataFrame:
-    """(doc_id, sig, b, bkey): LSH band keys off a signature relation. Band
-    rows carry the full signature, so a bucket join yields (pair, sig_a,
-    sig_b) directly — no extra signature joins."""
-    rows_per_band, rem = divmod(n_seeds, n_bands)
-    if rem:
-        raise ValueError(f"n_bands={n_bands} must divide n_seeds={n_seeds}")
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("b"),
-            F.concat(
-                *[
-                    F.element_at("sig", rows_per_band * b + j + 1)
-                    for j in range(rows_per_band)
-                ]
-            ).alias("bkey"),
-        )
-        for b in range(n_bands)
-    ]
-    return sig.select(
-        "doc_id", "sig", F.explode(F.array(*band_structs)).alias("band")
-    ).select("doc_id", "sig", F.col("band.b").alias("b"), F.col("band.bkey").alias("bkey"))
-
-
-# --- row-local MinHash (the streaming-safe form) -------------------------
-#
-# minhash_signatures computes each seed's minimum with a groupBy over the
-# exploded shingle relation — the right shape for a 100 TB batch corpus
-# (map-side combine collapses |shingles| to |docs| before the exchange),
-# but an AGGREGATION, which a streaming query cannot chain under another
-# stateful operator.  The row-local form computes the identical signature
-# inside array expressions (split → slice/zip_with → array_min), so a stream
-# can derive band keys with zero state and spend its one stateful stage
-# on the gate itself (s_dedup_near).  Shingle strings match
-# _build_shingles exactly (word 3-grams over the literal-space split).
-
-def rowlocal_minhash_bands(df: DataFrame, carry: list[str] | None = None) -> DataFrame:
-    """(carry..., doc_id, b, bkey): LSH band keys computed ROW-LOCALLY from
-    a (doc_id, text, ...) relation — no aggregation anywhere, so the
-    result is streaming-composable.  Docs with < 3 words have no shingles
-    and are dropped here (no signature ⇒ no near-dup evidence; consumers
-    treat them as unconditionally kept).  Oracle mirror:
-    ``rowlocal_bands_sql``."""
-    carry = carry or []
-    # split() hoisted into a real column — the same rule _build_shingles
-    # records: Spark does no CSE inside higher-order-function lambdas, so
-    # referencing split(text) from the shingle lambda re-tokenizes the
-    # full text per element, O(words²) per row.  slice/zip_with over the
-    # hoisted array is the identical shingle list (empty for < 3 words).
-    w = F.col("w")
-    k = F.greatest(F.size(w) - 2, F.lit(0))
-    sh = F.zip_with(
-        F.slice(w, 1, k),
-        F.zip_with(
-            F.slice(w, 2, k), F.slice(w, 3, k), lambda a, b: F.concat_ws(" ", a, b)
+        lambda: _shingle_sets(spark, sf_dir).select(
+            "doc_id", minhash_sig(F.col("sh")).alias("sig")
         ),
-        lambda a, bc: F.concat_ws(" ", a, bc),
     )
-    d2 = (
-        df.withColumn("w", F.split("text", " "))
-        .withColumn("sh", F.array_distinct(sh))
-        .filter(F.size("sh") > 0)
-    )
-    for s in range(N_SEEDS):
-        d2 = d2.withColumn(
-            f"m{s}", F.expr(f"array_min(transform(sh, x -> md5(concat('{s}|', x))))")
-        )
-    rpb = N_SEEDS // N_BANDS
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("b"),
-            F.concat(*[F.col(f"m{rpb * b + j}") for j in range(rpb)]).alias("bkey"),
-        )
-        for b in range(N_BANDS)
-    ]
-    return d2.select(
-        *carry, "doc_id", F.explode(F.array(*band_structs)).alias("band")
-    ).select(*carry, "doc_id", F.col("band.b").alias("b"), F.col("band.bkey").alias("bkey"))
 
 
-def rowlocal_bands_sql() -> str:
-    """DuckDB CTE chain ``u → bands`` mirroring ``rowlocal_minhash_bands``
-    over the unique-docs grain (same shingles, seeds, and band layout as
-    MINHASH_ORACLE)."""
-    rpb = N_SEEDS // N_BANDS
-    sig_elems = ", ".join(
-        f"list_min(list_transform(sh, x -> md5('{s}|' || x)))" for s in range(N_SEEDS)
+def minhash_bands(sig: DataFrame, n_bands: int = N_BANDS) -> DataFrame:
+    """(sig's columns..., b, bkey): one row per LSH band of every signature
+    row. Band rows carry the full signature, so a bucket join yields
+    (pair, sig_a, sig_b) directly — no extra signature joins."""
+    rows_per_band, rem = divmod(N_SEEDS, n_bands)
+    if rem:
+        raise ValueError(f"n_bands={n_bands} must divide N_SEEDS={N_SEEDS}")
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("b"), band_key(F.col("sig"), b, rows_per_band).alias("bkey")
+            )
+            for b in range(n_bands)
+        ]
     )
-    bands = ", ".join(str(b) for b in range(N_BANDS))
-    return f"""u AS (SELECT DISTINCT doc_id, text FROM documents WHERE doc_id IS NOT NULL),
-ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM u),
-shr AS (SELECT doc_id,
-         CASE WHEN len(w) >= 3 THEN list_distinct(list_transform(
-              generate_series(1, len(w) - 2),
-              i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-         ELSE [] END AS sh FROM ws),
-sig AS (SELECT doc_id, [{sig_elems}] AS sig FROM shr WHERE len(sh) > 0),
-bands AS (SELECT doc_id, b, {" || ".join(f"sig[{rpb}*b + {j + 1}]" for j in range(rpb))} AS bkey
-          FROM sig, (SELECT unnest([{bands}]) AS b))"""
+    return sig.select("*", F.inline(bands))
 
 
 def minhash_pairs(
-    sh: DataFrame,
-    n_seeds: int = N_SEEDS,
+    sig: DataFrame,
     n_bands: int = N_BANDS,
     threshold: float = MINHASH_THRESHOLD,
     bucket_cap: int | None = None,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs over a (doc_id, s) shingle frame.
+    """MinHash+LSH near-dup pairs over a (doc_id, sig) signature relation.
 
-    shingle → (seed-salted md5, min per seed) → signature array →
-    band keys (n_seeds/n_bands rows per band × n_bands bands) → bucket
-    self-join → candidates → estimated Jaccard = matching positions/seeds.
+    signature → band keys (N_SEEDS/n_bands rows per band × n_bands bands)
+    → bucket self-join → candidates → estimated Jaccard = matching
+    positions/seeds. The only shuffle is the band-key self-join; no
+    pairwise work outside colliding buckets.
 
     ``n_bands`` is THE recall/cost dial: more bands (fewer rows each) catch
     lower-similarity pairs at the price of more bucket collisions — with
@@ -336,44 +306,8 @@ def minhash_pairs(
     near-identical members, est_jaccard ≈ 1 keeps every star edge above
     threshold). Default None = exact all-pairs, the oracle-checked path.
     tests/test_properties.py pins both the bound and the component
-    preservation on a planted O(n) bucket.
-
-    All n_seeds minima are computed in ONE groupBy pass (one agg column per
-    seed) — no seed cross-join, so shuffle volume is |shingles| rows once,
-    collapsed by the map-side combine to |docs| rows before the exchange.
-    The only other shuffle is the band-key self-join; no pairwise work
-    outside colliding buckets."""
-    # ``sig`` lets a caller that derives SEVERAL band layouts from one
-    # signature relation (q_dedup_eval's two dials) pass a materialized
-    # copy: the signature aggregate is dial-independent AND feeds both
-    # legs of the bucket self-join, which Spark does not recognize as a
-    # reusable exchange — without materialization it executes once per
-    # leg per dial (4× in the eval; measured 2× end-to-end).
-    if sig is not None:
-        # a pre-built signature must carry exactly this call's n_seeds —
-        # a longer array would mis-band/mis-match SILENTLY (banding and
-        # the matches expression slice the first n_seeds positions), a
-        # shorter one would error far from the cause (r14 ADVICE). One
-        # int comparison per row in codegen; raises loudly on mismatch.
-        sig = sig.withColumn(
-            "sig",
-            F.when(F.size("sig") == n_seeds, F.col("sig")).otherwise(
-                F.raise_error(
-                    F.lit(
-                        f"minhash_pairs: pre-built sig length != n_seeds={n_seeds}"
-                    )
-                )
-            ),
-        )
-    bands = minhash_bands(
-        minhash_signatures(sh, n_seeds) if sig is None else sig, n_seeds, n_bands
-    )
-    matches = F.size(
-        F.filter(
-            F.sequence(F.lit(1), F.lit(n_seeds)),
-            lambda i: F.element_at("sig_a", i) == F.element_at("sig_b", i),
-        )
-    )
+    preservation on a planted O(n) bucket."""
+    bands = minhash_bands(sig, n_bands)
 
     def all_pairs(rel: DataFrame) -> DataFrame:
         a = rel.select(
@@ -414,7 +348,7 @@ def minhash_pairs(
         cand = small.unionByName(star)
     return (
         cand.select(
-            "doc_a", "doc_b", (matches / F.lit(float(n_seeds))).alias("est_jaccard")
+            "doc_a", "doc_b", est_jaccard(F.col("sig_a"), F.col("sig_b")).alias("est_jaccard")
         )
         .distinct()
         .filter(F.col("est_jaccard") >= threshold)
@@ -426,11 +360,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs at the default dial (8 seeds, 4 bands of
     2 rows, threshold 0.5) — see minhash_pairs for the plan shape and the
     bands/rows recall-vs-cost tradeoff. The signature relation comes from
-    the session cache (_spark_signatures), so the aggregate runs once per
+    the session cache (_spark_signatures), so the md5 sweep runs once per
     session and the bucket self-join's two legs read the persisted copy."""
-    return minhash_pairs(
-        _spark_shingles(spark, sf_dir), sig=_spark_signatures(spark, sf_dir)
-    )
+    return minhash_pairs(_spark_signatures(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -633,9 +565,6 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     are dropped BEFORE the Python boundary — in the JVM-fold form their
     cosine was NULL → -1.0 → dropped at the threshold, so the pre-filter
     is result-identical and ships fewer bytes across."""
-    dot = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     # norms precomputed ONCE per vector before the pair join (bit-identical
     # expression, 3× fewer folds than per-pair recomputation) — and
     # repartitioned: single-file input would serialize the fold work
@@ -647,7 +576,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
                 vec_valid(), F.transform("embedding", lambda x: x.cast("double"))
             ).alias("e")
         )
-        .withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e"))))
+        .withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
     )
     a = e.select(
         F.col("vec_id").alias("vec_a"), "label", F.col("e").alias("ea"), F.col("nrm").alias("na")
@@ -682,8 +611,7 @@ def q_dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-checked in spirit by q_dedup_minhash (portable reimplementation)."""
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    sh = _spark_shingles(spark, sf_dir)
-    docs = sh.groupBy("doc_id").agg(F.collect_list("s").alias("shingles"))
+    docs = _shingle_sets(spark, sf_dir).select("doc_id", F.col("sh").alias("shingles"))
     tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True)
     feats = tf.transform(docs)
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=8, seed=42)
@@ -1279,22 +1207,13 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _verify_oracle() -> str:
     return f"""
-WITH {SQL_SHINGLES},
-seeds AS (SELECT unnest([{_seed_list}]) AS seed),
-mh AS (
-  SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || '|' || s)) AS h
-  FROM shingles, seeds GROUP BY doc_id, seed),
-sig AS (SELECT doc_id, list(h ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-bands AS (
-  SELECT doc_id, b, sig[2*b + 1] || sig[2*b + 2] AS bkey
-  FROM sig, (SELECT unnest([{_band_cases}]) AS b)),
+WITH {SQL_MINHASH_SIG},
+{sql_bands()},
 cand AS (
   SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
   FROM bands a JOIN bands c ON a.b = c.b AND a.bkey = c.bkey AND a.doc_id < c.doc_id),
 est AS (
-  SELECT doc_a, doc_b,
-         len([i FOR i IN generate_series(1, {N_SEEDS}) IF sa.sig[i] = sb.sig[i]])
-           / {N_SEEDS}.0 AS est_jaccard
+  SELECT doc_a, doc_b, {sql_est("sa", "sb")} AS est_jaccard
   FROM cand JOIN sig sa ON sa.doc_id = doc_a JOIN sig sb ON sb.doc_id = doc_b),
 hot AS (SELECT s FROM shingles GROUP BY s HAVING COUNT(*) > {NGRAM_DF_CAP}),
 kept AS (SELECT doc_id, s FROM shingles WHERE s NOT IN (SELECT s FROM hot)),
@@ -1321,12 +1240,7 @@ def q_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set (threshold 0 — every collision) with the inverted-index
     intersection via a left join (candidates sharing no post-cap shingle
     verify to 0)."""
-    sh = _spark_shingles(spark, sf_dir)
-    # signature from the session cache — it feeds both legs of the bucket
-    # self-join, which Spark does not recognize as a reusable exchange
-    # (see minhash_pairs' sig parameter), and the relation itself is
-    # shared with q_dedup_minhash / q_dedup_eval
-    est = minhash_pairs(sh, threshold=0.0, sig=_spark_signatures(spark, sf_dir))
+    est = minhash_pairs(_spark_signatures(spark, sf_dir), threshold=0.0)
     kept = _kept_shingles(spark, sf_dir)
     exact = _jaccard_from_kept(kept).select("doc_a", "doc_b", "jaccard")
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -1402,63 +1316,33 @@ def q_dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NEW_BATCH_PRED = "doc_id % 10 = 0"
 
 INCREMENTAL_ORACLE = f"""
-WITH {SQL_SHINGLES},
-seeds AS (SELECT unnest([{_seed_list}]) AS seed),
-mh AS (
-  SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || '|' || s)) AS h
-  FROM shingles, seeds GROUP BY doc_id, seed),
-sig AS (SELECT doc_id, list(h ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-bands AS (
-  SELECT doc_id, b, sig[2*b + 1] || sig[2*b + 2] AS bkey
-  FROM sig, (SELECT unnest([{_band_cases}]) AS b)),
+WITH {SQL_MINHASH_SIG},
+{sql_bands()},
 cand AS (
   SELECT DISTINCT a.doc_id AS new_doc, c.doc_id AS corpus_doc
   FROM bands a JOIN bands c ON a.b = c.b AND a.bkey = c.bkey
   WHERE a.{_NEW_BATCH_PRED} AND NOT (c.{_NEW_BATCH_PRED}))
-SELECT new_doc, corpus_doc,
-       len([i FOR i IN generate_series(1, {N_SEEDS}) IF sa.sig[i] = sb.sig[i]]) / {N_SEEDS}.0
-         AS est_jaccard
+SELECT new_doc, corpus_doc, {sql_est("sa", "sb")} AS est_jaccard
 FROM cand JOIN sig sa ON sa.doc_id = new_doc JOIN sig sb ON sb.doc_id = corpus_doc
-WHERE len([i FOR i IN generate_series(1, {N_SEEDS}) IF sa.sig[i] = sb.sig[i]]) / {N_SEEDS}.0
-      >= {MINHASH_THRESHOLD}
+WHERE {sql_est("sa", "sb")} >= {MINHASH_THRESHOLD}
 """
-
-
-def corpus_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The standing corpus's banded MinHash signatures, persisted once per
-    (session, sf_dir) — the relation a daily pipeline keeps between runs.
-    Every incremental query reuses this storage-backed copy instead of
-    re-shingling the corpus (the property test pins that the corpus side
-    never re-scans the documents parquet)."""
-    return _session_cached(
-        spark,
-        ("corpus_bands", str(sf_dir)),
-        lambda: minhash_bands(
-            minhash_signatures(
-                _spark_shingles(spark, sf_dir).filter(~F.expr(_NEW_BATCH_PRED))
-            )
-        ),
-    )
 
 
 @query("q_dedup_incremental", oracle=INCREMENTAL_ORACLE)
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental corpus dedup — the operation a production training-data
     pipeline runs daily: dedup a NEW batch of documents against the
-    EXISTING corpus without recomputing the corpus side. The corpus's
-    banded signatures come from corpus_minhash_bands (computed once per
-    session, persisted — the stand-in for the signature table a real
-    pipeline stores between runs); only the new batch is shingled and
-    hashed here, so per-run cost is O(new batch) map-side plus the band
-    bucket join against the standing index. Asymmetric join (new × corpus,
-    no self-pairs), estimated Jaccard from matching signature positions,
-    thresholded at the family dial."""
-    new_bands = minhash_bands(
-        minhash_signatures(
-            _spark_shingles(spark, sf_dir).filter(F.expr(_NEW_BATCH_PRED))
-        )
-    )
-    corpus = corpus_minhash_bands(spark, sf_dir)
+    EXISTING corpus without recomputing the corpus side. The corpus side
+    is the session-cached signature relation (_spark_signatures, the
+    stand-in for the signature table a real pipeline stores between runs);
+    only the new batch is shingled and hashed here, row-locally with the
+    same helpers the stream uses, so per-run cost is O(new batch) map-side
+    plus the band bucket join against the standing index. Asymmetric join
+    (new × corpus, no self-pairs), estimated Jaccard from matching
+    signature positions, thresholded at the family dial."""
+    new = shingle_sets(unique_docs(spark, sf_dir).filter(F.expr(_NEW_BATCH_PRED)))
+    new_bands = minhash_bands(new.select("doc_id", minhash_sig(F.col("sh")).alias("sig")))
+    corpus = minhash_bands(_spark_signatures(spark, sf_dir).filter(~F.expr(_NEW_BATCH_PRED)))
     a = new_bands.select(
         F.col("doc_id").alias("new_doc"), F.col("sig").alias("sig_a"), "b", "bkey"
     )
@@ -1468,18 +1352,12 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b").alias("b2"),
         F.col("bkey").alias("bkey2"),
     )
-    matches = F.size(
-        F.filter(
-            F.sequence(F.lit(1), F.lit(N_SEEDS)),
-            lambda i: F.element_at("sig_a", i) == F.element_at("sig_b", i),
-        )
-    )
     return (
         a.join(c, (F.col("b") == F.col("b2")) & (F.col("bkey") == F.col("bkey2")))
         .select(
             "new_doc",
             "corpus_doc",
-            (matches / F.lit(float(N_SEEDS))).alias("est_jaccard"),
+            est_jaccard(F.col("sig_a"), F.col("sig_b")).alias("est_jaccard"),
         )
         .distinct()
         .filter(F.col("est_jaccard") >= MINHASH_THRESHOLD)
@@ -1525,9 +1403,6 @@ def q_dedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with/aggregate fold with the zero-norm -1.0 sentinel."""
     from kinesis_test_spark.operators.similarity import cosine
 
-    dot = lambda u, v: F.aggregate(  # noqa: E731
-        F.zip_with(u, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
     v = (
         t(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
@@ -1547,7 +1422,7 @@ def q_dedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = (
         assign_cells(v, cent, ["e"])
         .select("vec_id", "e", "cid")
-        .withColumn("nrm", F.sqrt(dot(F.col("e"), F.col("e"))))
+        .withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
     )
     a = assigned.select(
         F.col("vec_id").alias("vec_a"),
@@ -1563,7 +1438,7 @@ def q_dedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cos = F.round(
         F.coalesce(
-            F.try_divide(dot(F.col("ea"), F.col("eb")), F.col("na") * F.col("nb")),
+            F.try_divide(_dot(F.col("ea"), F.col("eb")), F.col("na") * F.col("nb")),
             F.lit(-1.0),
         ),
         4,
@@ -1905,7 +1780,7 @@ _SEM_NEW_PRED = "vec_id % 10 = 0"
 def sem_standing_keepers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standing corpus's per-cell KEPT representatives, persisted once
     per (session, sf_dir) — the canonical set a production pipeline stores
-    between runs (the semantic sibling of corpus_minhash_bands). Computed
+    between runs (the semantic sibling of _spark_signatures). Computed
     with exactly q_dedup_semantic's banded rule restricted to the standing
     corpus."""
 
@@ -2580,28 +2455,16 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dedup_eval_oracle() -> str:
     shared = f"""
-WITH {SQL_SHINGLES},
-seeds AS (SELECT unnest([{_seed_list}]) AS seed),
-mh AS (
-  SELECT doc_id, seed, min(md5(CAST(seed AS VARCHAR) || '|' || s)) AS h
-  FROM shingles, seeds GROUP BY doc_id, seed),
-sig AS (SELECT doc_id, list(h ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
+WITH {SQL_MINHASH_SIG},
 est AS (
-  SELECT sa.doc_id AS doc_a, sb.doc_id AS doc_b,
-         len([i FOR i IN generate_series(1, {N_SEEDS})
-              IF sa.sig[i] = sb.sig[i]]) / {N_SEEDS}.0 AS ej
+  SELECT sa.doc_id AS doc_a, sb.doc_id AS doc_b, {sql_est("sa", "sb")} AS ej
   FROM sig sa JOIN sig sb ON sa.doc_id < sb.doc_id),
-bands_fine AS (
-  SELECT doc_id, b, sig[2*b + 1] || sig[2*b + 2] AS bkey
-  FROM sig, (SELECT unnest([{_band_cases}]) AS b)),
+{sql_bands(4, "bands_fine")},
 pred_fine AS (
   SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
   FROM bands_fine a JOIN bands_fine c
     ON a.b = c.b AND a.bkey = c.bkey AND a.doc_id < c.doc_id),
-bands_coarse AS (
-  SELECT doc_id, b,
-         sig[4*b + 1] || sig[4*b + 2] || sig[4*b + 3] || sig[4*b + 4] AS bkey
-  FROM sig, (SELECT unnest([0, 1]) AS b)),
+{sql_bands(2, "bands_coarse")},
 pred_coarse AS (
   SELECT DISTINCT a.doc_id AS doc_a, c.doc_id AS doc_b
   FROM bands_coarse a JOIN bands_coarse c
@@ -2663,20 +2526,18 @@ def q_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact truth pairs come from the session cache, so the evaluation adds
     one banding pass per dial + k-bounded joins on top of work the family
     already did. At 100 TB the truth side runs on a sample BY DESIGN."""
-    sh = _spark_shingles(spark, sf_dir)
     truth = _threshold_pairs(spark, sf_dir).select(
         F.col("doc_a").alias("t_a"), F.col("doc_b").alias("t_b")
     )
     n_truth_df = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
     # the signature relation is dial-independent — the SESSION-cached copy
     # is shared by both dials' band layouts (and by q_dedup_minhash /
-    # q_dedup_verify) instead of executing the 8-seed-min aggregate once
-    # per join leg per dial (measured 2× end-to-end; see minhash_pairs'
-    # sig parameter)
+    # q_dedup_verify) instead of re-running the md5 sweep once per join
+    # leg per dial
     sig = _spark_signatures(spark, sf_dir)
 
     def dial(name: str, n_bands: int) -> DataFrame:
-        pred = minhash_pairs(sh, n_bands=n_bands, sig=sig).select("doc_a", "doc_b")
+        pred = minhash_pairs(sig, n_bands=n_bands).select("doc_a", "doc_b")
         joined = pred.join(
             truth,
             (pred.doc_a == F.col("t_a")) & (pred.doc_b == F.col("t_b")),
@@ -2915,7 +2776,7 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
 def substring_standing_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standing corpus's DISTINCT window-hash set, persisted once per
     (session, sf_dir) — the (h → seen) index a daily pipeline stores
-    between runs (the substring sibling of corpus_minhash_bands and
+    between runs (the substring sibling of _spark_signatures and
     sem_standing_keepers). Presence is all the incremental dup test
     needs: a new window that matches ANY standing window is duplicated
     (total distinct-doc count ≥ 2 by construction)."""

@@ -18,29 +18,29 @@ def cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
-def get_spark(app_name: str = "kinesis_test_spark", driver_mem: str | None = None) -> SparkSession:
-    """Build (or fetch) the engine session.
+def sql_confs(parallelism: int) -> dict[str, str]:
+    """The engine's runtime SQL settings, one place for every session:
+    get_spark builds with them and the driver-contract wrappers
+    (__spark_entry__.entry / queries) apply them to whatever session they
+    are handed, so both plan alike.
 
     AQE is on so runtime statistics can re-plan joins (broadcast demotion/
     promotion, skew splitting) — at 100 TB that, not static tuning, is what
-    keeps shuffle stages healthy.
+    keeps shuffle stages healthy. Shuffle partitions match the session's
+    parallelism instead of the 200 default.
     """
-    n = cpus()
-    builder = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_mem or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
+    return {
+        "spark.sql.shuffle.partitions": str(parallelism),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # timestamps must render identically to DuckDB's tz-naive reads
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # testdata events.ts is parquet TIMESTAMP(NANOS); Spark has no ns
         # type — read as long and convert in sources.tables (µs truncation,
         # matching DuckDB/Arrow semantics).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # Stream checkpoints (offsets, commits, source/sink logs, RocksDB
         # changelogs and snapshots) go through the cached FileSystem that
         # _raw_local_io configures: temp file, target-absent check, rename.
@@ -53,25 +53,39 @@ def get_spark(app_name: str = "kinesis_test_spark", driver_mem: str | None = Non
         # per-trigger cost that never amortizes. The rename is safe under
         # Spark's single-writer rule per checkpoint; on hdfs:// a
         # FileSystem rename is atomic too.
-        .config(
-            "spark.sql.streaming.checkpointFileManagerClass",
+        "spark.sql.streaming.checkpointFileManagerClass": (
             "org.apache.spark.sql.execution.streaming.checkpointing."
-            "FileSystemBasedCheckpointFileManager",
-        )
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+            "FileSystemBasedCheckpointFileManager"
+        ),
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # RocksDB state store as the streaming default: state lives off-heap
         # and spills to disk, so stateful queries (dedup gate, session
         # windows, running counts) survive 100 TB-scale key cardinality that
         # would OOM the HDFS-backed in-memory store. Maintenance uploads
         # changelogs instead of full snapshots.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        ),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
+
+
+def apply_sql_confs(spark: SparkSession) -> None:
+    """Set sql_confs on a session built elsewhere, sized to its own
+    defaultParallelism."""
+    for key, value in sql_confs(spark.sparkContext.defaultParallelism).items():
+        spark.conf.set(key, value)
+
+
+def get_spark(app_name: str = "kinesis_test_spark") -> SparkSession:
+    """Build (or fetch) the engine session: local[cpus()] with sql_confs."""
+    n = cpus()
+    builder = (
+        SparkSession.builder.master(f"local[{n}]")
+        .appName(app_name)
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.ui.enabled", "false")
+        .config(map=sql_confs(n))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -921,10 +921,12 @@ def s_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_gate_oracle() -> str:
-    from kinesis_test_spark.operators.dedup import rowlocal_bands_sql
+    from kinesis_test_spark.operators.dedup import SQL_MINHASH_SIG, sql_bands
 
     return f"""
-WITH {rowlocal_bands_sql()},
+WITH {SQL_MINHASH_SIG},
+{sql_bands()},
+u AS (SELECT DISTINCT doc_id, text FROM documents WHERE doc_id IS NOT NULL),
 winners AS (SELECT b, bkey, MIN(doc_id) AS winner_id FROM bands GROUP BY b, bkey),
 verdict AS (SELECT bd.doc_id, CAST(COUNT(*) AS BIGINT) AS n_bands,
                    CAST(SUM(CASE WHEN wi.winner_id <> bd.doc_id THEN 1 ELSE 0 END)
@@ -949,8 +951,9 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming sibling of q_dedup_minhash's pair semantics).
 
     Shape: the MinHash signature is computed ROW-LOCALLY inside the
-    stream (dedup.rowlocal_minhash_bands — array expressions, no
-    aggregation), so the query's single stateful stage is the per-band
+    stream with the batch family's own helpers (dedup.shingle_sets →
+    minhash_sig → minhash_bands: array expressions, no aggregation), so
+    the query's single stateful stage is the per-band
     first-claimant aggregate: groupBy(window, band) . min(struct(ts,
     doc_id)) under a 1-hour watermark — per-band state is ONE struct,
     evicted when its window finalizes, so an unbounded stream holds
@@ -961,15 +964,20 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest doc_id.  A far-future sentinel doc (nonce words — its
     shingles collide with nothing; its ts makes it no band's min) closes
     the window so the append-mode aggregate emits.  The kept verdict is
-    read off the serving sink in batch (the s_heavy_hitters pattern):
-    a doc is kept iff it lost NO band; sig-less docs (< 3 words) carry no
-    near-dup evidence and are kept unconditionally.  Identity dedup
-    (byte-identical redeliveries) happens at ingestion via unique_docs —
-    the same two-stage exact-then-near layout a production gate runs."""
+    read off the serving sink in batch (the s_heavy_hitters pattern) by
+    joining it with the bands of the session-cached signature relation
+    (dedup._spark_signatures: the same helpers, projected once per
+    session): a doc is kept iff it lost NO band; sig-less docs (< 3
+    words) carry no near-dup evidence and are kept unconditionally.
+    Identity dedup (byte-identical redeliveries) happens at ingestion via
+    unique_docs — the same two-stage exact-then-near layout a production
+    gate runs."""
     from datetime import datetime, timedelta, timezone
 
     from kinesis_test_spark.iterate import truncate_lineage
-    from kinesis_test_spark.operators.dedup import rowlocal_minhash_bands
+    from kinesis_test_spark.operators.dedup import (
+        N_BANDS, _spark_signatures, minhash_bands, minhash_sig, shingle_sets
+    )
     from kinesis_test_spark.sources import unique_docs
     from pyspark.sql import Window
 
@@ -1019,7 +1027,10 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = spark.readStream.schema("doc_id bigint, text string, ts timestamp").parquet(
         str(stage)
     )
-    bands = rowlocal_minhash_bands(src.withWatermark("ts", "1 hour"), carry=["ts"])
+    sets = shingle_sets(src.withWatermark("ts", "1 hour"), carry=["ts"])
+    bands = minhash_bands(
+        sets.select("ts", "doc_id", minhash_sig(F.col("sh")).alias("sig"))
+    )
     winners = (
         bands.groupBy(F.window("ts", f"{horizon_days} days"), "b", "bkey")
         .agg(F.min(F.struct("ts", "doc_id")).alias("w"))
@@ -1036,22 +1047,13 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stops paying fixed machinery for empty stores.  Band compute is
     # unaffected: it runs in the scan stage, whose parallelism is the
     # staged file count above.
-    from kinesis_test_spark.operators.dedup import N_BANDS
-
     n_state = max(1, -(-(n_docs * N_BANDS) // 500_000))
     run_to_memory(winners, name, cp, output_mode="append", state_partitions=n_state)
 
     won = spark.table(name)
-    # verdict side reads the session-cached signature relation instead of
-    # re-running the 8-seed md5 sweep row-locally (guide §2.4 — the hash
-    # work is already materialized once per session for the q_dedup_minhash
-    # family, and the salted-hash/band-key algebra is IDENTICAL to the
-    # row-local form: same shingles, same '{seed}|' salt, same positional
-    # band concat — pinned in tests/test_dedup_near.py). The STREAM side
-    # keeps rowlocal_minhash_bands: that is the operator's point (a
-    # signature with no aggregation so the one stateful stage is the gate).
-    from kinesis_test_spark.operators.dedup import _spark_signatures, minhash_bands
-
+    # the verdict side bands the session-cached signature relation, the
+    # same shingle set and minhash_sig projection the stream applied row
+    # by row, so the md5 sweep is not run a second time per session
     batch_bands = minhash_bands(_spark_signatures(spark, sf_dir)).select(
         "doc_id", "b", "bkey"
     )

@@ -153,23 +153,34 @@ def test_index_versioned_shared_scale_matches_per_generation_codes(spark):
         assert serial.count() > 0
 
 
-def test_rowlocal_bands_match_grouped_signature_bands(spark):
-    """r15 optimization pin: s_dedup_near's batch verdict side now derives
-    its band relation from the session-cached grouped signature
-    (minhash_bands over _spark_signatures) instead of re-running the
-    row-local md5 sweep. The two forms must be row-identical — same
-    shingles, same '{seed}|' salt, same positional band concat — or the
-    verdict join silently diverges from the streamed winners."""
+def test_streamed_bands_match_cached_batch_bands(spark, tmp_path):
+    """s_dedup_near bands its stream row by row and its batch verdict side
+    off the session-cached signature relation. Both go through the same
+    helpers (shingle_sets → minhash_sig → minhash_bands), so a streaming
+    read of the unique docs must yield exactly the cached relation's band
+    rows, or the verdict join silently diverges from the streamed winners."""
+    from pyspark.sql import functions as F
+
     from kinesis_test_spark.operators.dedup import (
         _spark_signatures,
         minhash_bands,
-        rowlocal_minhash_bands,
+        minhash_sig,
+        shingle_sets,
     )
     from kinesis_test_spark.sources import unique_docs
 
-    u = unique_docs(spark, SF_SRC, cols=["doc_id", "text"])
-    rl = rowlocal_minhash_bands(u).select("doc_id", "b", "bkey")
-    gr = minhash_bands(_spark_signatures(spark, SF_SRC)).select("doc_id", "b", "bkey")
-    assert rl.exceptAll(gr).count() == 0
-    assert gr.exceptAll(rl).count() == 0
-    assert rl.count() > 0
+    unique_docs(spark, SF_SRC, cols=["doc_id", "text"]).write.parquet(str(tmp_path / "src"))
+    src = spark.readStream.schema("doc_id bigint, text string").parquet(str(tmp_path / "src"))
+    sig = shingle_sets(src).select("doc_id", minhash_sig(F.col("sh")).alias("sig"))
+    q = (
+        minhash_bands(sig).select("doc_id", "b", "bkey")
+        .writeStream.format("memory").queryName("near_band_pin")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    streamed = spark.table("near_band_pin")
+    cached = minhash_bands(_spark_signatures(spark, SF_SRC)).select("doc_id", "b", "bkey")
+    assert streamed.exceptAll(cached).count() == 0
+    assert cached.exceptAll(streamed).count() == 0
+    assert streamed.count() > 0

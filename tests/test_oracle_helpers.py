@@ -12,6 +12,13 @@ string literal in ``kinesis_test_spark/`` (f-string fields rendered as
 The Column side is scanned as code: ``cents(...)`` is called only inside
 ``exact.py``; every other site goes through ``exact_sum``/``cents_sum``/
 ``cents_term``/``dsum``/``davg``.
+
+The MinHash rule (shingle set, seed-salted signature, band key, estimate)
+is spelled once per engine in ``operators/dedup.py``: the SQL generators
+``SQL_MINHASH_SIG``/``sql_bands``/``sql_est`` and the Column helpers
+``shingle_set``/``minhash_sig``. Any other copy of its seed hash, row-local
+``list_min`` signature, band positions, estimate, salted Column md5 or
+nested 3-gram ``zip_with`` fails here.
 """
 
 from __future__ import annotations
@@ -38,6 +45,19 @@ GUARD_HEAD = re.compile(r"CASE WHEN abs\(", re.I)
 GUARD_MID = re.compile(r"\) < 1\.0e\d+ THEN ", re.I)
 
 
+DEDUP = "operators/dedup.py"
+MINHASH_HELPERS = {"SQL_MINHASH_SIG", "sql_bands", "sql_est", "shingle_set", "minhash_sig"}
+MINHASH_SQL = {
+    "seed hash": re.compile(r"md5\s*\(\s*CAST\s*\(\s*seed\b", re.I),
+    "row-local sig": re.compile(r"list_min\s*\(\s*list_transform\s*\(", re.I),
+    "band positions": re.compile(r"\bsig\s*\[\s*(\d+|\{[^}]*\})\s*\*\s*b\b", re.I),
+    "estimate": re.compile(
+        r"generate_series\s*\(\s*1\s*,[^)]*\)\s*IF\s+\S+\.sig\s*\[\s*i\s*\]", re.I
+    ),
+    "salted md5 expr": re.compile(r"md5\s*\(\s*concat\s*\(\s*'", re.I),
+}
+
+
 def _text(node: ast.AST) -> str:
     if isinstance(node, ast.Constant):
         return node.value
@@ -50,10 +70,8 @@ def _text(node: ast.AST) -> str:
     return "".join(parts)
 
 
-def _strings(path: Path, exempt: set[str]):
-    """(line, whitespace-normalized text) of every string literal outside
-    the definitions named in ``exempt``."""
-    tree = ast.parse(path.read_text())
+def _exempt_lines(tree: ast.AST, exempt: set[str]) -> list[tuple[int, int]]:
+    """Line spans of the top-level definitions named in ``exempt``."""
     skip: list[tuple[int, int]] = []
     for node in ast.walk(tree):
         name = None
@@ -63,6 +81,14 @@ def _strings(path: Path, exempt: set[str]):
             name = node.targets[0].id
         if name in exempt:
             skip.append((node.lineno, node.end_lineno))
+    return skip
+
+
+def _strings(path: Path, exempt: set[str]):
+    """(line, whitespace-normalized text) of every string literal outside
+    the definitions named in ``exempt``."""
+    tree = ast.parse(path.read_text())
+    skip = _exempt_lines(tree, exempt)
     parts = {id(v) for n in ast.walk(tree) if isinstance(n, ast.JoinedStr) for v in n.values}
     for node in ast.walk(tree):
         is_str = isinstance(node, ast.Constant) and isinstance(node.value, str)
@@ -127,6 +153,70 @@ def test_no_pasted_helper_expansions():
     assert not any(copies.values()), "pasted helper SQL (interpolate the helper): " + "; ".join(
         f"{rule} x{len(v)}: {', '.join(v[:8])}" for rule, v in copies.items() if v
     )
+
+
+def _call_name(node: ast.AST) -> str | None:
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _salted_md5(node: ast.AST) -> bool:
+    """``md5(concat(lit(f"...{seed}..."), ...))``: a seed-salted Column md5."""
+    if _call_name(node) != "md5" or not node.args or _call_name(node.args[0]) != "concat":
+        return False
+    salt = node.args[0].args[0] if node.args[0].args else None
+    return _call_name(salt) == "lit" and bool(salt.args) and isinstance(salt.args[0], ast.JoinedStr)
+
+
+def _shingle_zip(node: ast.AST) -> bool:
+    """A ``zip_with`` nesting another ``zip_with``: the word-3-gram shape."""
+    return _call_name(node) == "zip_with" and any(
+        _call_name(n) == "zip_with" for a in node.args for n in ast.walk(a)
+    )
+
+
+def _minhash_copies(pkg: Path = PKG) -> dict[str, list[str]]:
+    """file:line of every MinHash spelling outside its helper in ``pkg``."""
+    rules = {name: [] for name in [*MINHASH_SQL, "salted md5 column", "shingle zip_with"]}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        exempt = MINHASH_HELPERS if rel == DEDUP else set()
+        for line, s in _strings(path, exempt):
+            for name, pat in MINHASH_SQL.items():
+                rules[name] += [f"{rel}:{line}"] * len(pat.findall(s))
+        tree = ast.parse(path.read_text())
+        skip = _exempt_lines(tree, exempt)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and not any(a <= node.lineno <= b for a, b in skip):
+                if _salted_md5(node):
+                    rules["salted md5 column"].append(f"{rel}:{node.lineno}")
+                if _shingle_zip(node):
+                    rules["shingle zip_with"].append(f"{rel}:{node.lineno}")
+    return rules
+
+
+def test_minhash_rule_spelled_once():
+    copies = _minhash_copies()
+    assert not any(copies.values()), "pasted MinHash rule (call the dedup helper): " + "; ".join(
+        f"{rule} x{len(v)}: {', '.join(v[:8])}" for rule, v in copies.items() if v
+    )
+
+
+def test_minhash_scan_sees_the_helpers():
+    # the patterns match the helpers' own output and code, so a copy is caught
+    from kinesis_test_spark.operators.dedup import SQL_MINHASH_SIG, sql_bands, sql_est
+
+    sql = " ".join(f"{SQL_MINHASH_SIG} {sql_bands(2)} {sql_est('a', 'b')}".split())
+    for name in ("seed hash", "band positions", "estimate"):
+        assert MINHASH_SQL[name].search(sql), name
+    assert MINHASH_SQL["row-local sig"].search("list_min(list_transform(sh, x -> md5(x)))")
+    assert MINHASH_SQL["salted md5 expr"].search("array_min(transform(sh, x -> md5(concat('{s}|', x))))")
+    helpers = ast.parse((PKG / DEDUP).read_text())
+    defs = {n.name: n for n in helpers.body if isinstance(n, ast.FunctionDef)}
+    assert any(_salted_md5(n) for n in ast.walk(defs["minhash_sig"]))
+    assert any(_shingle_zip(n) for n in ast.walk(defs["shingle_set"]))
 
 
 def _cents_calls() -> list[str]:

@@ -437,7 +437,9 @@ def test_shingle_identity_dedup_reuses_partitioning(spark, sf_dir, tmp_path):
     not add a shuffle: _build_shingles repartitions by doc_id FIRST, so
     the dropDuplicates aggregate reuses that exchange. One Exchange total
     — at corpus scale a second full-shuffle of the documents table would
-    double the most expensive stage of every shingle consumer.
+    double the most expensive stage of every shingle consumer. The MinHash
+    signature is a map-only projection of the shingle sets, so it adds
+    none either.
 
     Pinned against a RESTAGED copy of the fixture, not sf_dir: when the
     suite's parity module runs first it session-caches the shingles
@@ -447,13 +449,17 @@ def test_shingle_identity_dedup_reuses_partitioning(spark, sf_dir, tmp_path):
     (the pin would measure the cache, not the build)."""
     import shutil
 
-    from kinesis_test_spark.operators.dedup import _build_shingles
+    from pyspark.sql import functions as F
+
+    from kinesis_test_spark.operators.dedup import _build_shingles, minhash_sig
 
     shutil.copy(f"{sf_dir}/documents.parquet", tmp_path / "documents.parquet")
-    plan = plans.formatted(_build_shingles(spark, str(tmp_path)))
-    # formatted() prints each node twice (tree line + detail section) —
-    # count tree nodes only
-    assert plan.count("+- Exchange") == 1, plan
+    sets = _build_shingles(spark, str(tmp_path))
+    for df in (sets, sets.select("doc_id", minhash_sig(F.col("sh")).alias("sig"))):
+        plan = plans.formatted(df)
+        # formatted() prints each node twice (tree line + detail section) —
+        # count tree nodes only
+        assert plan.count("+- Exchange") == 1, plan
 
 
 def test_quality_classifier_zero_shuffle(spark, sf_dir):

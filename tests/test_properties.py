@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import random
+import re
 import string
 
 import duckdb
@@ -121,18 +122,15 @@ def test_lsh_band_dial_candidate_containment(spark, sf_dir):
     matching signature position creates a candidate, so the (4 bands × 2
     rows) candidate set is contained in the (8 bands × 1 row) one — recall
     rises monotonically with band count, cost = the extra collisions."""
-    from kinesis_test_spark.operators.dedup import _spark_shingles, minhash_pairs
+    from kinesis_test_spark.operators.dedup import _spark_signatures, minhash_pairs
 
-    sh = _spark_shingles(spark, sf_dir).cache()
-    try:
-        coarse = minhash_pairs(sh, n_bands=4, threshold=0.0).select("doc_a", "doc_b")
-        fine = minhash_pairs(sh, n_bands=8, threshold=0.0).select("doc_a", "doc_b")
-        n_coarse, n_fine = coarse.count(), fine.count()
-        assert n_coarse > 0
-        assert n_fine >= n_coarse
-        assert coarse.subtract(fine).count() == 0  # strict containment
-    finally:
-        sh.unpersist()
+    sig = _spark_signatures(spark, sf_dir)
+    coarse = minhash_pairs(sig, n_bands=4, threshold=0.0).select("doc_a", "doc_b")
+    fine = minhash_pairs(sig, n_bands=8, threshold=0.0).select("doc_a", "doc_b")
+    n_coarse, n_fine = coarse.count(), fine.count()
+    assert n_coarse > 0
+    assert n_fine >= n_coarse
+    assert coarse.subtract(fine).count() == 0  # strict containment
 
 
 def test_ivf_nprobe_recall_monotone(spark, sf_dir):
@@ -279,21 +277,28 @@ def test_driver_priority_stale_before_fresh():
 
 def test_incremental_dedup_corpus_side_is_standing_index(spark, sf_dir):
     """q_dedup_incremental's 100 TB contract: per-run cost is O(new batch).
-    (1) the corpus band index is built once per (session, sf_dir) and every
-    call reuses the SAME persisted relation; (2) the executed plan reads it
-    from storage (InMemoryTableScan), not by re-shingling the parquet;
-    (3) every emitted pair is new × corpus — no corpus×corpus work."""
+    (1) the corpus signatures are built once per (session, sf_dir) and
+    every call reuses the SAME persisted relation; (2) the executed plan
+    reads them from storage (InMemoryTableScan) and scans the documents
+    parquet once, for the new batch only — the corpus side is not
+    re-shingled; (3) every emitted pair is new × corpus — no corpus×corpus
+    work."""
     from kinesis_test_spark import plans, registry
     from kinesis_test_spark.operators import dedup
 
     registry.load_all()
-    c1 = dedup.corpus_minhash_bands(spark, sf_dir)
-    c2 = dedup.corpus_minhash_bands(spark, sf_dir)
+    c1 = dedup._spark_signatures(spark, sf_dir)
+    c2 = dedup._spark_signatures(spark, sf_dir)
     assert c1 is c2  # session cache hit — the "persisted signatures" relation
 
     df = registry.QUERIES["q_dedup_incremental"](spark, sf_dir)
     rows = df.collect()
-    assert "InMemoryTableScan" in plans.formatted(df)
+    plan = plans.formatted(df)
+    assert "InMemoryTableScan" in plan
+    # two distinct documents scans: the new batch's, and the one under the
+    # cached relation's InMemoryRelation (its build, shown, not re-run)
+    scans = set(re.findall(r"Scan parquet\s+\((\d+)\)", plan))
+    assert len(scans) == 2, plan
     for r in rows:
         assert r.new_doc % 10 == 0
         assert r.corpus_doc % 10 != 0
@@ -349,20 +354,19 @@ def test_minhash_bucket_cap_bounds_skewed_bucket(spark):
     oversized buckets degrade to star-linking: the candidate count drops
     to O(bands × n), while the CLUSTERING the pairs feed — connected
     components — is unchanged (the star spans each bucket)."""
-    from kinesis_test_spark.operators.dedup import N_BANDS, minhash_pairs
+    from pyspark.sql import functions as F
+
+    from kinesis_test_spark.operators.dedup import N_BANDS, minhash_pairs, minhash_sig
 
     # 40 near-dups: 20 shared shingles + 1 unique each (J ≈ 0.90);
     # 10 unrelated docs with disjoint shingle sets.
-    rows = []
-    for d in range(40):
-        rows += [(d, f"shared_{s}") for s in range(20)]
-        rows.append((d, f"uniq_{d}"))
-    for d in range(100, 110):
-        rows += [(d, f"other_{d}_{s}") for s in range(21)]
-    sh = local_rows(spark, rows, "doc_id long, s string")
+    rows = [(d, [f"shared_{s}" for s in range(20)] + [f"uniq_{d}"]) for d in range(40)]
+    rows += [(d, [f"other_{d}_{s}" for s in range(21)]) for d in range(100, 110)]
+    sets = local_rows(spark, rows, "doc_id long, sh array<string>")
+    sig = sets.select("doc_id", minhash_sig(F.col("sh")).alias("sig"))
 
-    exact = minhash_pairs(sh, threshold=0.5).collect()
-    capped = minhash_pairs(sh, threshold=0.5, bucket_cap=8).collect()
+    exact = minhash_pairs(sig, threshold=0.5).collect()
+    capped = minhash_pairs(sig, threshold=0.5, bucket_cap=8).collect()
 
     exact_pairs = {(r.doc_a, r.doc_b) for r in exact}
     capped_pairs = {(r.doc_a, r.doc_b) for r in capped}

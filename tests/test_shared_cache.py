@@ -29,7 +29,10 @@ def test_cached_equals_uncached(spark, sf_dir):
     cached = D._kept_shingles(spark, sf_dir)
     again = D._kept_shingles(spark, sf_dir)
     assert cached is again, "second call must return the same cached frame"
-    fresh = D._apply_df_cap(D._build_shingles(spark, sf_dir), D.NGRAM_DF_CAP)
+    from pyspark.sql import functions as F
+
+    fresh_sh = D._build_shingles(spark, sf_dir).select("doc_id", F.explode("sh").alias("s"))
+    fresh = D._apply_df_cap(fresh_sh, D.NGRAM_DF_CAP)
     assert _rows(cached, ["doc_id", "s"]) == _rows(fresh, ["doc_id", "s"])
 
 
