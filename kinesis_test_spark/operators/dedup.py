@@ -370,7 +370,11 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _simhash_oracle() -> str:
+def sql_simhash_fps() -> str:
+    """The oracle's SimHash CTEs ending in ``fps(doc_id, simhash)``: per
+    word-occurrence port hash, each of the 16 bits votes ±1, and the sign
+    of the per-doc vote sum is the fingerprint bit (the SQL mirror of
+    ``_simhash_fps``)."""
     from kinesis_test_spark.functions.porthash import sql_hex16
 
     h = sql_hex16("w")
@@ -379,14 +383,18 @@ def _simhash_oracle() -> str:
         for k in range(16)
     )
     fp = " + ".join(f"(CASE WHEN s{k} > 0 THEN {1 << k} ELSE 0 END)" for k in range(16))
-    return f"""
-WITH words AS (
+    return f"""words AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
 bits AS (
   SELECT doc_id,
          {bit_sums}
   FROM words GROUP BY doc_id),
-fps AS (SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM bits)
+fps AS (SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM bits)"""
+
+
+def _simhash_oracle() -> str:
+    return f"""
+WITH {sql_simhash_fps()}
 SELECT doc_id, simhash,
        COUNT(*) OVER (PARTITION BY simhash) AS n_same_fp
 FROM fps
@@ -647,17 +655,8 @@ def _simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_pairs_oracle() -> str:
     # brute-force n² hamming check — the oracle the pigeonhole join must match
-    from kinesis_test_spark.functions.porthash import sql_hex16
-
-    h = sql_hex16("w")
-    bit_sums = ", ".join(
-        f"SUM(CASE WHEN ({h} & {1 << k}) > 0 THEN 1 ELSE -1 END) AS s{k}" for k in range(16)
-    )
-    fp = " + ".join(f"(CASE WHEN s{k} > 0 THEN {1 << k} ELSE 0 END)" for k in range(16))
     return f"""
-WITH words AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-bits AS (SELECT doc_id, {bit_sums} FROM words GROUP BY doc_id),
-fps AS (SELECT doc_id, CAST({fp} AS BIGINT) AS simhash FROM bits)
+WITH {sql_simhash_fps()}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
 FROM fps a JOIN fps b ON a.doc_id < b.doc_id

@@ -77,13 +77,26 @@ def apply_sql_confs(spark: SparkSession) -> None:
         spark.conf.set(key, value)
 
 
+def driver_memory() -> str:
+    """The driver heap get_spark asks for: ``SPARK_GRAFT_DRIVER_MEM`` if
+    set, else half the host's physical memory (MemTotal on Linux). In
+    local mode the driver heap is also every executor's heap, and RocksDB
+    state, Arrow buffers, Python workers and the OS live outside it: a
+    fixed 16g on a 15 GB host let one full test run be killed part way."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total // 2 >> 20}m"
+
+
 def get_spark(app_name: str = "kinesis_test_spark") -> SparkSession:
     """Build (or fetch) the engine session: local[cpus()] with sql_confs."""
     n = cpus()
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config(map=sql_confs(n))
     )

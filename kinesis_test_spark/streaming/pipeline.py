@@ -25,7 +25,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructField, StructType
 
 from kinesis_test_spark.sources.tables import normalize_ts
@@ -245,16 +245,19 @@ def state_partitions_for(
 
 @contextmanager
 def sized_state(spark: SparkSession, n_partitions: int):
-    """Set spark.sql.shuffle.partitions around a streaming START (the
-    stateful operator reads it once, at first-batch planning) and restore
-    it for the rest of the session.
+    """Set spark.sql.shuffle.partitions around a streaming START and
+    restore it.
 
-    SINGLE-THREADED-SESSION REQUIREMENT (r14 ADVICE): this mutates the
-    session-global conf for the duration of the with-block, so any OTHER
-    query planned on the same SparkSession inside the block (an
-    overlapping batch action, a second stream start) silently inherits
-    the tiny shuffle-partition count. Current call sites block on
-    run_to_memory single-threaded; a caller that needs concurrency must
+    The stream plans its micro-batches in its own clone of the session,
+    taken when the query starts, and the first batch locks the count into
+    the checkpoint. So the conf only has to hold across ``.start()``: a
+    stateful operator started inside gets ``n_partitions`` state stores,
+    while the shared session reads its own default again by the time any
+    batch runs. ``start_stream`` is the one caller in the engine.
+
+    The session-global conf is still changed while ``.start()`` runs: a
+    query planned from another thread on the same SparkSession at that
+    moment inherits the count. A caller that needs that concurrency must
     scope the conf via a cloned session (spark.newSession()) instead."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
@@ -264,43 +267,59 @@ def sized_state(spark: SparkSession, n_partitions: int):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def start_stream(
+    writer: DataStreamWriter, checkpoint: Path, state_partitions: int | None = None
+) -> StreamingQuery:
+    """Start a configured stream (memory, parquet, json or foreachBatch
+    sink) on ``checkpoint``: the start half of ``drain``, for the callers
+    that drive their own triggers with ``processAllAvailable``.
+
+    ``state_partitions`` (stateful streams): the state-store partition
+    count, held by ``sized_state`` across ``.start()`` only. Every state
+    partition is a live store instance (RocksDB) paying
+    open/commit/changelog per micro-batch, and the count locks into the
+    checkpoint at the first batch. Callers derive it from the input
+    volume (``state_partitions_for``), never from the session's core
+    count — see the r14 s_ingest measurement (3-5 s/batch of pure commit
+    machinery for 5 state rows at the 32-core default)."""
+    writer = writer.option("checkpointLocation", str(checkpoint))
+    if state_partitions is None:
+        return writer.start()
+    with sized_state(writer._spark, state_partitions):
+        return writer.start()
+
+
+def drain(
+    writer: DataStreamWriter, checkpoint: Path, state_partitions: int | None = None
+) -> StreamingQuery:
+    """Run a configured stream to completion: AvailableNow trigger, start
+    through ``start_stream`` and await termination. Returns the drained
+    query. Every engine stream starts here or in ``start_stream``."""
+    q = start_stream(writer.trigger(availableNow=True), checkpoint, state_partitions)
+    q.awaitTermination()
+    return q
+
+
 def run_to_memory(
     df: DataFrame,
     name: str,
     checkpoint: Path,
     output_mode: str = "append",
     state_partitions: int | None = None,
-) -> None:
-    """Drain the stream (AvailableNow) into an in-memory sink table.
-
-    ``state_partitions`` (stateful streams): lock the state-store
-    partition count for this stream via ``sized_state`` — every state
-    partition is a live store instance (RocksDB) paying
-    open/commit/changelog per micro-batch, and the count locks into the
-    checkpoint at the first batch. Callers derive it from the input
-    volume (``state_partitions_for``), never from the session's core
-    count — see the r14 s_ingest measurement (3-5 s/batch of pure
-    commit machinery for 5 state rows at the 32-core default)."""
-
-    def _start() -> None:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", str(checkpoint))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    if state_partitions is not None:
-        with sized_state(df.sparkSession, state_partitions):
-            _start()
-    else:
-        _start()
+) -> DataFrame:
+    """Drain the stream into the in-memory sink table ``name`` and return
+    that table. ``state_partitions`` as in ``start_stream``."""
+    drain(
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        checkpoint,
+        state_partitions,
+    )
+    return df.sparkSession.table(name)
 
 
-def partitioned_json_sink(df: DataFrame, out_dir: Path, checkpoint: Path) -> StreamingQuery:
+def partitioned_json_sink(
+    df: DataFrame, out_dir: Path, checkpoint: Path, state_partitions: int | None = None
+) -> StreamingQuery:
     """The reference's S3 sink (consumer.py:221-249): event-time partitioned
     JSON, y/m/d/h, as Spark's own streaming file sink. Spark task-attempt
     files replace the uuid object names. Returns the drained query.
@@ -310,15 +329,16 @@ def partitioned_json_sink(df: DataFrame, out_dir: Path, checkpoint: Path) -> Str
     each hour's rows into one task — without it every upstream task writes
     a file into every hour dir. Its writer count is the stream's
     shuffle-partition count, locked into the checkpoint at the first
-    batch: ``sized_state``'s input-volume count around a stateful stream,
-    the session default otherwise.
+    batch: ``state_partitions`` (the input-volume count of a stateful
+    upstream, see ``start_stream``) when given, otherwise the session's
+    count when the stream starts.
 
     Exactly-once: the sink logs each committed batch's files under
     ``out_dir/_spark_metadata`` and skips a batch it has already
     committed when a restart replays it. Read the output through Spark,
     which lists files from that log; a raw listing of part files can
     include orphans from a crashed attempt."""
-    q = (
+    partitioned = (
         df.select(
             "*",
             F.year("ts").alias("y"),
@@ -328,12 +348,11 @@ def partitioned_json_sink(df: DataFrame, out_dir: Path, checkpoint: Path) -> Str
         )
         .withColumn("ts", F.col("ts").cast("string"))
         .repartition("y", "m", "d", "h")
-        .writeStream.format("json")
-        .partitionBy("y", "m", "d", "h")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(checkpoint))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
-    return q
+    return drain(
+        partitioned.writeStream.format("json")
+        .partitionBy("y", "m", "d", "h")
+        .option("path", str(out_dir)),
+        checkpoint,
+        state_partitions,
+    )

@@ -21,14 +21,16 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kinesis_test_spark.functions.exact import (
     cents_sum, dsum, sql_cents_term, sql_dsum, sql_finite
 )
 from kinesis_test_spark.registry import query
-from kinesis_test_spark.sources.tables import normalize_ts
+from kinesis_test_spark.sources.tables import t
 from kinesis_test_spark.streaming.pipeline import (
     POST_EPOCH_SQL,
+    drain,
     mod_slice,
     partitioned_json_sink,
     post_epoch,
@@ -37,9 +39,9 @@ from kinesis_test_spark.streaming.pipeline import (
     read_staged_stream,
     run_to_memory,
     scratch_dir,
-    sized_state,
     stage_events,
     stage_far_future_sentinels,
+    start_stream,
     state_partitions_for,
 )
 
@@ -63,6 +65,103 @@ def _evt_state_parts(spark: SparkSession, sf_dir: str) -> int:
     return state_partitions_for(spark, f"{sf_dir}/events.parquet")
 
 
+def _to_memory(df: DataFrame, sf_dir: str, d, output_mode: str) -> DataFrame:
+    """Drain a stateful stream over the events table into a fresh memory
+    table named after the scratch area ``d`` (checkpoint ``d/cp``), its
+    state sized by _evt_state_parts."""
+    return run_to_memory(
+        df,
+        _mem_name(d.parent.name),
+        d / "cp",
+        output_mode,
+        _evt_state_parts(df.sparkSession, sf_dir),
+    )
+
+
+_WIRE_TS = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+# The reference's wire record (consumer.py:123): events as JSON lines, ts
+# as a string. The explicit schema spares the stream an inference scan.
+_WIRE_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.StringType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
+# partitioned_json_sink's output read back: the wire record plus its
+# y/m/d/h partition columns (inference would scan every file twice)
+_SINK_SCHEMA = T.StructType(
+    _WIRE_SCHEMA.fields + [T.StructField(c, T.IntegerType()) for c in "ymdh"]
+)
+
+
+def _json_wire_stream(spark: SparkSession, sf_dir: str, src, copies: int = 1) -> DataFrame:
+    """Stage the events table as JSON lines under ``src`` (``copies``
+    whole-table arrivals; a second one is a replay) and stream it back
+    with the wire schema, timestamps re-parsed."""
+    wire = t(spark, sf_dir, "events").select(
+        "event_id",
+        F.date_format("ts", _WIRE_TS).alias("ts"),
+        "user_id",
+        "event_type",
+        "value",
+        "props",
+    )
+    for i in range(copies):
+        wire.coalesce(1).write.mode("append" if i else "overwrite").json(str(src))
+    return (
+        spark.readStream.schema(_WIRE_SCHEMA)
+        .json(str(src))
+        .withColumn("ts", F.to_timestamp("ts", _WIRE_TS))
+    )
+
+
+def _read_sink(spark: SparkSession, out) -> DataFrame:
+    return spark.read.schema(_SINK_SCHEMA).option("basePath", str(out)).json(str(out))
+
+
+def _id_halves(spark: SparkSession, sf_dir: str, stage, drain_once) -> None:
+    """Stage the events in two event_id halves, calling ``drain_once``
+    after each: the first run stops (the 'kill'), the second is a fresh
+    query on the same checkpoint (the 'resume'). The first half carries
+    the NULL-id rows: a bare < mid / >= mid pair fails BOTH for NULL and
+    silently loses the row (the mod_slice class-3 bug on a range split —
+    tests/test_edge_dupkeys.py). An empty source (edge_empty) stages
+    nothing in either half; any split point works."""
+    lo, hi = spark.read.parquet(f"{sf_dir}/events.parquet").agg(
+        F.min("event_id"), F.max("event_id")
+    ).first()
+    mid = (lo + hi) // 2 if lo is not None else 0
+    stage_events(spark, sf_dir, stage, "first", where=f"event_id < {mid} OR event_id IS NULL")
+    drain_once()
+    stage_events(spark, sf_dir, stage, "second", where=f"event_id >= {mid}")
+    drain_once()
+
+
+def _sentinel_drain(spark: SparkSession, sf_dir: str, stream: DataFrame, d, keys):
+    """Drain ``stream`` (defined over the staged dir ``d/src``) into the
+    parquet sink ``d/out`` in three phases on one checkpoint: the events,
+    then two far-future sentinel arrivals (``keys``, 1 h and 2 h past the
+    real max ts) whose batches advance the watermark past every real join
+    window or timeout. AvailableNow needs them: a watermark only advances
+    on later ARRIVALS. An empty source stages no sentinels. Returns the
+    raw-domain max ts (None when empty)."""
+    max_ts = spark.read.parquet(f"{sf_dir}/events.parquet").agg(F.max("ts")).first()[0]
+    n_state = _evt_state_parts(spark, sf_dir)
+    stage_events(spark, sf_dir, d / "src", "events")
+    for hours_ahead in (0, 1, 2):
+        if hours_ahead and max_ts is not None:
+            stage_far_future_sentinels(
+                spark, sf_dir, d / "src", f"sentinel_{hours_ahead}", hours_ahead,
+                keys=keys, max_ts=max_ts,
+            )
+        drain(stream.writeStream.format("parquet").option("path", str(d / "out")), d / "cp", n_state)
+    return max_ts
+
+
 @query(
     "s_ingest",
     oracle="SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type",
@@ -70,11 +169,8 @@ def _evt_state_parts(spark: SparkSession, sf_dir: str) -> int:
 def s_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbounded ingest drained with AvailableNow; complete-mode counts must
     equal the batch answer exactly."""
-    d = scratch_dir("s_ingest")
-    name = _mem_name("ingest")
     counts = read_events_stream(spark, sf_dir).groupBy("event_type").agg(F.count("*").alias("n"))
-    run_to_memory(counts, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(counts, sf_dir, scratch_dir("s_ingest"), "complete")
 
 
 @query(
@@ -89,8 +185,6 @@ FROM events WHERE ts IS NOT NULL GROUP BY 1, 2, 3
 def s_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time windows (the reference's hourly y/m/d/h layout,
     consumer.py:226-232, as a first-class windowed aggregation)."""
-    d = scratch_dir("s_tumbling")
-    name = _mem_name("tumbling")
     win = (
         read_events_stream(spark, sf_dir)
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -102,8 +196,7 @@ def s_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    run_to_memory(win, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(win, sf_dir, scratch_dir("s_tumbling"), "complete")
 
 
 @query(
@@ -120,8 +213,6 @@ GROUP BY ws
 def s_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1h length, 30m hop): every event lands in exactly
     two windows; the oracle materializes both membership rows."""
-    d = scratch_dir("s_sliding")
-    name = _mem_name("sliding")
     win = (
         read_events_stream(spark, sf_dir)
         .groupBy(F.window("ts", "1 hour", "30 minutes"))
@@ -132,8 +223,7 @@ def s_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    run_to_memory(win, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(win, sf_dir, scratch_dir("s_sliding"), "complete")
 
 
 @query(
@@ -163,8 +253,6 @@ def s_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     tealium_session_id concept, record.json:3, derived from event time).
     Spark merges events with gap < 30m; window end = last event + gap —
     the oracle reproduces exactly that."""
-    d = scratch_dir("s_session")
-    name = _mem_name("session")
     win = (
         read_events_stream(spark, sf_dir)
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
@@ -176,8 +264,7 @@ def s_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    run_to_memory(win, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(win, sf_dir, scratch_dir("s_session"), "complete")
 
 
 @query(
@@ -204,15 +291,13 @@ def s_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = d / "src"
     stage_events(spark, sf_dir, stage, "a")
     stage_events(spark, sf_dir, stage, "b")
-    name = _mem_name("dedup")
     deduped = (
         read_staged_stream(spark, sf_dir, stage)
         .filter(F.col("event_id").isNotNull())  # identity quarantine (docstring)
         .dropDuplicates(["event_id"])
         .select("event_id", "user_id", "event_type", "ts", "value")
     )
-    run_to_memory(deduped, name, d / "cp", output_mode="append", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(deduped, sf_dir, d, "append")
 
 
 @query(
@@ -229,28 +314,9 @@ def s_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's file sink → JSON files under y=/m=/d=/h= partition dirs, then
     read the files back and count per partition — verifying layout and
     content arrived."""
-    from pyspark.sql import types as T
-
     d = scratch_dir("s_sink")
-    out = d / "out"
-    partitioned_json_sink(read_events_stream(spark, sf_dir), out, d / "cp")
-    # explicit read schema: inference would scan every partition file twice
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-            T.StructField("y", T.IntegerType()),
-            T.StructField("m", T.IntegerType()),
-            T.StructField("d", T.IntegerType()),
-            T.StructField("h", T.IntegerType()),
-        ]
-    )
-    back = spark.read.schema(schema).option("basePath", str(out)).json(str(out))
-    return back.groupBy("y", "m", "d", "h").agg(F.count("*").alias("n"))
+    partitioned_json_sink(read_events_stream(spark, sf_dir), d / "out", d / "cp")
+    return _read_sink(spark, d / "out").groupBy("y", "m", "d", "h").agg(F.count("*").alias("n"))
 
 
 @query(
@@ -260,11 +326,8 @@ def s_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def s_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-key state in update mode (the lease-counter pattern,
     consumer.py:189: monotonically advancing per-key state)."""
-    d = scratch_dir("s_stateful")
-    name = _mem_name("stateful")
     counts = read_events_stream(spark, sf_dir).groupBy("user_id").agg(F.count("*").alias("n"))
-    run_to_memory(counts, name, d / "cp", output_mode="update", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(counts, sf_dir, scratch_dir("s_stateful"), "update")
 
 
 @query("s_watermark")  # rows-only: arrival-order semantics, asserted in tests
@@ -300,18 +363,15 @@ def s_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "n")
     )
-    with sized_state(spark, _evt_state_parts(spark, sf_dir)):
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", str(d / "cp"))
-            .start()
-        )
-        q.processAllAvailable()
-        stage_events(spark, sf_dir, stage, "late", where=where_late)
-        q.processAllAvailable()
-        q.stop()
+    q = start_stream(
+        windowed.writeStream.format("memory").queryName(name).outputMode("append"),
+        d / "cp",
+        _evt_state_parts(spark, sf_dir),
+    )
+    q.processAllAvailable()
+    stage_events(spark, sf_dir, stage, "late", where=where_late)
+    q.processAllAvailable()
+    q.stop()
     return spark.table(name)
 
 
@@ -326,39 +386,17 @@ def s_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     same checkpointLocation resumes — the sink must hold each record
     exactly once, no replays, no gaps."""
     d = scratch_dir("s_checkpoint")
-    stage, sink, cp = d / "src", d / "sink", d / "cp"
-    lo, hi = spark.read.parquet(f"{sf_dir}/events.parquet").agg(
-        F.min("event_id"), F.max("event_id")
-    ).first()
-    # empty source (edge_empty): both halves stage nothing; any split
-    # point works because no row matches either predicate
-    mid = (lo + hi) // 2 if lo is not None else 0
+    stage, sink = d / "src", d / "sink"
     cols = ["event_id", "user_id", "event_type", "ts", "value"]
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(str(sink))
 
     def run_once() -> None:
         stream = read_staged_stream(spark, sf_dir, stage).select(*cols)
+        drain(stream.writeStream.foreachBatch(write_batch), d / "cp")
 
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(str(sink))
-
-        q = (
-            stream.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", str(cp))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # first half carries the NULL-id rows: a bare < mid / >= mid pair
-    # fails BOTH for NULL and silently loses the row (the mod_slice
-    # class-3 bug on a range split — tests/test_edge_dupkeys.py)
-    stage_events(
-        spark, sf_dir, stage, "first",
-        where=f"event_id < {mid} OR event_id IS NULL",
-    )
-    run_once()  # query terminates — the 'kill'
-    stage_events(spark, sf_dir, stage, "second", where=f"event_id >= {mid}")
-    run_once()  # fresh query, same checkpoint — the 'resume'
+    _id_halves(spark, sf_dir, stage, run_once)
     # explicit schema: an all-empty run may leave the sink with no data
     # files to infer from (edge_empty corpus)
     return spark.read.schema(
@@ -379,41 +417,12 @@ def s_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (consumer.py:123: raw bytes → json.loads): events staged as JSON-lines
     files, streamed with an explicit schema, timestamps re-parsed, then
     aggregated; must reproduce the batch answer exactly."""
-    from pyspark.sql import types as T
-
     d = scratch_dir("s_json_ingest")
-    src = d / "src"
-    batch = normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    batch.coalesce(1).write.mode("overwrite").json(str(src))
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
-    )
-    name = _mem_name("json_ingest")
-    agg = stream.groupBy("event_type").agg(
+    agg = _json_wire_stream(spark, sf_dir, d / "src").groupBy("event_type").agg(
         F.count("*").alias("n"),
         dsum("value", "sum_value", 18, 6),
     )
-    run_to_memory(agg, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(agg, sf_dir, d, "complete")
 
 
 @query(
@@ -474,8 +483,6 @@ def s_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    d = scratch_dir("s_custom_state")
-    name = _mem_name("custom_state")
     result = (
         read_events_stream(spark, sf_dir)
         .groupBy("user_id")
@@ -483,8 +490,7 @@ def s_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
     )
-    run_to_memory(result, name, d / "cp", output_mode="update", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(result, sf_dir, scratch_dir("s_custom_state"), "update")
 
 
 @query(
@@ -501,8 +507,6 @@ def s_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension data to a stream (the reference has no join capability at
     all; its events carry denormalized fields instead). The static side is
     broadcast; no stream state is needed."""
-    d = scratch_dir("s_static_join")
-    name = _mem_name("static_join")
     nation = F.broadcast(spark.read.parquet(f"{sf_dir}/nation.parquet"))
     stream = read_events_stream(spark, sf_dir)
     joined = stream.join(nation, stream.user_id % 25 == nation.n_nationkey)
@@ -510,8 +514,7 @@ def s_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         dsum("value", "sum_value", 18, 6),
     )
-    run_to_memory(agg, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(agg, sf_dir, scratch_dir("s_static_join"), "complete")
 
 
 @query(
@@ -544,31 +547,10 @@ def s_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         _sh.rmtree(str(view), ignore_errors=True)
         _sh.move(str(view) + "_next", str(view))
 
-    lo, hi = spark.read.parquet(f"{sf_dir}/events.parquet").agg(
-        F.min("event_id"), F.max("event_id")
-    ).first()
-    mid = (lo + hi) // 2 if lo is not None else 0  # empty source: see s_checkpoint
-
     def run_once() -> None:
-        q = (
-            read_staged_stream(spark, sf_dir, stage)
-            .writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", str(cp))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(read_staged_stream(spark, sf_dir, stage).writeStream.foreachBatch(merge_batch), cp)
 
-    # first half carries the NULL-id rows: a bare < mid / >= mid pair
-    # fails BOTH for NULL and silently loses the row (the mod_slice
-    # class-3 bug on a range split — tests/test_edge_dupkeys.py)
-    stage_events(
-        spark, sf_dir, stage, "first",
-        where=f"event_id < {mid} OR event_id IS NULL",
-    )
-    run_once()
-    stage_events(spark, sf_dir, stage, "second", where=f"event_id >= {mid}")
-    run_once()
+    _id_halves(spark, sf_dir, stage, run_once)
     return spark.read.parquet(str(view)).select("event_type", F.col("n").cast("bigint").alias("n"))
 
 
@@ -592,8 +574,6 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     band join. The band is stated in exact MICROS (the engine compares
     raw timestamps against an interval) and the event-time domain is
     strictly post-epoch on both engines (pipeline.post_epoch)."""
-    d = scratch_dir("s_stream_join")
-    name = _mem_name("ssjoin")
     left = (
         post_epoch(read_events_stream(spark, sf_dir))
         .select(
@@ -618,8 +598,7 @@ def s_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("ts_b") > F.col("ts_a"))
         & (F.col("ts_b") <= F.col("ts_a") + F.expr("INTERVAL 5 MINUTES")),
     ).select("a_event_id", "b_event_id", "user_id")
-    run_to_memory(joined, name, d / "cp", output_mode="append", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(joined, sf_dir, scratch_dir("s_stream_join"), "append")
 
 
 @query("s_stream_join_left")  # rows-only: final-watermark emission isn't batch SQL
@@ -653,18 +632,8 @@ def s_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: consumer.py:292-303 batches are joined to their retries only
     when present; unmatched must still land in the sink exactly once."""
     d = scratch_dir("s_stream_join_left")
-    stage, out, cp = d / "src", d / "out", d / "cp"
+    stage = d / "src"
     stage.mkdir(parents=True, exist_ok=True)  # stream defined before first arrival
-    max_ts = spark.read.parquet(f"{sf_dir}/events.parquet").agg(F.max("ts")).first()[0]
-
-    def stage_sentinel(name: str, hours_ahead: int) -> None:
-        if max_ts is None:  # empty source: nothing to close, no sentinels
-            return
-        stage_far_future_sentinels(
-            spark, sf_dir, stage, name, hours_ahead,
-            keys=[(-1, -1, "click"), (-2, -2, "purchase")],
-            max_ts=max_ts,
-        )
 
     def side(alias_id: str, etype: str, uid: str, ts: str) -> DataFrame:
         # strictly post-epoch domain (pipeline.post_epoch): the join drops
@@ -697,25 +666,11 @@ def s_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts_a").alias("click_ts"),
     )
 
-    def run_once() -> None:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(cp))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     # stream-stream join = FOUR state stores per partition per batch; the
     # count locks into the checkpoint at the first drain (_evt_state_parts)
-    with sized_state(spark, _evt_state_parts(spark, sf_dir)):
-        stage_events(spark, sf_dir, stage, "events")
-        run_once()
-        stage_sentinel("sentinel_1", hours_ahead=1)
-        run_once()
-        stage_sentinel("sentinel_2", hours_ahead=2)
-        run_once()
+    max_ts = _sentinel_drain(
+        spark, sf_dir, joined, d, keys=[(-1, -1, "click"), (-2, -2, "purchase")]
+    )
     # Sentinel scrub is by TIME, not id: sentinels sit ≥1h past the real
     # max ts, so "click_ts <= real max" keeps every legal click — including
     # negative-id ones a `click_id >= 0` scrub would silently drop
@@ -725,7 +680,7 @@ def s_stream_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
         # explicit schema: an empty run leaves the sink with no data files
         # to infer from (edge_empty corpus)
         "click_id bigint, purchase_id bigint, user_id bigint, click_ts timestamp"
-    ).parquet(str(out))
+    ).parquet(str(d / "out"))
     if max_ts is not None:
         if isinstance(max_ts, int):  # long-nanos encoding
             cutoff = _dt.datetime(1970, 1, 1) + _dt.timedelta(
@@ -771,16 +726,13 @@ def s_python_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # State sized to the source's own bounded domain (5 event-type keys over
     # a fixed 1000-row generator — a constant of the operator, not of the
     # submitting cluster): one live store instead of 32 per micro-batch.
-    with sized_state(spark, 1):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", str(d / "cp"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+    q = start_stream(
+        agg.writeStream.format("memory").queryName(name).outputMode("complete"),
+        d / "cp",
+        1,
+    )
+    q.processAllAvailable()
+    q.stop()
     return spark.table(name)
 
 
@@ -800,35 +752,10 @@ def s_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     record-level dedup → event-time y/m/d/h partitioned JSON sink →
     read-back. The sink contents must equal the batch truth exactly:
     replay suppressed, every event once, reference layout."""
-    from pyspark.sql import types as T
-
     d = scratch_dir("s_ref_pipeline")
-    src, out, cp = d / "src", d / "out", d / "cp"
-    # stage the wire: events as JSON lines, WHOLE TABLE TWICE (replay)
-    batch = normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet")).select(
-        "event_id",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts"),
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    batch.coalesce(1).write.mode("overwrite").json(str(src))
-    batch.coalesce(1).write.mode("append").json(str(src))  # the replay
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.StringType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+    # the wire carries the WHOLE TABLE TWICE (the replay)
     stream = (
-        spark.readStream.schema(schema)
-        .json(str(src))
-        .withColumn("ts", F.to_timestamp("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+        _json_wire_stream(spark, sf_dir, d / "src", copies=2)
         .filter(F.col("event_id").isNotNull())  # identity quarantine (s_dedup)
         .dropDuplicates(["event_id"])  # record-level (vs consumer.py:292-303)
     )
@@ -838,20 +765,8 @@ def s_reference_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # data in both directions (1 at fixture scale, thousands at 100 TB).
     # The sink's _spark_metadata log makes the output exactly-once, and
     # the read-back below lists files from that log.
-    with sized_state(spark, _evt_state_parts(spark, sf_dir)):
-        partitioned_json_sink(stream, out, cp)
-    back = spark.read.schema(
-        T.StructType(
-            schema.fields
-            + [
-                T.StructField("y", T.IntegerType()),
-                T.StructField("m", T.IntegerType()),
-                T.StructField("d", T.IntegerType()),
-                T.StructField("h", T.IntegerType()),
-            ]
-        )
-    ).option("basePath", str(out)).json(str(out))
-    return back.groupBy("y", "m", "d", "h", "event_type").agg(F.count("*").alias("n"))
+    partitioned_json_sink(stream, d / "out", d / "cp", _evt_state_parts(spark, sf_dir))
+    return _read_sink(spark, d / "out").groupBy("y", "m", "d", "h", "event_type").agg(F.count("*").alias("n"))
 
 
 
@@ -877,14 +792,7 @@ def s_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         out.write.mode("append").json(str(js))
         out.unpersist()
 
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(write_both)
-        .option("checkpointLocation", str(cp))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_events_stream(spark, sf_dir).writeStream.foreachBatch(write_both), cp)
     n_pq = spark.read.parquet(str(pq)).count()
     n_js = spark.read.json(str(js)).count()
     rows = [("parquet", n_pq), ("json", n_js)]
@@ -908,7 +816,6 @@ def s_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = d / "src"
     stage_events(spark, sf_dir, stage, "a")
     stage_events(spark, sf_dir, stage, "b")
-    name = _mem_name("dedup_wm")
     deduped = (
         post_epoch(read_staged_stream(spark, sf_dir, stage))
         .filter(F.col("event_id").isNotNull())  # identity quarantine (s_dedup)
@@ -916,8 +823,7 @@ def s_dedup_watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    run_to_memory(deduped, name, d / "cp", output_mode="append", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(deduped, sf_dir, d, "append")
 
 
 def _near_gate_oracle() -> str:
@@ -1048,9 +954,7 @@ def s_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unaffected: it runs in the scan stage, whose parallelism is the
     # staged file count above.
     n_state = max(1, -(-(n_docs * N_BANDS) // 500_000))
-    run_to_memory(winners, name, cp, output_mode="append", state_partitions=n_state)
-
-    won = spark.table(name)
+    won = run_to_memory(winners, name, cp, output_mode="append", state_partitions=n_state)
     # the verdict side bands the session-cached signature relation, the
     # same shingle set and minhash_sig projection the stream applied row
     # by row, so the md5 sweep is not run a second time per session
@@ -1102,15 +1006,12 @@ def s_rate_limited(spark: SparkSession, sf_dir: str) -> DataFrame:
         seen.append(batch_id)
         batch_df.write.mode("append").parquet(str(sink))
 
-    q = (
+    drain(
         read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger=1)
         .select("event_id", "user_id", "event_type")
-        .writeStream.foreachBatch(land)
-        .option("checkpointLocation", str(cp))
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(land),
+        cp,
     )
-    q.awaitTermination()
     back = spark.read.parquet(str(sink))
     return back.agg(
         F.lit(len(seen)).cast("bigint").alias("n_batches"),
@@ -1173,14 +1074,10 @@ def s_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # atomic-ish swap: re-point by rewriting the sink from the staged copy
         spark.read.parquet(str(tmp)).write.mode("overwrite").parquet(str(sink))
 
-    q = (
-        read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger=1)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", str(cp))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger=1).writeStream.foreachBatch(merge),
+        cp,
     )
-    q.awaitTermination()
     snap = spark.read.parquet(str(sink))
     return snap.select(
         "user_id",
@@ -1208,8 +1105,6 @@ def s_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id) never counts NULL, so the post-dedup count is count(user_id)
     — not count(*), which would tally an anonymous-user row the SQL form
     ignores."""
-    d = scratch_dir("s_window_users")
-    name = _mem_name("wusers")
     counts = (
         read_events_stream(spark, sf_dir)
         .select(F.window("ts", "1 hour").start.alias("window_start"), "user_id")
@@ -1217,8 +1112,7 @@ def s_window_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("window_start")
         .agg(F.count("user_id").alias("n_users"))
     )
-    run_to_memory(counts, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(counts, sf_dir, scratch_dir("s_window_users"), "complete")
 
 
 HH_TOP_N = 3  # heavy hitters reported per window
@@ -1257,22 +1151,19 @@ def s_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the s_window_users NULL convention); timeless rows drop from window()
     on both sides (ts IS NOT NULL mirror). n DESC ties break on user_id
     ASC — unique within a window, so the cut is placement-independent."""
-    d = scratch_dir("s_heavy_hitters")
-    name = _mem_name("hh")
     counts = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("user_id").isNotNull())
         .groupBy(F.window("ts", "1 hour").start.alias("window_start"), "user_id")
         .agg(F.count("*").alias("n"))
     )
-    run_to_memory(counts, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
     from pyspark.sql import Window
 
     w = Window.partitionBy("window_start").orderBy(
         F.col("n").desc(), F.col("user_id").asc()
     )
     return (
-        spark.table(name)
+        _to_memory(counts, sf_dir, scratch_dir("s_heavy_hitters"), "complete")
         .withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= HH_TOP_N)
         .select("window_start", "rnk", "user_id", F.col("n").cast("bigint").alias("n"))
@@ -1298,8 +1189,6 @@ def s_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     on-call alert rule compiles to. The pre-aggregation filter prunes the
     stream before any state (only 'error' rows enter the window store);
     the post-aggregation filter runs on the drained result."""
-    d = scratch_dir("s_alert")
-    name = _mem_name("alert")
     win = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "error")
@@ -1307,8 +1196,7 @@ def s_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("window_start"), "event_type", "n")
     )
-    run_to_memory(win, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name).filter(F.col("n") > ALERT_THRESHOLD)
+    return _to_memory(win, sf_dir, scratch_dir("s_alert"), "complete").filter(F.col("n") > ALERT_THRESHOLD)
 
 
 @query(
@@ -1348,16 +1236,10 @@ def s_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         cents_sum("value", 18, 2).alias("v"),
     )
-    q = (
-        observed.select("event_id")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", str(cp))
-        .trigger(availableNow=True)
-        .start()
+    q = drain(
+        observed.select("event_id").writeStream.format("memory").queryName(name).outputMode("append"),
+        cp,
     )
-    q.awaitTermination()
     n_rows, total = 0, Decimal(0)
     n_batches = 0
     for prog in q.recentProgress:
@@ -1432,14 +1314,10 @@ def s_table_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             meta={"batch_id": batch_id, "sink": sink_id},
         )
 
-    q = (
-        read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger="1")
-        .writeStream.foreachBatch(land)
-        .option("checkpointLocation", str(cp))
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        read_staged_stream(spark, sf_dir, stage, maxFilesPerTrigger="1").writeStream.foreachBatch(land),
+        cp,
     )
-    q.awaitTermination()
     # replay batch 0 against the published log — must be a no-op
     replay = spark.read.parquet(str(stage)).limit(10)
     land(replay, 0)
@@ -1517,9 +1395,7 @@ def s_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("value", "sum_value", 18, 6),
         )
     )
-    name = _mem_name("avro_ingest")
-    run_to_memory(stream, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(stream, sf_dir, d, "complete")
 
 
 @query(
@@ -1557,8 +1433,6 @@ def s_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges sessions as events arrive, exactly the batch semantics
     (q_session_dynamic and its cummax-derived oracle). Complete-mode
     drain must equal the batch answer."""
-    d = scratch_dir("s_session_dyn")
-    name = _mem_name("session_dyn")
     gap = F.when(
         F.col("event_type").isin("click", "view"), F.lit("30 minutes")
     ).otherwise(F.lit("60 minutes"))
@@ -1573,8 +1447,7 @@ def s_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    run_to_memory(win, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(win, sf_dir, scratch_dir("s_session_dyn"), "complete")
 
 
 @query(
@@ -1595,15 +1468,13 @@ def s_stream_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage_a, stage_b = d / "src_a", d / "src_b"
     stage_events(spark, sf_dir, stage_a, "east", where=mod_slice(2, 0))
     stage_events(spark, sf_dir, stage_b, "west", where=mod_slice(2, 1))
-    name = _mem_name("union")
     merged = (
         read_staged_stream(spark, sf_dir, stage_a)
         .unionByName(read_staged_stream(spark, sf_dir, stage_b))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    run_to_memory(merged, name, d / "cp", output_mode="complete", state_partitions=_evt_state_parts(spark, sf_dir))
-    return spark.table(name)
+    return _to_memory(merged, sf_dir, d, "complete")
 
 
 TTL_MS = 30 * 60 * 1000  # session expires after 30 min of event-time silence
@@ -1806,25 +1677,9 @@ def s_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final session per user closed by timeout — giving this stateful
     op a full value oracle instead of the usual rows-only check."""
     d = scratch_dir("s_state_ttl")
-    stage, out, cp = d / "src", d / "out", d / "cp"
-    stage.mkdir(parents=True, exist_ok=True)
-
-    max_ts = spark.read.parquet(f"{sf_dir}/events.parquet").agg(F.max("ts")).first()[0]
-
-    def stage_sentinel(name: str, hours_ahead: int) -> None:
-        if max_ts is None:  # empty source: nothing to close, no sentinels
-            return
-        stage_far_future_sentinels(
-            spark, sf_dir, stage, name, hours_ahead,
-            keys=[(-1, -1, "click")],
-            max_ts=max_ts,
-        )
-
-    max_real_ms = (
-        normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-        .agg(F.max(F.unix_millis("ts")))
-        .first()[0]
-    )
+    stage = d / "src"
+    stage.mkdir(parents=True, exist_ok=True)  # stream defined before first arrival
+    max_real_ms = t(spark, sf_dir, "events").agg(F.max(F.unix_millis("ts"))).first()[0]
     # strictly post-epoch domain: applyInPandasWithState drops pre-epoch
     # event times against the initial watermark (pipeline.post_epoch)
     sessions = ttl_session_stream(
@@ -1832,28 +1687,12 @@ def s_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         ignore_after_ms=max_real_ms,
     )
 
-    def run_once() -> None:
-        q = (
-            sessions.writeStream.format("parquet")
-            .option("path", str(out))
-            .option("checkpointLocation", str(cp))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
     # state = one open session per active user — sized from the input
     # volume (locks into the checkpoint at the first drain); the pandas
     # state function also runs once per state PARTITION per batch, so the
     # 32-partition default paid 3 drains × 32 Python-side state tasks for
     # a handful of keys at fixture scale
-    with sized_state(spark, _evt_state_parts(spark, sf_dir)):
-        stage_events(spark, sf_dir, stage, "events")
-        run_once()
-        stage_sentinel("sentinel_1", hours_ahead=1)
-        run_once()
-        stage_sentinel("sentinel_2", hours_ahead=2)
-        run_once()
+    _sentinel_drain(spark, sf_dir, sessions, d, keys=[(-1, -1, "click")])
     # no read-back scrubbing needed: sentinel rows were never sessionized
     # (ignored out-of-band inside the stateful function), so every emitted
     # session is real data — including negative-id and NULL users. Explicit
@@ -1861,4 +1700,4 @@ def s_state_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.schema(
         "user_id bigint, lease bigint, n_events bigint,"
         " first_ms bigint, last_ms bigint, closed_by string"
-    ).parquet(str(out))
+    ).parquet(str(d / "out"))

@@ -18,7 +18,14 @@ is spelled once per engine in ``operators/dedup.py``: the SQL generators
 ``SQL_MINHASH_SIG``/``sql_bands``/``sql_est`` and the Column helpers
 ``shingle_set``/``minhash_sig``. Any other copy of its seed hash, row-local
 ``list_min`` signature, band positions, estimate, salted Column md5 or
-nested 3-gram ``zip_with`` fails here.
+nested 3-gram ``zip_with`` fails here. The SimHash bit vote is spelled
+once, by ``dedup.sql_simhash_fps``.
+
+Streams start in one place: ``streaming/pipeline.py`` (``start_stream``/
+``drain``) sets the checkpoint and trigger, holds ``sized_state`` across
+``.start()`` and awaits termination. A ``.start()``,
+``.awaitTermination(`` or ``sized_state(`` call anywhere else in the
+package fails here.
 """
 
 from __future__ import annotations
@@ -56,6 +63,14 @@ MINHASH_SQL = {
     ),
     "salted md5 expr": re.compile(r"md5\s*\(\s*concat\s*\(\s*'", re.I),
 }
+
+
+SIMHASH_VOTE = re.compile(
+    r"SUM\s*\(\s*CASE\s+WHEN\s*\([^)]*&[^)]*\)\s*>\s*0\s+THEN\s+1\s+ELSE\s+-1\s+END\s*\)",
+    re.I,
+)
+
+PIPELINE = "streaming/pipeline.py"
 
 
 def _text(node: ast.AST) -> str:
@@ -255,3 +270,56 @@ def test_scan_sees_the_helper_definitions():
     assert _bare_guards(" ".join(sql_finite("a.b * (1 - c)").split())) == ["a.b * (1 - c)"]
     assert VEC_VALID.search(sql_vec_valid("a.embedding"))
     assert VECTORS.search(" ".join(_SQL_VECTORS.split()))
+
+
+def _simhash_votes(pkg: Path = PKG) -> list[str]:
+    """file:line of every SQL SimHash bit vote outside ``sql_simhash_fps``."""
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        exempt = {"sql_simhash_fps"} if rel == DEDUP else set()
+        for line, s in _strings(path, exempt):
+            found += [f"{rel}:{line}"] * len(SIMHASH_VOTE.findall(s))
+    return found
+
+
+def test_simhash_vote_spelled_once():
+    votes = _simhash_votes()
+    assert not votes, "pasted SimHash vote (interpolate dedup.sql_simhash_fps): " + ", ".join(votes)
+
+
+def test_simhash_scan_sees_the_helper():
+    # unexempted, the scan finds the helper's own vote, so a copy is caught
+    votes = [line for line, s in _strings(PKG / DEDUP, set()) if SIMHASH_VOTE.search(s)]
+    (helper,) = _exempt_lines(ast.parse((PKG / DEDUP).read_text()), {"sql_simhash_fps"})
+    assert len(votes) == 1 and helper[0] <= votes[0] <= helper[1], (votes, helper)
+
+
+def _stream_starts(pkg: Path = PKG, skip: str | None = PIPELINE) -> dict[str, list[str]]:
+    """file:line of every stream start, await and state-sizing call in
+    ``pkg`` outside ``skip``."""
+    rules = {"start()": [], "awaitTermination(": [], "sized_state(": []}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        if rel == skip:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = _call_name(node)
+            if name == "start" and not node.args and not node.keywords:
+                rules["start()"].append(f"{rel}:{node.lineno}")
+            elif name in ("awaitTermination", "sized_state"):
+                rules[f"{name}("].append(f"{rel}:{node.lineno}")
+    return rules
+
+
+def test_streams_start_only_in_the_pipeline():
+    starts = _stream_starts()
+    assert not any(starts.values()), f"stream lifecycle outside {PIPELINE} (call start_stream/drain): " + "; ".join(
+        f"{rule} x{len(v)}: {', '.join(v[:8])}" for rule, v in starts.items() if v
+    )
+
+
+def test_stream_scan_sees_the_pipeline():
+    # the rule matches the helpers' own calls, so a copy elsewhere is caught
+    starts = _stream_starts(PKG / "streaming", skip=None)
+    assert all(v and all(w.startswith("pipeline.py:") for w in v) for v in starts.values()), starts

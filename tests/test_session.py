@@ -1,4 +1,5 @@
-"""The driver-contract wrappers give any session the engine's SQL settings.
+"""The driver-contract wrappers give any session the engine's SQL
+settings, and get_spark sizes the driver heap from the host.
 
 ``__spark_entry__.entry`` and every ``queries()`` wrapper run on a session
 the caller built. Both apply ``session.sql_confs`` to it, so a vanilla
@@ -8,9 +9,13 @@ rule, AQE, Arrow, broadcast threshold, state store and checkpoint manager.
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pytest
+
 import __spark_entry__ as E
 from kinesis_test_spark import registry
-from kinesis_test_spark.session import sql_confs
+from kinesis_test_spark.session import driver_memory, sql_confs
 
 
 def _bare(spark):
@@ -40,3 +45,14 @@ def test_entry_applies_every_sql_conf(spark, monkeypatch):
     monkeypatch.setitem(registry.QUERIES, "q_flagship", lambda s, sf: None)
     E.entry(bare)
     _assert_engine_confs(bare)
+
+
+@pytest.mark.skipif(not Path("/proc/meminfo").exists(), reason="needs Linux /proc/meminfo")
+def test_default_driver_heap_is_below_memtotal(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    meminfo = Path("/proc/meminfo").read_text().splitlines()
+    mem_total = int(next(x for x in meminfo if x.startswith("MemTotal:")).split()[1]) << 10
+    heap = driver_memory()
+    assert heap.endswith("m") and 0 < int(heap[:-1]) << 20 < mem_total, (heap, mem_total)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert driver_memory() == "3g"
