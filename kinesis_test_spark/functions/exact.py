@@ -283,3 +283,11 @@ def sql_split_sum16(expr: str) -> str:
 def sql_davg(expr: str, alias: str, prec: int = 18, scale: int = 2) -> str:
     g = sql_finite(expr, route_exp(prec, scale))
     return f"{sql_exact_sum(expr, prec, scale)} / COUNT({g}) AS {alias}"
+
+
+def sql_ms(x: str) -> str:
+    """Epoch milliseconds of the SQL timestamp ``x``, floored — the mirror
+    of Spark's ``unix_millis``. Only ``time_bucket`` floors: ``epoch_ms``
+    truncates toward zero and DuckDB ``//`` truncates on integers too, so
+    pre-epoch instants would land a millisecond apart."""
+    return f"(epoch_us(time_bucket(INTERVAL '1 millisecond', {x})) // 1000)"

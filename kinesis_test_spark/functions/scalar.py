@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
-    cents_term, finite, sql_cents_mag, sql_cents_term, sql_finite
+    cents_term, finite, sql_cents_mag, sql_cents_term, sql_finite, sql_ms
 )
 from kinesis_test_spark.functions.porthash import ascii_lower, sql_ascii_lower
 from kinesis_test_spark.registry import query
@@ -116,7 +116,7 @@ def q_fn_url(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_fn_date",
-    oracle="""
+    oracle=f"""
 SELECT event_id,
        CAST(year(ts) AS INT) AS yy, CAST(month(ts) AS INT) AS mm,
        CAST(day(ts) AS INT) AS dd, CAST(hour(ts) AS INT) AS hh,
@@ -124,8 +124,8 @@ SELECT event_id,
        CAST(dayofweek(ts) + 1 AS INT) AS dow,
        date_trunc('day', ts) AS day_start,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS formatted,
-       (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) AS ms,
-       make_timestamp((epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) * 1000) AS from_ms,
+       {sql_ms("ts")} AS ms,
+       make_timestamp({sql_ms("ts")} * 1000) AS from_ms,
        datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS days_since,
        strftime(CAST(ts AS DATE) + 7, '%Y-%m-%d') AS week_later
 FROM events

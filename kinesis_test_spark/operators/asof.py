@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kinesis_test_spark.functions.exact import sql_ms
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -192,12 +193,12 @@ c AS (SELECT event_id AS c_id, user_id, ts AS c_ts FROM events
       WHERE event_type = 'click'),
 scored AS (
   SELECT p.p_id, p.user_id, c.c_id,
-         abs((epoch_us(time_bucket(INTERVAL '1 millisecond', p.p_ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', c.c_ts)) // 1000)) AS dt_ms,
+         abs({sql_ms("p.p_ts")} - {sql_ms("c.c_ts")}) AS dt_ms,
          row_number() OVER (
            PARTITION BY p.p_id
-           ORDER BY abs((epoch_us(time_bucket(INTERVAL '1 millisecond', p.p_ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', c.c_ts)) // 1000)), c.c_ts, c.c_id) AS rn
+           ORDER BY abs({sql_ms("p.p_ts")} - {sql_ms("c.c_ts")}), c.c_ts, c.c_id) AS rn
   FROM p JOIN c ON p.user_id = c.user_id
-  WHERE abs((epoch_us(time_bucket(INTERVAL '1 millisecond', p.p_ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', c.c_ts)) // 1000)) <= {NEAREST_BAND_MS})
+  WHERE abs({sql_ms("p.p_ts")} - {sql_ms("c.c_ts")}) <= {NEAREST_BAND_MS})
 SELECT p_id, user_id, c_id, dt_ms FROM scored WHERE rn = 1
 """,
 )
@@ -293,7 +294,7 @@ _DAY_MS = 86400000
 
 @query(
     "q_join_interval",
-    oracle="""
+    oracle=f"""
 WITH acts AS (
   SELECT user_id, strftime(ts, '%Y-%m-%d') AS day,
          MIN(ts) AS a_start, MAX(ts) AS a_end
@@ -306,10 +307,8 @@ spans AS (
   FROM events WHERE ts IS NOT NULL AND event_type = 'purchase'
   GROUP BY 1, 2)
 SELECT a.user_id, a.day, s.week_start,
-       CAST((epoch_us(time_bucket(INTERVAL '1 millisecond',
-              LEAST(a.a_end, s.b_end))) // 1000)
-          - (epoch_us(time_bucket(INTERVAL '1 millisecond',
-              GREATEST(a.a_start, s.b_start))) // 1000)
+       CAST({sql_ms("LEAST(a.a_end, s.b_end)")}
+          - {sql_ms("GREATEST(a.a_start, s.b_start)")}
          AS BIGINT) AS overlap_ms
 FROM acts a
 JOIN spans s

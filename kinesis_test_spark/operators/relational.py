@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from kinesis_test_spark.functions.exact import (
     cents_sum, davg, dsum, exact_sum, finite, route_exp, sql_cents_term,
-    sql_davg, sql_dsum, sql_exact_sum, sql_finite
+    sql_davg, sql_dsum, sql_exact_sum, sql_finite, sql_ms
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, views
@@ -1089,13 +1089,13 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_retention",
-    oracle="""
+    oracle=f"""
 WITH first_seen AS (
   SELECT user_id, date_trunc('week', MIN(ts)) AS cohort FROM events GROUP BY user_id),
 activity AS (
   SELECT DISTINCT e.user_id, date_trunc('week', e.ts) AS wk FROM events e)
 SELECT strftime(f.cohort, '%Y-%m-%d') AS cohort_week,
-       CAST(((epoch_us(time_bucket(INTERVAL '1 millisecond', a.wk)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', f.cohort)) // 1000)) // 604800000 AS INT) AS week_offset,
+       CAST(({sql_ms("a.wk")} - {sql_ms("f.cohort")}) // 604800000 AS INT) AS week_offset,
        COUNT(*) AS n_users
 FROM activity a JOIN first_seen f ON f.user_id = a.user_id
 GROUP BY 1, 2
@@ -1252,14 +1252,19 @@ def q_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# placement-independent NULLS FIRST encoding (see q_agg_argmax)
+_PREV_TS = (
+    "lag(ts) OVER (PARTITION BY user_id"
+    " ORDER BY (ts IS NOT NULL) ASC, COALESCE(ts, TIMESTAMP '1970-01-01') ASC,"
+    " (event_id IS NOT NULL) ASC, COALESCE(event_id, 0) ASC)"
+)
+
+
 @query(
     "q_gap_histogram",
-    oracle="""
+    oracle=f"""
 WITH gaps AS (
-  -- placement-independent NULLS FIRST encoding (see q_agg_argmax)
-  SELECT ((epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', lag(ts) OVER (PARTITION BY user_id
-                                                ORDER BY (ts IS NOT NULL) ASC, COALESCE(ts, TIMESTAMP '1970-01-01') ASC,
-                                                         (event_id IS NOT NULL) ASC, COALESCE(event_id, 0) ASC))) // 1000)) // 1000 AS gap_s
+  SELECT ({sql_ms("ts")} - {sql_ms(_PREV_TS)}) // 1000 AS gap_s
   FROM events)
 SELECT CASE WHEN gap_s < 60 THEN '<1m'
             WHEN gap_s < 3600 THEN '1m-1h'
@@ -1532,7 +1537,7 @@ def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_attribution",
-    oracle="""
+    oracle=f"""
 WITH tagged AS (
   SELECT user_id, ts, event_id, event_type, value,
          CASE WHEN event_type = 'click' THEN event_id END AS click_id,
@@ -1549,7 +1554,7 @@ attributed AS (
                         (event_id IS NOT NULL) ASC, COALESCE(event_id, 0) ASC
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
 SELECT event_id, user_id, value, attributed_click_id,
-       CAST((epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', attr_ts)) // 1000) AS BIGINT) AS lag_ms
+       CAST({sql_ms("ts")} - {sql_ms("attr_ts")} AS BIGINT) AS lag_ms
 FROM attributed WHERE event_type = 'purchase'
 ORDER BY event_id
 """,
@@ -1615,8 +1620,8 @@ WITH first_seen AS (
   FROM events GROUP BY user_id),
 revenue AS (
   SELECT f.cohort, e.user_id,
-         CAST(floor(((epoch_us(time_bucket(INTERVAL '1 millisecond', time_bucket(INTERVAL '1 week', e.ts))) // 1000)
-                     - (epoch_us(time_bucket(INTERVAL '1 millisecond', f.cohort)) // 1000)) / 604800000.0) AS BIGINT)
+         CAST(floor(({sql_ms("time_bucket(INTERVAL '1 week', e.ts)")}
+                     - {sql_ms("f.cohort")}) / 604800000.0) AS BIGINT)
            AS week_offset,
          {sql_cents_term("e.value")} AS v
   FROM events e JOIN first_seen f ON f.user_id = e.user_id

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_test_spark.functions.exact import sql_ms
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -78,7 +79,7 @@ SELECT a.user_id, COUNT(*) AS n_pairs
 FROM events a JOIN events b
   ON a.user_id = b.user_id
  AND b.ts > a.ts
- AND (epoch_us(time_bucket(INTERVAL '1 millisecond', b.ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', a.ts)) // 1000) <= {BAND_SEC * 1000}
+ AND {sql_ms("b.ts")} - {sql_ms("a.ts")} <= {BAND_SEC * 1000}
 GROUP BY a.user_id
 """,
 )

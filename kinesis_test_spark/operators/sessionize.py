@@ -12,9 +12,10 @@ O(1) streaming through the sorted partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kinesis_test_spark.functions.exact import sql_ms
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -27,7 +28,7 @@ SESSIONIZE_ORACLE = f"""
 WITH flagged AS (
   SELECT user_id, event_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', lag(ts) OVER w)) // 1000) > {GAP_MS}
+                OR {sql_ms("ts")} - {sql_ms("lag(ts) OVER w")} > {GAP_MS}
               THEN 1 ELSE 0 END AS is_start
   FROM events WHERE ts IS NOT NULL
   WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
@@ -71,13 +72,15 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_session_native",
-    oracle="""
+# session_window semantics, shared by the batch keys below and the stream
+# keys s_session / s_session_dynamic (one API, both execution models):
+# Spark merges events closer than the gap, and a session ends at its last
+# event's end (ts + gap).
+SESSION_NATIVE_ORACLE = f"""
 WITH flagged AS (
   SELECT user_id, ts, event_id,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', lag(ts) OVER w)) // 1000) > 1800000
+                OR {sql_ms("ts")} - {sql_ms("lag(ts) OVER w")} > {GAP_MS}
               THEN 1 ELSE 0 END AS is_start
   FROM events WHERE ts IS NOT NULL
   WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
@@ -91,18 +94,16 @@ SELECT user_id,
        MAX(ts) + INTERVAL '30 minutes' AS session_end,
        COUNT(*) AS n_events
 FROM numbered GROUP BY user_id, seq
-""",
-)
-def q_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`session_window` in BATCH mode — the same expression that powers the
-    streaming s_session query, unchanged: one API, both execution models
-    (the unification the reference's hand-rolled loop can never offer).
-    Same oracle as s_session; lag+cumsum q_sessionize gives a third,
-    analytic-SQL formulation of identical semantics."""
-    ev = t(spark, sf_dir, "events")
+"""
+
+
+def session_counts(ev: DataFrame, gap: str | Column) -> DataFrame:
+    """(user_id, session_start, session_end, n_events) per session_window
+    of ``ev`` (a batch or streaming events relation); ``gap`` is a
+    duration string or a per-event gap expression."""
     return (
-        ev.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(F.count("*").alias("n_events"))
+        ev.groupBy(F.session_window("ts", gap), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",
             F.col("session_window.start").alias("session_start"),
@@ -110,6 +111,23 @@ def q_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
+
+
+def dynamic_gap() -> Column:
+    """The per-event session gap: engaged clicks/views 30 min, others 60."""
+    return F.when(F.col("event_type").isin("click", "view"), F.lit("30 minutes")).otherwise(
+        F.lit("60 minutes")
+    )
+
+
+@query("q_session_native", oracle=SESSION_NATIVE_ORACLE)
+def q_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`session_window` in BATCH mode — the same expression that powers the
+    streaming s_session query, unchanged: one API, both execution models
+    (the unification the reference's hand-rolled loop can never offer).
+    Same oracle as s_session; lag+cumsum q_sessionize gives a third,
+    analytic-SQL formulation of identical semantics."""
+    return session_counts(t(spark, sf_dir, "events"), "30 minutes")
 
 
 FUNNEL_STEP_MS = 24 * 3600 * 1000
@@ -122,11 +140,11 @@ WITH v AS (SELECT user_id, MIN(ts) AS t_view FROM events
            WHERE event_type = 'view' GROUP BY user_id),
 c AS (SELECT e.user_id, MIN(e.ts) AS t_click
       FROM events e JOIN v ON v.user_id = e.user_id AND e.ts > v.t_view
-       AND (epoch_us(time_bucket(INTERVAL '1 millisecond', e.ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', v.t_view)) // 1000) <= {FUNNEL_STEP_MS}
+       AND {sql_ms("e.ts")} - {sql_ms("v.t_view")} <= {FUNNEL_STEP_MS}
       WHERE e.event_type = 'click' GROUP BY e.user_id),
 p AS (SELECT e.user_id, MIN(e.ts) AS t_purchase
       FROM events e JOIN c ON c.user_id = e.user_id AND e.ts > c.t_click
-       AND (epoch_us(time_bucket(INTERVAL '1 millisecond', e.ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', c.t_click)) // 1000) <= {FUNNEL_STEP_MS}
+       AND {sql_ms("e.ts")} - {sql_ms("c.t_click")} <= {FUNNEL_STEP_MS}
       WHERE e.event_type = 'purchase' GROUP BY e.user_id)
 SELECT (SELECT COUNT(*) FROM v) AS n_view,
        (SELECT COUNT(*) FROM c) AS n_view_click,
@@ -172,9 +190,7 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q_session_dynamic",
-    oracle="""
+SESSION_DYNAMIC_ORACLE = """
 WITH g AS (
   SELECT user_id, ts, event_id,
          CASE WHEN event_type IN ('click', 'view') THEN 1800 ELSE 3600 END
@@ -198,8 +214,10 @@ SELECT user_id,
        MAX(ts + to_seconds(gap_s)) AS session_end,
        COUNT(*) AS n_events
 FROM numbered GROUP BY user_id, seq
-""",
-)
+"""
+
+
+@query("q_session_dynamic", oracle=SESSION_DYNAMIC_ORACLE)
 def q_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-gap session windows: the merge gap is an EXPRESSION per
     event (engaged interactions — click/view — time out in 30 min, heavy
@@ -213,20 +231,7 @@ def q_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag-based logic misses). Session end = max event end, matching Spark's merge
     semantics. One shuffle on user_id; per-key window state is a single
     running max."""
-    ev = t(spark, sf_dir, "events")
-    gap = F.when(
-        F.col("event_type").isin("click", "view"), F.lit("30 minutes")
-    ).otherwise(F.lit("60 minutes"))
-    return (
-        ev.groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    return session_counts(t(spark, sf_dir, "events"), dynamic_gap())
 
 
 CONVERSION_WINDOW_H = 72
@@ -250,7 +255,7 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_signups,
        -- raw IEEE quotient of exact counts (no ROUND; round-10 finding)
        CAST(COUNT(p.user_id) AS DOUBLE) / NULLIF(COUNT(*), 0) AS conversion,
        CAST(SUM(CASE WHEN p.user_id IS NOT NULL THEN
-             (epoch_us(time_bucket(INTERVAL '1 millisecond', p.purchase_ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', p.signup_ts)) // 1000) END) AS BIGINT)
+             {sql_ms("p.purchase_ts")} - {sql_ms("p.signup_ts")} END) AS BIGINT)
          AS total_lag_ms
 FROM signups s LEFT JOIN first_purchase p ON p.user_id = s.user_id
 """,

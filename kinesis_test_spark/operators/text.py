@@ -711,12 +711,10 @@ CONTAM_MIN_SHARED = 3
 
 
 def _contamination_oracle() -> str:
-    from kinesis_test_spark.operators.dedup import NGRAM_DF_CAP, SQL_SHINGLES
+    from kinesis_test_spark.operators.dedup import SQL_KEPT
 
     return f"""
-WITH {SQL_SHINGLES},
-hot AS (SELECT s FROM shingles GROUP BY s HAVING COUNT(*) > {NGRAM_DF_CAP}),
-kept AS (SELECT doc_id, s FROM shingles WHERE s NOT IN (SELECT s FROM hot)),
+WITH {SQL_KEPT},
 bench AS (SELECT doc_id AS bench_doc_id, s FROM kept WHERE doc_id % {BENCH_MOD} = 0),
 corpus AS (SELECT doc_id, s FROM kept WHERE doc_id % {BENCH_MOD} <> 0)
 SELECT c.doc_id, b.bench_doc_id, COUNT(*) AS n_shared
@@ -846,43 +844,21 @@ def q_text_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pipeline_clean_oracle() -> str:
-    from kinesis_test_spark.operators.dedup import (
-        JACCARD_THRESHOLD,
-        NGRAM_DF_CAP,
-        SQL_SHINGLES,
-    )
+    from kinesis_test_spark.operators.dedup import SQL_JACCARD, sql_components
 
     return f"""
-WITH RECURSIVE {SQL_SHINGLES},
-hot AS (SELECT s FROM shingles GROUP BY s HAVING COUNT(*) > {NGRAM_DF_CAP}),
-kept_sh AS (SELECT doc_id, s FROM shingles WHERE s NOT IN (SELECT s FROM hot)),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM kept_sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-  FROM kept_sh a JOIN kept_sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id),
-pairs AS (
-  SELECT doc_a, doc_b FROM inter
-  JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-  WHERE n_inter / (sa.n + sb.n - n_inter) >= {JACCARD_THRESHOLD}),
-edges AS (
-  SELECT doc_a AS u, doc_b AS v FROM pairs
-  UNION ALL SELECT doc_b, doc_a FROM pairs),
-reach(u, v) AS (
-  SELECT doc_id, doc_id FROM documents
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-clusters AS (SELECT u AS doc_id, MIN(v) AS cluster_id FROM reach GROUP BY u),
+WITH RECURSIVE {SQL_JACCARD},
+{sql_components()},
 contam AS (
   SELECT DISTINCT c.doc_id
-  FROM kept_sh c JOIN kept_sh b ON c.s = b.s
-  WHERE b.doc_id % {50} = 0 AND c.doc_id % {50} <> 0
-  GROUP BY c.doc_id, b.doc_id HAVING COUNT(*) >= {3})
+  FROM kept c JOIN kept b ON c.s = b.s
+  WHERE b.doc_id % {BENCH_MOD} = 0 AND c.doc_id % {BENCH_MOD} <> 0
+  GROUP BY c.doc_id, b.doc_id HAVING COUNT(*) >= {CONTAM_MIN_SHARED})
 SELECT d.doc_id, d.lang, CAST(length(d.text) AS INT) AS n_chars
 FROM documents d
 JOIN clusters cl ON cl.doc_id = d.doc_id AND cl.cluster_id = d.doc_id
 WHERE len(string_split(d.text, ' ')) >= 20
-  AND d.doc_id % {50} <> 0
+  AND d.doc_id % {BENCH_MOD} <> 0
   AND d.doc_id NOT IN (SELECT doc_id FROM contam)
 """
 
@@ -897,10 +873,6 @@ def q_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every stage is a join against a (small or bounded) derived table, so
     the corpus is streamed through, never collected."""
     from kinesis_test_spark.operators.dedup import q_dedup_clusters
-    from kinesis_test_spark.operators.text import (  # self-import for clarity
-        BENCH_MOD,
-        CONTAM_MIN_SHARED,
-    )
 
     d = t(spark, sf_dir, "documents")
     clusters = q_dedup_clusters(spark, sf_dir)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, StringType
 
-from kinesis_test_spark.functions.exact import sql_finite
+from kinesis_test_spark.functions.exact import sql_finite, sql_ms
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t, views
 
@@ -194,11 +194,11 @@ def q_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_udtf_table_arg",
-    oracle="""
+    oracle=f"""
 WITH flagged AS (
   SELECT user_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', lag(ts) OVER w)) // 1000) > 1800000
+                OR {sql_ms("ts")} - {sql_ms("lag(ts) OVER w")} > 1800000
               THEN 1 ELSE 0 END AS is_start
   FROM events
   -- placement-independent NULLS FIRST encoding (DuckDB 1.0 misplaces NULL

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kinesis_test_spark.functions.exact import exact_sum, finite, sql_exact_sum, sql_finite
+from kinesis_test_spark.functions.exact import exact_sum, finite, sql_exact_sum, sql_finite, sql_ms
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
 
@@ -51,10 +51,10 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_window_lag",
-    oracle="""
+    oracle=f"""
 SELECT event_id, user_id, ts,
        lag(event_id) OVER w AS prev_event_id,
-       (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', lag(ts) OVER w)) // 1000) AS gap_ms,
+       {sql_ms("ts")} - {sql_ms("lag(ts) OVER w")} AS gap_ms,
        lead(event_id) OVER w AS next_event_id
 FROM events
 -- placement-independent ASC NULLS FIRST (boolean prefix + NULL-free
@@ -176,17 +176,18 @@ def q_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_TRAILING_5M = (
+    f"(PARTITION BY user_id ORDER BY {sql_ms('ts')}"
+    " RANGE BETWEEN 300000 PRECEDING AND CURRENT ROW)"
+)
+
+
 @query(
     "q_window_range_frame",
     oracle=f"""
 SELECT event_id, user_id, ts,
-       {sql_exact_sum("value", 18, 6, over=(
-            "(PARTITION BY user_id ORDER BY (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000)"
-            " RANGE BETWEEN 300000 PRECEDING AND CURRENT ROW)"))}
-         AS trailing_5m_value,
-       COUNT(*) OVER
-            (PARTITION BY user_id ORDER BY (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000)
-             RANGE BETWEEN 300000 PRECEDING AND CURRENT ROW) AS trailing_5m_events
+       {sql_exact_sum("value", 18, 6, over=_TRAILING_5M)} AS trailing_5m_value,
+       COUNT(*) OVER {_TRAILING_5M} AS trailing_5m_events
 FROM events
 """,
 )
@@ -491,9 +492,9 @@ def q_window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH seg AS (
   SELECT user_id, value,
-         (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) AS t0,
+         {sql_ms("ts")} AS t0,
          -- placement-independent NULLS FIRST encoding (see q_window_lag)
-         lead((epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000)) OVER (PARTITION BY user_id
+         lead({sql_ms("ts")}) OVER (PARTITION BY user_id
                                   ORDER BY (ts IS NOT NULL) ASC, COALESCE(ts, TIMESTAMP '1970-01-01') ASC,
                                            (event_id IS NOT NULL) ASC, COALESCE(event_id, 0) ASC) AS t1
   FROM events),

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 from kinesis_test_spark.functions.exact import dsum, sql_dsum
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources import t
+from kinesis_test_spark.streaming.pipeline import SQL_HOURLY_COUNTS
 
 _ORACLE = f"""
 SELECT event_type, COUNT(*) AS n,
@@ -108,15 +109,7 @@ def q_source_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.format("clickstream_synth").load()
 
 
-@query(
-    "q_maintenance_compact",
-    oracle="""
-SELECT CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
-       CAST(day(ts) AS INT) AS d, CAST(hour(ts) AS INT) AS h,
-       COUNT(*) AS n
-FROM events GROUP BY 1, 2, 3, 4
-""",
-)
+@query("q_maintenance_compact", oracle=SQL_HOURLY_COUNTS)
 def q_maintenance_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The maintenance path as a first-class operator: build the y/m/d/h
     partitioned sink, compact it (one file per partition), read the

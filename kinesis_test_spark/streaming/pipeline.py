@@ -317,6 +317,16 @@ def run_to_memory(
     return df.sparkSession.table(name)
 
 
+# The per-hour row counts of partitioned_json_sink's y/m/d/h layout: the
+# oracle of every key that reads the sink (or its compacted copy) back.
+SQL_HOURLY_COUNTS = """
+SELECT CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
+       CAST(day(ts) AS INT) AS d, CAST(hour(ts) AS INT) AS h,
+       COUNT(*) AS n
+FROM events GROUP BY 1, 2, 3, 4
+"""
+
+
 def partitioned_json_sink(
     df: DataFrame, out_dir: Path, checkpoint: Path, state_partitions: int | None = None
 ) -> StreamingQuery:

@@ -24,12 +24,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kinesis_test_spark.functions.exact import (
-    cents_sum, dsum, sql_cents_term, sql_dsum, sql_finite
+    cents_sum, dsum, sql_cents_term, sql_dsum, sql_finite, sql_ms
+)
+from kinesis_test_spark.operators.sessionize import (
+    SESSION_DYNAMIC_ORACLE,
+    SESSION_NATIVE_ORACLE,
+    dynamic_gap,
+    session_counts,
 )
 from kinesis_test_spark.registry import query
 from kinesis_test_spark.sources.tables import t
 from kinesis_test_spark.streaming.pipeline import (
     POST_EPOCH_SQL,
+    SQL_HOURLY_COUNTS,
     drain,
     mod_slice,
     partitioned_json_sink,
@@ -226,44 +233,13 @@ def s_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _to_memory(win, sf_dir, scratch_dir("s_sliding"), "complete")
 
 
-@query(
-    "s_session",
-    oracle="""
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', lag(ts) OVER w)) // 1000) > 1800000
-              THEN 1 ELSE 0 END AS is_start
-  FROM events WHERE ts IS NOT NULL
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-), numbered AS (
-  SELECT user_id, ts,
-         CAST(SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS seq
-  FROM flagged)
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts) + INTERVAL '30 minutes' AS session_end,
-       COUNT(*) AS n_events
-FROM numbered GROUP BY user_id, seq
-""",
-)
+@query("s_session", oracle=SESSION_NATIVE_ORACLE)
 def s_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows, 30m gap (the reference data's
     tealium_session_id concept, record.json:3, derived from event time).
     Spark merges events with gap < 30m; window end = last event + gap —
     the oracle reproduces exactly that."""
-    win = (
-        read_events_stream(spark, sf_dir)
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    win = session_counts(read_events_stream(spark, sf_dir), "30 minutes")
     return _to_memory(win, sf_dir, scratch_dir("s_session"), "complete")
 
 
@@ -300,15 +276,7 @@ def s_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _to_memory(deduped, sf_dir, d, "append")
 
 
-@query(
-    "s_sink_partitioned",
-    oracle="""
-SELECT CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
-       CAST(day(ts) AS INT) AS d, CAST(hour(ts) AS INT) AS h,
-       COUNT(*) AS n
-FROM events GROUP BY 1, 2, 3, 4
-""",
-)
+@query("s_sink_partitioned", oracle=SQL_HOURLY_COUNTS)
 def s_sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's S3 sink end-to-end (consumer.py:221-249): stream →
     Spark's file sink → JSON files under y=/m=/d=/h= partition dirs, then
@@ -1398,34 +1366,7 @@ def s_avro_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _to_memory(stream, sf_dir, d, "complete")
 
 
-@query(
-    "s_session_dynamic",
-    oracle="""
-WITH g AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN event_type IN ('click', 'view') THEN 1800 ELSE 3600 END
-           AS gap_s
-  FROM events WHERE ts IS NOT NULL),
-flagged AS (
-  SELECT user_id, ts, event_id, gap_s,
-         CASE WHEN MAX(ts + to_seconds(gap_s)) OVER prior IS NULL
-                OR ts > MAX(ts + to_seconds(gap_s)) OVER prior
-              THEN 1 ELSE 0 END AS is_start
-  FROM g
-  WINDOW prior AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)),
-numbered AS (
-  SELECT user_id, ts, gap_s,
-         CAST(SUM(is_start) OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST
-                                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS seq
-  FROM flagged)
-SELECT user_id,
-       MIN(ts) AS session_start,
-       MAX(ts + to_seconds(gap_s)) AS session_end,
-       COUNT(*) AS n_events
-FROM numbered GROUP BY user_id, seq
-""",
-)
+@query("s_session_dynamic", oracle=SESSION_DYNAMIC_ORACLE)
 def s_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dynamic-gap session windows ON A STREAM: the per-event gap
     expression (engaged clicks/views 30 min, heavy events 60) drives
@@ -1433,20 +1374,7 @@ def s_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges sessions as events arrive, exactly the batch semantics
     (q_session_dynamic and its cummax-derived oracle). Complete-mode
     drain must equal the batch answer."""
-    gap = F.when(
-        F.col("event_type").isin("click", "view"), F.lit("30 minutes")
-    ).otherwise(F.lit("60 minutes"))
-    win = (
-        read_events_stream(spark, sf_dir)
-        .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
+    win = session_counts(read_events_stream(spark, sf_dir), dynamic_gap())
     return _to_memory(win, sf_dir, scratch_dir("s_session_dyn"), "complete")
 
 
@@ -1621,7 +1549,7 @@ def ttl_session_stream(stream: DataFrame, ignore_after_ms: int | None = None) ->
 WITH flagged AS (
   SELECT user_id, ts, event_id,
          CASE WHEN lag(ts) OVER w IS NULL
-                OR (epoch_us(time_bucket(INTERVAL '1 millisecond', ts)) // 1000) - (epoch_us(time_bucket(INTERVAL '1 millisecond', lag(ts) OVER w)) // 1000) > {TTL_MS}
+                OR {sql_ms("ts")} - {sql_ms("lag(ts) OVER w")} > {TTL_MS}
               THEN 1 ELSE 0 END AS is_start
   FROM events WHERE {POST_EPOCH_SQL.format(col='ts')}
   WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
@@ -1633,8 +1561,8 @@ WITH flagged AS (
 sess AS (
   SELECT user_id, seq,
          CAST(COUNT(*) AS BIGINT) AS n_events,
-         CAST((epoch_us(time_bucket(INTERVAL '1 millisecond', MIN(ts))) // 1000) AS BIGINT) AS first_ms,
-         CAST((epoch_us(time_bucket(INTERVAL '1 millisecond', MAX(ts))) // 1000) AS BIGINT) AS last_ms
+         CAST({sql_ms("MIN(ts)")} AS BIGINT) AS first_ms,
+         CAST({sql_ms("MAX(ts)")} AS BIGINT) AS last_ms
   FROM numbered GROUP BY user_id, seq)
 SELECT user_id, seq AS lease, n_events, first_ms, last_ms,
        CASE WHEN seq = MAX(seq) OVER (PARTITION BY user_id)

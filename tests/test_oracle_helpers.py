@@ -21,6 +21,14 @@ is spelled once per engine in ``operators/dedup.py``: the SQL generators
 nested 3-gram ``zip_with`` fails here. The SimHash bit vote is spelled
 once, by ``dedup.sql_simhash_fps``.
 
+The exact-Jaccard rule is spelled once per engine in ``operators/dedup.py``
+too: the oracle CTEs ``_SQL_CAP`` (stop-shingle cap, behind ``SQL_KEPT``),
+``_SQL_OVERLAP`` (inverted-index overlap count and threshold, behind
+``SQL_JACCARD``) and ``sql_components`` (the ``reach(u, v)`` connected
+components). A pasted cap CTE, inverted-index self-join, Jaccard
+threshold or ``reach(u, v)`` recursion elsewhere fails here, and so does
+the oracle millisecond idiom outside ``exact.sql_ms``.
+
 Streams start in one place: ``streaming/pipeline.py`` (``start_stream``/
 ``drain``) sets the checkpoint and trigger, holds ``sized_state`` across
 ``.start()`` and awaits termination. A ``.start()``,
@@ -69,6 +77,19 @@ SIMHASH_VOTE = re.compile(
     r"SUM\s*\(\s*CASE\s+WHEN\s*\([^)]*&[^)]*\)\s*>\s*0\s+THEN\s+1\s+ELSE\s+-1\s+END\s*\)",
     re.I,
 )
+
+JACCARD_HELPERS = {"_SQL_CAP", "_SQL_OVERLAP", "sql_components"}
+JACCARD_SQL = {
+    "cap CTE": re.compile(r"\bhot\s+AS\s*\(\s*SELECT\s+s\s+FROM\s+shingles\b", re.I),
+    "inverted-index self-join": re.compile(
+        r"\b(\w+)\s+(\w+)\s+JOIN\s+\1\s+(\w+)\s+ON\s+\2\.s\s*=\s*\3\.s\s+AND\s+"
+        r"\2\.doc_id\s*(<>|!=|<)\s*\3\.doc_id",
+        re.I,
+    ),
+    "jaccard threshold": re.compile(r"(\bjaccard|n_inter\s*/\s*\([^)]*\))\s*>=", re.I),
+    "reach(u, v)": re.compile(r"\breach\s*\(\s*u\s*,\s*v\s*\)", re.I),
+}
+MS = re.compile(r"epoch_us\s*\(\s*time_bucket\s*\(\s*INTERVAL\s*'1 millisecond'", re.I)
 
 PIPELINE = "streaming/pipeline.py"
 
@@ -272,19 +293,20 @@ def test_scan_sees_the_helper_definitions():
     assert VECTORS.search(" ".join(_SQL_VECTORS.split()))
 
 
-def _simhash_votes(pkg: Path = PKG) -> list[str]:
-    """file:line of every SQL SimHash bit vote outside ``sql_simhash_fps``."""
-    found = []
+def _sql_copies(rules: dict, owner: str, helpers: set[str], pkg: Path = PKG) -> dict[str, list[str]]:
+    """file:line of every match of ``rules`` in ``pkg``'s string literals
+    outside the ``helpers`` definitions of the ``owner`` module."""
+    found = {name: [] for name in rules}
     for path in sorted(pkg.rglob("*.py")):
         rel = path.relative_to(pkg).as_posix()
-        exempt = {"sql_simhash_fps"} if rel == DEDUP else set()
-        for line, s in _strings(path, exempt):
-            found += [f"{rel}:{line}"] * len(SIMHASH_VOTE.findall(s))
+        for line, s in _strings(path, helpers if rel == owner else set()):
+            for name, pat in rules.items():
+                found[name] += [f"{rel}:{line}"] * len(pat.findall(s))
     return found
 
 
 def test_simhash_vote_spelled_once():
-    votes = _simhash_votes()
+    votes = _sql_copies({"vote": SIMHASH_VOTE}, DEDUP, {"sql_simhash_fps"})["vote"]
     assert not votes, "pasted SimHash vote (interpolate dedup.sql_simhash_fps): " + ", ".join(votes)
 
 
@@ -323,3 +345,38 @@ def test_stream_scan_sees_the_pipeline():
     # the rule matches the helpers' own calls, so a copy elsewhere is caught
     starts = _stream_starts(PKG / "streaming", skip=None)
     assert all(v and all(w.startswith("pipeline.py:") for w in v) for v in starts.values()), starts
+
+
+def test_jaccard_rule_spelled_once():
+    copies = _sql_copies(JACCARD_SQL, DEDUP, JACCARD_HELPERS)
+    assert not any(copies.values()), "pasted exact-Jaccard rule (interpolate the dedup helper): " + "; ".join(
+        f"{rule} x{len(v)}: {', '.join(v[:8])}" for rule, v in copies.items() if v
+    )
+
+
+def test_jaccard_scan_sees_the_helpers():
+    # the patterns match the helpers' own output, and unexempted the scan
+    # finds each rule inside its helper only, so a copy is caught
+    from kinesis_test_spark.operators.dedup import SQL_JACCARD, sql_components
+
+    sql = " ".join(f"{SQL_JACCARD}, {sql_components()}".split())
+    for name, pat in JACCARD_SQL.items():
+        assert pat.search(sql), name
+    spans = _exempt_lines(ast.parse((PKG / DEDUP).read_text()), JACCARD_HELPERS)
+    for name, where in _sql_copies(JACCARD_SQL, DEDUP, set()).items():
+        lines = [int(w.split(":")[1]) for w in where if w.startswith(DEDUP + ":")]
+        assert lines and all(any(a <= n <= b for a, b in spans) for n in lines), (name, where)
+
+
+def test_ms_rule_spelled_once():
+    copies = _sql_copies({"ms": MS}, EXACT, {"sql_ms"})["ms"]
+    assert not copies, "pasted millisecond idiom (interpolate exact.sql_ms): " + ", ".join(copies)
+
+
+def test_ms_scan_sees_the_helper():
+    from kinesis_test_spark.functions.exact import sql_ms
+
+    assert MS.search(sql_ms("ts"))
+    (found,) = [w for w in _sql_copies({"ms": MS}, EXACT, set())["ms"] if w.startswith(EXACT)]
+    (helper,) = _exempt_lines(ast.parse((PKG / EXACT).read_text()), {"sql_ms"})
+    assert helper[0] <= int(found.split(":")[1]) <= helper[1], (found, helper)

@@ -69,7 +69,7 @@ def test_ngram_df_cap_bounds_hot_shingle(spark):
     inverted-index self-join: with the df cap the hot posting list is
     dropped before pairing, and genuine near-dup pairs (all shingles below
     the cap) keep their exact Jaccard."""
-    from kinesis_test_spark.operators.dedup import _jaccard_pairs
+    from kinesis_test_spark.operators.dedup import _apply_df_cap, _overlaps
 
     rows = []
     for i in range(60):
@@ -79,10 +79,10 @@ def test_ngram_df_cap_bounds_hot_shingle(spark):
     rows += [(100, "dup a x"), (100, "dup b x"), (101, "dup a x"), (101, "dup b x")]
     sh = local_rows(spark, rows, "doc_id long, s string")
 
-    uncapped = _jaccard_pairs(sh, df_cap=1_000_000)
+    uncapped = _overlaps(_apply_df_cap(sh, df_cap=1_000_000))
     assert uncapped.count() == 60 * 59 // 2 + 1  # hot shingle pairs everything
 
-    capped = _jaccard_pairs(sh, df_cap=10).collect()
+    capped = _overlaps(_apply_df_cap(sh, df_cap=10)).collect()
     assert len(capped) == 1  # hot posting list gone; only the true pair remains
     (pair,) = capped
     assert (pair.doc_a, pair.doc_b) == (100, 101)
